@@ -245,18 +245,15 @@ def cmd_tail(args) -> dict:
 
     from pyspark.sql import functions as F
 
-    from dibbs_ecr_refiner_spark.lake.table import LakeTable, _stats_keep, _ts_us
+    from dibbs_ecr_refiner_spark.lake import meta
+    from dibbs_ecr_refiner_spark.lake.table import LakeTable, _ts_us
 
     spark = _spark(args)
     table = LakeTable(spark, args.table, num_buckets=args.buckets)
     since = dt.datetime.fromisoformat(args.since)
     snap = table.current_snapshot()
     total = len(snap["files"]) if snap else 0
-    kept = (
-        sum(1 for f in snap["files"] if _stats_keep(f, "ts", lo=_ts_us(since)))
-        if snap
-        else 0
-    )
+    kept = len(meta.prune(snap["files"], snap["num_buckets"], ts_lo=_ts_us(since))) if snap else 0
     df = table.read_since(since)
     agg = df.agg(
         F.count(F.lit(1)).alias("rows"),

@@ -137,15 +137,20 @@ class ReplayEngine:
     def __init__(self, spark: SparkSession, table: LakeTable, plan: RefinePlan):
         self.spark = spark
         self.table = table
-        self.plan = plan
+        self._plan = plan
         # The compiled refinement and the config display map are pure
         # Column expression trees (DataFrame-independent) — build them once
         # per engine, not once per batch: per-batch reconstruction was
         # ~0.2 s of py4j driver chatter (profiled, OPTIMIZATION_r06.md).
+        # ``plan`` is read-only so they can never drift from it.
         self._refine = compile_refinement(plan, guarded=True)
         from .operators.enrich import config_display_expr
 
         self._cfg_display = config_display_expr(plan)
+
+    @property
+    def plan(self) -> RefinePlan:
+        return self._plan
 
     # auto mode switches to merge-on-read once the table holds more than
     # MOR_THRESHOLD× the batch's rows: COW rewrites O(touched buckets) per
@@ -165,12 +170,11 @@ class ReplayEngine:
         # batches whose rows_upserted is the ENTIRE rewritten bucket
         # content — counting them would inflate the estimate by up to a
         # table-size per maintenance pass and drift auto mode unboundedly
-        # MOR-biased. Skip anything flagged as a rewrite (and the legacy
-        # batch-id prefixes from manifests written before the flag).
+        # MOR-biased. Skip anything flagged as a rewrite.
         return sum(
             max(0, r["rows_upserted"])
-            for bid, r in snap["applied_batches"].items()
-            if not r.get("rewrite") and not bid.startswith(("compact-", "rebucket-"))
+            for r in snap["applied_batches"].values()
+            if not r.get("rewrite")
         )
 
     def _resolve_mode(self, mode: str, batch_rows: int) -> str:
@@ -460,7 +464,9 @@ class ReplayEngine:
                         tf = time.time()
                         self.fold_deltas(buckets=over)
                         stats.fold_seconds += time.time() - tf
-        if mode == "auto" and stats.batches and final_fold != "none":
+        # Not gated on this call having applied a batch: a rerun after a
+        # crash between the last commit and the fold must still fold.
+        if mode == "auto" and final_fold != "none":
             if final_fold == "threshold":
                 from .lake.maintenance import should_fold
 

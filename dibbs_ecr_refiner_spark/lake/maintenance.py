@@ -249,12 +249,7 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
     for entry in os.listdir(data_dir):
         p = os.path.join(data_dir, entry)
         if not os.path.isdir(p):
-            # legacy flat layout: data/bNNN-sNNN-*.parquet
-            rel = f"data/{entry}"
-            if rel not in referenced and now - os.path.getmtime(p) >= min_age_sec:
-                os.remove(p)
-                removed_files += 1
-            continue
+            continue  # data/ holds only per-commit dirs
         prefix = f"data/{entry}/"
         if any(r.startswith(prefix) for r in referenced):
             # Partially referenced commit dir (e.g. compaction superseded
@@ -414,13 +409,13 @@ def verify_table(table: LakeTable) -> dict:
             p = os.path.join(table.root, f["path"])
             if not os.path.exists(p):
                 issues.append(f"v{v}: missing data file {f['path']}")
-            elif "bytes" in f and os.path.getsize(p) != int(f["bytes"]):
+            elif os.path.getsize(p) != f.get("bytes"):
                 issues.append(
-                    f"v{v}: size mismatch {f['path']}: manifest {f['bytes']} "
+                    f"v{v}: size mismatch {f['path']}: manifest {f.get('bytes')} "
                     f"disk {os.path.getsize(p)}"
                 )
-            if eras and str(f.get("sv", "")) not in eras and "sv" in f:
-                issues.append(f"v{v}: file {f['path']} era sv={f['sv']} not in era map")
+            if str(f.get("sv")) not in eras:
+                issues.append(f"v{v}: file {f['path']} era sv={f.get('sv')} not in era map")
             if not (0 <= int(f["bucket"]) < nb):
                 issues.append(f"v{v}: file {f['path']} bucket {f['bucket']} out of range {nb}")
 

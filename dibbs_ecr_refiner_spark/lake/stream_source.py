@@ -23,19 +23,20 @@ Design (Spark-first):
   Only the *published* pointer is followed: staged write-audit-publish
   snapshots are invisible until published, exactly like batch reads.
 - **One InputPartition per added data file** in the ``(start, end]`` span:
-  executor-parallel Arrow scans, zero driver-side data movement. The span
-  walk mirrors ``LakeTable.read_changes(skip_rewrites=True)`` — maintenance
-  rewrites (fold / compact / rebucket) are skipped so a fold between
-  triggers yields an empty batch, while delta files superseded by an
-  in-span fold are still delivered (never silent loss; an expired
-  intermediate manifest degrades to endpoint-diff redelivery, which the
-  idempotent downstream absorbs).
+  executor-parallel Arrow scans, zero driver-side data movement. Which
+  files, and through which field-id projection, comes from ``lake/meta``
+  — the same span walk, era projection, tag resolution and file pruning
+  ``LakeTable.read_changes`` and ``ChangeFeedReader`` use, so every
+  surface returns the same rows for the same span. Maintenance rewrites
+  (fold / compact / rebucket) are skipped, so a fold between triggers
+  yields an empty batch, while delta files superseded by an in-span fold
+  are still delivered (see ``meta.span``).
 - **Era-aware field-id projection, executor-side.** Each partition carries
-  its file's physical-name projection (per current column id), mirroring
-  ``LakeTable._read_files``: renamed columns read correctly from
-  pre-rename files, and a dropped-then-re-added name never resurrects dead
-  bytes. Rows stream back as pyarrow RecordBatches cast to the Spark
-  schema's Arrow form — vectorized end to end, no per-row pickling.
+  its file's physical-name projection (per column id): renamed columns
+  read correctly from pre-rename files, and a dropped-then-re-added name
+  never resurrects dead bytes. Rows stream back as pyarrow RecordBatches
+  cast to the Spark schema's Arrow form — vectorized end to end, no
+  per-row pickling.
 - **Rate control**: ``maxVersionsPerBatch`` caps how many commits a single
   microbatch may span (admission control within a run; the first batch
   after a checkpoint restart is uncapped because the API only hands the
@@ -65,7 +66,7 @@ from __future__ import annotations
 import os
 from typing import Iterator, Sequence
 
-from . import manifests
+from . import meta
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -78,74 +79,6 @@ from pyspark.sql.datasource import (
 SOURCE_NAME = "lake_cdc"
 
 
-# ---------------- manifest access (driver-side, no SparkSession) ----------------
-
-
-def _current_version(root: str) -> int:
-    p = os.path.join(root, "_manifests", "_current")
-    if not os.path.exists(p):
-        return 0
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def _snapshot(root: str, v: int) -> dict:
-    # manifests.load_snapshot inflates segmented manifests; its segment
-    # cache makes the version-by-version span walk below cheap (adjacent
-    # snapshots share almost all bucket segments). Pure stdlib — safe on
-    # executors and on a SparkSession-less streaming driver alike.
-    return manifests.load_snapshot(os.path.join(root, "_manifests"), v)
-
-
-def _span_files(
-    root: str, frm: int, to: int, skip_rewrites: bool
-) -> tuple[list[dict], dict, dict, bool]:
-    """Data files added in ``(frm, to]`` + the end snapshot + the era map
-    merged across every manifest the walk visited — the same walk as
-    ``LakeTable.read_changes`` (see there for the superseded-delta and
-    expired-manifest rationale), on raw manifests so the streaming driver
-    never needs a LakeTable or SparkSession. The merged era map matters
-    for superseded delta files: a fold inside the span can prune their
-    era from the END manifest while the walk still delivers the file.
-
-    The 4th element is ``buckets_constant``: True only when every file
-    in the result is PROVEN to use the end snapshot's bucket numbering
-    (whole-table scan, or a walked span whose every manifest carries the
-    same ``num_buckets``). Bucket-hash pruning is only sound then — a
-    rebucket inside the span leaves span files numbered under the old
-    count."""
-    new = _snapshot(root, to)
-    eras = {str(k): v for k, v in new.get("schemas", {}).items()}
-    if frm <= 0:
-        return list(new["files"]), new, eras, True
-    old = _snapshot(root, frm)
-    old_paths = {f["path"] for f in old["files"]}
-    added = [f for f in new["files"] if f["path"] not in old_paths]
-    # endpoint diff: every kept file belongs to the END snapshot, so its
-    # numbering is the end snapshot's even if a rebucket sat in the span
-    buckets_constant = True
-    if skip_rewrites:
-        try:
-            span: dict[str, dict] = {}
-            prev = set(old_paths)
-            for v in range(frm + 1, to + 1):
-                s = _snapshot(root, v)
-                if s.get("num_buckets") != new.get("num_buckets"):
-                    buckets_constant = False
-                for sv, c in s.get("schemas", {}).items():
-                    eras.setdefault(str(sv), c)
-                for f in s["files"]:
-                    if f["path"] not in prev and not f.get("rewrite") and f["path"] not in span:
-                        span[f["path"]] = f
-                prev = {f["path"] for f in s["files"]}
-            added = list(span.values())
-        except FileNotFoundError:
-            # fell back to the endpoint diff: those files are all the end
-            # snapshot's, so its numbering applies
-            buckets_constant = True
-    return added, new, eras, buckets_constant
-
-
 class LakeFilePartition(InputPartition):
     """One data file *slice* + the field-id projection that reads it
     through the end snapshot's schema. ``path is None`` is the empty
@@ -156,8 +89,7 @@ class LakeFilePartition(InputPartition):
     scale — so large files split into ``n_slices`` partitions that each
     read every ``n_slices``-th parquet row group (≙ Iceberg's split-by-
     row-group planning). The slice count comes from the manifest's
-    ``bytes`` (stamped at write; one driver ``stat`` as fallback for
-    pre-round-3 files), never from a driver-side footer read."""
+    ``bytes`` (stamped at write), never from a driver-side footer read."""
 
     def __init__(self, path: str | None, proj: tuple, cols: list[dict], slice_idx: int = 0, n_slices: int = 1):
         self.path = path
@@ -170,21 +102,14 @@ class LakeFilePartition(InputPartition):
 DEFAULT_SPLIT_BYTES = 128 << 20
 
 
-def _snapshot_cols(snap: dict) -> list[dict]:
-    return snap.get("columns") or [
-        {"id": i + 1, "name": f.name, "type": f.dataType.jsonValue()}
-        for i, f in enumerate(T.StructType.fromJson(snap["schema"]).fields)
-    ]
-
-
 def _plan_partitions(
     root: str,
     frm: int,
     to: int,
     skip_rewrites: bool,
-    split_bytes: int = DEFAULT_SPLIT_BYTES,
-    pin_cols: list[dict] | None = None,
-    keep_file=None,
+    split_bytes: int,
+    pin_cols: list[dict] | None,
+    prune: dict,
 ) -> list[LakeFilePartition]:
     """``pin_cols`` projects the span onto a FIXED column set (by field
     id) instead of the end snapshot's: a streaming query's schema is
@@ -192,38 +117,19 @@ def _plan_partitions(
     add / rename / drop the reader must keep emitting the columns the
     query started with — ids stay stable across renames, a dropped id
     NULL-fills, and a column added after the pin is invisible until the
-    stream restarts (≙ Iceberg's schema-pinned incremental scan)."""
-    files, snap, schemas, buckets_constant = _span_files(root, frm, to, skip_rewrites)
-    if keep_file is not None:
-        # pushdown pruning: drop files that provably contain no qualifying
-        # rows (bucket hash / manifest stats). Conservative — Spark still
-        # re-evaluates every filter post-scan.
-        files = [f for f in files if keep_file(f, snap, buckets_constant)]
-    cols = pin_cols if pin_cols is not None else _snapshot_cols(snap)
-    cur_sv = str(snap.get("schema_version", 0))
-    schemas.setdefault(cur_sv, _snapshot_cols(snap))
-    proj_cache: dict[str, tuple] = {}
-
-    def projection(sv: str) -> tuple:
-        if sv not in proj_cache:
-            era = {c["id"]: c["name"] for c in schemas.get(sv, cols)}
-            proj_cache[sv] = tuple(era.get(c["id"]) for c in cols)
-        return proj_cache[sv]
-
+    stream restarts (≙ Iceberg's schema-pinned incremental scan).
+    ``prune`` holds ``meta.prune``'s key / ts bounds."""
+    span = meta.span(root, frm, to, skip_rewrites)
+    files = meta.prune(span.files, span.num_buckets, **prune)
+    cols = pin_cols if pin_cols is not None else span.snap["columns"]
     if not files:
         return [LakeFilePartition(None, (), cols)]
     parts = []
-    for f in files:
-        path = os.path.join(root, f["path"])
-        proj = projection(str(f.get("sv", cur_sv)))
-        size = f.get("bytes")
-        if size is None:
-            try:
-                size = os.path.getsize(path)
-            except OSError:
-                size = 0
-        n = max(1, -(-int(size) // max(1, split_bytes)))
-        parts.extend(LakeFilePartition(path, proj, cols, i, n) for i in range(n))
+    for proj, fs in meta.projections(files, span.eras, cols).items():
+        for f in fs:
+            n = max(1, -(-int(f["bytes"]) // max(1, split_bytes)))
+            path = os.path.join(root, f["path"])
+            parts.extend(LakeFilePartition(path, proj, cols, i, n) for i in range(n))
     return parts
 
 
@@ -270,92 +176,15 @@ def _read_partition(part: LakeFilePartition) -> Iterator:
 # ---------------- readers ----------------
 
 
-def _resolve_tag(root: str, name: str) -> int:
-    """Named-ref lookup (LakeTable.tag) without a LakeTable/SparkSession:
-    tags pin their snapshots against expiry, so a tag-anchored stream or
-    scan can never start from an expired version. Reads the per-tag file
-    layout (``_refs/<name>.json``) first, then the legacy single-file
-    ``_refs.json`` a pre-round-4 table may still carry."""
-    import json as _json
-    import re as _re
-
-    # Same gate as LakeTable._TAG_NAME: the option value is user-supplied
-    # and joined into a path, so reject traversal shapes before any I/O.
-    if not _re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name):
-        raise ValueError(
-            f"invalid tag name {name!r}: use letters, digits, '.', '_', '-' "
-            "(must not start with '.')"
-        )
-    p = os.path.join(root, "_manifests", "_refs", f"{name}.json")
-    try:
-        with open(p) as f:
-            return int(_json.load(f)["version"])
-    except (OSError, _json.JSONDecodeError, KeyError, TypeError, ValueError):
-        pass
-    legacy = os.path.join(root, "_manifests", "_refs.json")
-    try:
-        with open(legacy) as f:
-            tags = _json.load(f).get("tags", {})
-    except (OSError, _json.JSONDecodeError):
-        tags = {}
-    if name not in tags:
-        raise ValueError(f"unknown tag {name!r} on table {root}")
-    return int(tags[name]["version"])
-
-
 def _version_opt(options, root: str, version_key: str, tag_key: str) -> int:
     """A snapshot endpoint given either as a version number or a tag name
     (mutually exclusive; 0 = unset)."""
-    v = int(options.get(version_key, 0) or 0)
-    tag = options.get(tag_key)
-    if tag:
-        if v:
-            raise ValueError(f"pass {version_key} or {tag_key}, not both")
-        return _resolve_tag(root, tag)
-    return v
+    v = int(options.get(version_key, 0) or 0) or None
+    return meta.endpoint(root, v, options.get(tag_key) or None, (version_key, tag_key)) or 0
 
 
 def _skip_rewrites(options) -> bool:
     return str(options.get("skiprewrites", "true")).lower() != "false"
-
-
-class _FilePruner:
-    """File-level pruning shared by both faces of the source: a file is
-    dropped only when it PROVABLY contains no qualifying rows — by the
-    key's bucket hash (driver-side xxhash, write/read parity pinned by
-    test) and/or the manifest-stamped per-file [min,max] stats. Pruning
-    saves IO, never owns correctness: the batch face returns every filter
-    for Spark to re-apply post-scan, and the stream face documents that
-    surviving files are delivered whole (compose with ``.filter()``).
-    Bucket-hash pruning switches itself off when the span crossed a
-    rebucket (``buckets_constant`` False) — span files keep the OLD
-    numbering there. ≙ the event-filtered SQS tail, reference
-    lambda_function.py:192-209."""
-
-    def __init__(self, conv_eq: str | None = None, ts_lo: int | None = None):
-        self.conv_eq = conv_eq
-        self.ts_lo = ts_lo  # inclusive lower bound, epoch-µs
-
-    @property
-    def active(self) -> bool:
-        return self.conv_eq is not None or self.ts_lo is not None
-
-    def keep(self, f: dict, snap: dict, buckets_constant: bool) -> bool:
-        from .stats import _stats_keep
-
-        if self.conv_eq is not None:
-            from .table import xxhash64
-
-            nb = int(snap.get("num_buckets", 0))
-            h = xxhash64(self.conv_eq.encode("utf-8"))
-            signed = h - (1 << 64) if h >= (1 << 63) else h  # == LakeTable.bucket_of
-            if buckets_constant and nb and int(f["bucket"]) != signed % nb:
-                return False
-            if not _stats_keep(f, "conv_id", self.conv_eq, self.conv_eq):
-                return False
-        if self.ts_lo is not None and not _stats_keep(f, "ts", lo=self.ts_lo):
-            return False
-        return True
 
 
 def _parse_ts_opt(v) -> int:
@@ -381,8 +210,8 @@ class LakeCdcStreamReader(DataSourceStreamReader):
     """The streaming face. ``pushFilters`` exists only on batch
     ``DataSourceReader`` in the 4.1 API, so a filtered streaming consumer
     would Arrow-scan every added file; the ``sinceTs`` / ``convId`` READ
-    OPTIONS close that gap — the same :class:`_FilePruner` stats/bucket
-    logic, declared up front instead of pushed down. Semantics: file-level
+    OPTIONS close that gap — the same ``meta.prune`` stats/bucket logic,
+    declared up front instead of pushed down. Semantics: file-level
     IO pruning ONLY. A surviving file is delivered whole (stats are
     per-file ranges, not row predicates), so a consumer composes the
     option with the matching ``.filter()``; the option guarantees no
@@ -393,24 +222,24 @@ class LakeCdcStreamReader(DataSourceStreamReader):
         self.skip_rewrites = _skip_rewrites(options)
         self.split_bytes = _split_bytes(options)
         self.max_versions = int(options.get("maxversionsperbatch", 0) or 0)
-        self._pruner = _FilePruner(
-            conv_eq=options.get("convid"),
-            ts_lo=_parse_ts_opt(options["sincets"]) if "sincets" in options else None,
-        )
+        self._prune = {
+            "conv_eq": options.get("convid"),
+            "ts_lo": _parse_ts_opt(options["sincets"]) if "sincets" in options else None,
+        }
         self.starting = _version_opt(options, self.root, "startingversion", "startingtag")
         self._last: int | None = None
         # pin the query's column set NOW (the declared schema is immutable
         # for the life of the query); an empty table pins lazily at the
         # first non-empty span
-        v = _current_version(self.root)
-        self._pin_cols = _snapshot_cols(_snapshot(self.root, v)) if v > 0 else None
+        snap = meta.snapshot(self.root)
+        self._pin_cols = snap["columns"] if snap else None
 
     def initialOffset(self) -> dict:
         self._last = self.starting
         return {"version": self.starting}
 
     def latestOffset(self) -> dict:
-        cur = _current_version(self.root)
+        cur = meta.current_version(self.root) or 0
         if self.max_versions and self._last is not None:
             cur = min(cur, self._last + self.max_versions)
         if self._last is not None:
@@ -423,7 +252,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
         if to <= frm:
             return [LakeFilePartition(None, (), [])]
         if self._pin_cols is None:
-            self._pin_cols = _snapshot_cols(_snapshot(self.root, to))
+            self._pin_cols = meta.snapshot(self.root, to)["columns"]
         return _plan_partitions(
             self.root,
             frm,
@@ -431,7 +260,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
             self.skip_rewrites,
             self.split_bytes,
             self._pin_cols,
-            keep_file=self._pruner.keep if self._pruner.active else None,
+            self._prune,
         )
 
     def read(self, partition: LakeFilePartition) -> Iterator:
@@ -460,12 +289,12 @@ class LakeCdcBatchReader(DataSourceReader):
     def __init__(self, options):
         self.root = options["path"]
         self.frm = _version_opt(options, self.root, "fromversion", "fromtag")
-        self.to = _version_opt(options, self.root, "toversion", "totag") or _current_version(
-            self.root
+        self.to = _version_opt(options, self.root, "toversion", "totag") or (
+            meta.current_version(self.root) or 0
         )
         self.skip_rewrites = _skip_rewrites(options)
         self.split_bytes = _split_bytes(options)
-        self._pruner = _FilePruner()
+        self._prune: dict = {}
 
     def _accept_filters(self, filters):
         """Partition-pruning pushdown (Spark 4.1 Python Data Source API):
@@ -485,10 +314,10 @@ class LakeCdcBatchReader(DataSourceReader):
             cls = type(f).__name__
             col = getattr(f, "attribute", None)
             if cls == "EqualTo" and col == ("conv_id",) and isinstance(f.value, str):
-                self._pruner.conv_eq = f.value
+                self._prune["conv_eq"] = f.value
             elif cls in ("GreaterThanOrEqual", "GreaterThan") and col == ("ts",):
                 try:
-                    self._pruner.ts_lo = _ts_us(f.value)
+                    self._prune["ts_lo"] = _ts_us(f.value)
                 except (TypeError, ValueError, AttributeError):
                     pass
         return filters  # Spark re-applies everything
@@ -496,9 +325,8 @@ class LakeCdcBatchReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         if self.to <= self.frm:
             return [LakeFilePartition(None, (), [])]
-        keep = self._pruner.keep if self._pruner.active else None
         return _plan_partitions(
-            self.root, self.frm, self.to, self.skip_rewrites, self.split_bytes, keep_file=keep
+            self.root, self.frm, self.to, self.skip_rewrites, self.split_bytes, None, self._prune
         )
 
     def read(self, partition: LakeFilePartition) -> Iterator:
@@ -523,7 +351,7 @@ class LakeCdcDataSource(DataSource):
 
     def schema(self) -> T.StructType:
         root = self.options["path"]
-        v = _version_opt(self.options, root, "toversion", "totag") or _current_version(root)
+        v = _version_opt(self.options, root, "toversion", "totag") or (meta.current_version(root) or 0)
         if v == 0:
             raise ValueError(
                 f"lake table at {root!r} has no published snapshot yet — "
@@ -537,7 +365,7 @@ class LakeCdcDataSource(DataSource):
         # the reader sees exactly one spelling of the pin.
         self.options["toversion"] = str(v)
         self.options.pop("totag", None)
-        return T.StructType.fromJson(_snapshot(root, v)["schema"])
+        return T.StructType.fromJson(meta.snapshot(root, v)["schema"])
 
     def streamReader(self, schema) -> LakeCdcStreamReader:
         return LakeCdcStreamReader(self.options)

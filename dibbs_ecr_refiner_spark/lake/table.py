@@ -63,9 +63,9 @@ Scale properties:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import re
 import time
 import uuid
 
@@ -83,9 +83,10 @@ from pyspark.sql import types as T
 # footer-reading library from THIS module — the reader lives in
 # lake/stats.py).
 from . import manifests as _mf
-from .stats import STATS_COLS, _stats_keep, _ts_us, file_column_stats  # noqa: F401
+from . import meta
+from .meta import FORMAT_VERSION
+from .stats import _stats_keep, _ts_us, file_column_stats  # noqa: F401
 
-FORMAT_VERSION = 1
 KEY = ("conv_id", "turn_idx")
 ORDER = ("ts", "change_lsn")
 # Sort rows by key inside each data file (within-partition sort, no
@@ -130,61 +131,6 @@ class IncompatibleSchemaChange(Exception):
 def bucket_expr(num_buckets: int, col: str | None = "conv_id", lit: str | None = None):
     src = F.lit(lit) if col is None else F.col(col)
     return F.pmod(F.xxhash64(src), F.lit(num_buckets)).cast("int")
-
-
-_XXP1, _XXP2, _XXP3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-_XXP4, _XXP5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def xxhash64(data: bytes, seed: int = 42) -> int:
-    """Driver-side XXH64 (spec implementation), seed 42 = Spark's
-    ``F.xxhash64`` default — so point lookups can compute a key's bucket
-    without launching a Spark job. Parity with the write-path expression is
-    pinned by ``tests/test_lake.py::test_driver_side_xxhash64_parity``."""
-    n, i = len(data), 0
-    if n >= 32:
-        v1 = (seed + _XXP1 + _XXP2) & _M64
-        v2 = (seed + _XXP2) & _M64
-        v3 = seed
-        v4 = (seed - _XXP1) & _M64
-        while i + 32 <= n:
-            for j, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
-                v = _rotl((v + lane * _XXP2) & _M64, 31) * _XXP1 & _M64
-                if j == 0:
-                    v1 = v
-                elif j == 1:
-                    v2 = v
-                elif j == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ (_rotl((v * _XXP2) & _M64, 31) * _XXP1 & _M64)) * _XXP1 + _XXP4) & _M64
-    else:
-        h = (seed + _XXP5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        lane = int.from_bytes(data[i : i + 8], "little")
-        h = ((_rotl(h ^ (_rotl((lane * _XXP2) & _M64, 31) * _XXP1 & _M64), 27) * _XXP1) + _XXP4) & _M64
-        i += 8
-    if i + 4 <= n:
-        lane = int.from_bytes(data[i : i + 4], "little")
-        h = ((_rotl(h ^ ((lane * _XXP1) & _M64), 23) * _XXP2) + _XXP3) & _M64
-        i += 4
-    while i < n:
-        h = ((_rotl(h ^ ((data[i] * _XXP5) & _M64), 11)) * _XXP1) & _M64
-        i += 1
-    h = ((h ^ (h >> 33)) * _XXP2) & _M64
-    h = ((h ^ (h >> 29)) * _XXP3) & _M64
-    return h ^ (h >> 32)
 
 
 def _widen_nullability(old: T.DataType, new: T.DataType) -> T.DataType | None:
@@ -260,11 +206,7 @@ def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
 #   dropped id is in no live column set, and the fresh id is absent from
 #   the old eras → NULL).
 #
-# Manifests written before this feature carry no ``columns``; on the next
-# commit they are upgraded in place: ids are assigned in schema order and
-# every file entry is stamped with the then-current schema_version — sound
-# because physical names were never renamed before ids existed, so each
-# such file's physical names are a by-name subset of that era's columns.
+# The id → physical-name resolution itself is ``meta.projections``.
 
 
 def _cols_to_schema(cols: list[dict]) -> T.StructType:
@@ -316,7 +258,7 @@ class LakeTable:
         self.spark = spark
         self.root = root
         self.num_buckets = num_buckets
-        self._manifest_dir = os.path.join(root, "_manifests")
+        self._manifest_dir = meta.manifest_dir(root)
         self._data_dir = os.path.join(root, "data")
         self._staging_dir = os.path.join(root, "_staging")
         for d in (self._manifest_dir, self._data_dir, self._staging_dir):
@@ -326,31 +268,22 @@ class LakeTable:
         # the LWW union of a key's existing rows.
         snap = self.current_snapshot()
         if snap is not None:
-            self.num_buckets = int(snap.get("num_buckets", num_buckets))
+            self.num_buckets = int(snap["num_buckets"])
 
     # ---------------- snapshot plumbing ----------------
 
     def _current_version(self) -> int | None:
-        p = os.path.join(self._manifest_dir, "_current")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return int(f.read().strip())
+        return meta.current_version(self.root)
 
     def current_snapshot(self) -> dict | None:
-        v = self._current_version()
-        if v is None:
-            return None
-        return _mf.load_snapshot(self._manifest_dir, v)
+        return meta.snapshot(self.root)
 
     def snapshot(self, version: int | None = None) -> dict | None:
         """A specific retained snapshot (time travel), or the current one.
         Segmented manifests are inflated back to the inline ``files`` /
         ``applied_batches`` shape here, so every consumer sees one format
         (see ``lake/manifests.py`` for the commit-cost rationale)."""
-        if version is None:
-            return self.current_snapshot()
-        return _mf.load_snapshot(self._manifest_dir, version)
+        return meta.snapshot(self.root, version)
 
     def _commit(self, manifest: dict, publish: bool = True) -> None:
         """Two-step atomic commit: immutable snapshot file (fails if a
@@ -417,41 +350,16 @@ class LakeTable:
     # which fails if the name exists): two concurrent taggers with
     # different names each land their file — nobody's pin is lost to a
     # read-modify-write of a shared refs blob — and same-name taggers
-    # race to exactly one winner. A pre-round-4 single-file ``_refs.json``
-    # is read transparently and burst into per-tag files on first write.
-
-    _TAG_NAME = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
-
-    @property
-    def _refs_path(self) -> str:
-        return os.path.join(self._manifest_dir, "_refs.json")
+    # race to exactly one winner.
 
     @property
     def _refs_dir(self) -> str:
-        return os.path.join(self._manifest_dir, "_refs")
-
-    def _legacy_tags(self) -> dict[str, dict]:
-        if not os.path.exists(self._refs_path):
-            return {}
-        with open(self._refs_path) as f:
-            return json.load(f).get("tags", {})
+        return meta.refs_dir(self.root)
 
     def tags(self) -> dict[str, dict]:
-        tags = self._legacy_tags()
-        try:
-            entries = os.listdir(self._refs_dir)
-        except FileNotFoundError:
-            entries = []
-        for fn in entries:
-            if fn.endswith(".json") and not fn.startswith("."):
-                try:
-                    with open(os.path.join(self._refs_dir, fn)) as f:
-                        tags[fn[:-5]] = json.load(f)
-                except (OSError, json.JSONDecodeError):
-                    continue  # racing delete / half-linked temp
-        return tags
+        return meta.tags(self.root)
 
-    def _write_tag_file(self, name: str, meta: dict) -> None:
+    def _write_tag_file(self, name: str, pin: dict) -> None:
         """Atomic create-if-absent: the temp file carries the FULL content
         before the hard link publishes the name, so a reader can never see
         a partial tag; ``os.link`` raises FileExistsError on a name race."""
@@ -459,44 +367,22 @@ class LakeTable:
         final = os.path.join(self._refs_dir, f"{name}.json")
         tmp = os.path.join(self._refs_dir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
+            json.dump(pin, f, indent=1, sort_keys=True)
         try:
             os.link(tmp, final)
         finally:
             os.remove(tmp)
 
-    def _migrate_refs(self) -> None:
-        """Burst a legacy single-file ``_refs.json`` into per-tag files.
-        Safe under concurrency: per-tag creation is create-if-absent, and
-        a second migrator's ``remove`` simply finds the file gone."""
-        legacy = self._legacy_tags()
-        if not legacy:
-            return
-        for name, meta in legacy.items():
-            try:
-                self._write_tag_file(name, meta)
-            except FileExistsError:
-                pass
-        try:
-            os.remove(self._refs_path)
-        except FileNotFoundError:
-            pass
-
     def tag(self, name: str, version: int | None = None, note: str | None = None) -> dict:
         """Pin ``name`` to a retained snapshot (default: current)."""
-        if not self._TAG_NAME.fullmatch(name):
-            raise ValueError(
-                f"invalid tag name {name!r}: use letters, digits, '.', '_', '-' "
-                "(must not start with '.')"
-            )
+        meta.check_tag_name(name)
         v = int(version) if version is not None else self._current_version()
         if v is None:
             raise ValueError("table has no snapshot to tag")
         self.snapshot(v)  # raises FileNotFoundError for an expired/unknown version
-        self._migrate_refs()
-        meta = {"version": v, "created_at": time.time(), **({"note": note} if note else {})}
+        pin = {"version": v, "created_at": time.time(), **({"note": note} if note else {})}
         try:
-            self._write_tag_file(name, meta)
+            self._write_tag_file(name, pin)
         except FileExistsError:
             # The racing winner's tag may itself be gone by the time we
             # re-read (deleted between our failed create and this lookup) —
@@ -507,15 +393,7 @@ class LakeTable:
         return {"tag": name, "version": v}
 
     def delete_tag(self, name: str) -> dict:
-        if not self._TAG_NAME.fullmatch(name):
-            # same gate as tag(): an unvalidated name would be joined into
-            # the refs path, letting '../v00000001' escape _refs/ and remove
-            # a snapshot manifest.
-            raise ValueError(
-                f"invalid tag name {name!r}: use letters, digits, '.', '_', '-' "
-                "(must not start with '.')"
-            )
-        self._migrate_refs()
+        meta.check_tag_name(name)
         path = os.path.join(self._refs_dir, f"{name}.json")
         try:
             with open(path) as f:
@@ -526,86 +404,38 @@ class LakeTable:
         return {"tag": name, "version": gone["version"], "deleted": True}
 
     def resolve_tag(self, name: str) -> int:
-        tags = self.tags()
-        if name not in tags:
-            raise ValueError(f"unknown tag {name!r}")
-        return int(tags[name]["version"])
+        return meta.resolve_tag(self.root, name)
 
-    # ---------------- field-id plumbing ----------------
+    def _read_files(self, files: list[dict], cols: list[dict], eras: dict) -> DataFrame:
+        """Read data files of this table through the logical columns
+        ``cols``, resolving each file's columns BY FIELD ID through its
+        era (``meta.projections``).
 
-    @staticmethod
-    def _upgraded(snap: dict) -> tuple[list[dict], int, list[dict], dict[str, list[dict]]]:
-        """(columns, next_column_id, files-with-sv, era map) for a snapshot,
-        upgrading a pre-field-id manifest in place (see the field-id note
-        above ``_merge_columns``)."""
-        sv = snap["schema_version"]
-        cols = snap.get("columns")
-        if cols is None:
-            cols = _schema_to_cols(T.StructType.fromJson(snap["schema"]))
-        next_id = int(snap.get("next_column_id", len(cols) + 1))
-        files = [dict(f) for f in snap["files"]]
-        for f in files:
-            f.setdefault("sv", sv)
-        schemas = {str(k): v for k, v in snap.get("schemas", {}).items()}
-        schemas.setdefault(str(sv), cols)
-        return cols, next_id, files, schemas
-
-    def _read_files(self, files: list[dict], snap: dict) -> DataFrame:
-        """Read a set of this table's data files through a snapshot's
-        logical schema, resolving columns BY FIELD ID per era.
-
-        Files are grouped by the *projection* their era implies (not by raw
-        era tag): eras with no rename between them share one parquet scan,
-        so the common single-era / never-renamed table stays one multi-path
-        scan with full pushdown, exactly as a by-name read. Only files whose
-        era physically names a column differently (a rename happened since
+        Files whose eras name every column alike share one parquet scan,
+        so a single-era / never-renamed table stays one multi-path scan
+        with full pushdown, exactly as a by-name read. Only files whose era
+        physically names a column differently (a rename happened since
         they were written) get a separate scan + rename-projection, unioned
-        by name. Manifests predating field ids fall back to by-name."""
-        schema = T.StructType.fromJson(snap["schema"])
-        paths_of = lambda fs: [os.path.join(self.root, f["path"]) for f in fs]  # noqa: E731
-        cols = snap.get("columns")
-        if cols is None:
-            return self.spark.read.schema(schema).parquet(*paths_of(files))
-        schemas = snap.get("schemas", {})
-        cur_sv = str(snap["schema_version"])
-        # projection key per era: tuple of the era's physical name for each
-        # current id (None -> column didn't exist yet -> NULL)
-        proj_cache: dict[str, tuple] = {}
-
-        def projection(sv: str) -> tuple:
-            if sv not in proj_cache:
-                era = {c["id"]: c["name"] for c in schemas.get(sv, cols)}
-                proj_cache[sv] = tuple(era.get(c["id"]) for c in cols)
-            return proj_cache[sv]
-
-        groups: dict[tuple, list[dict]] = {}
-        for f in files:
-            groups.setdefault(projection(str(f.get("sv", cur_sv))), []).append(f)
-
+        by name."""
+        if not files:
+            return self.spark.createDataFrame([], _cols_to_schema(cols))
+        types = [T._parse_datatype_json_value(c["type"]) for c in cols]
+        names = tuple(c["name"] for c in cols)
         parts = []
-        for proj, fs in groups.items():
-            read_fields = [
-                T.StructField(phys, T._parse_datatype_json_value(c["type"]), True)
-                for phys, c in zip(proj, cols)
-                if phys is not None
-            ]
-            df = self.spark.read.schema(T.StructType(read_fields)).parquet(*paths_of(fs))
-            if proj != tuple(c["name"] for c in cols):
+        for proj, fs in meta.projections(files, eras, cols).items():
+            read_fields = [T.StructField(p, t, True) for p, t in zip(proj, types) if p is not None]
+            df = self.spark.read.schema(T.StructType(read_fields)).parquet(
+                *[os.path.join(self.root, f["path"]) for f in fs]
+            )
+            if proj != names:
                 df = df.select(
                     *[
-                        F.col(phys).alias(c["name"])
-                        if phys is not None
-                        else F.lit(None)
-                        .cast(T._parse_datatype_json_value(c["type"]))
-                        .alias(c["name"])
-                        for phys, c in zip(proj, cols)
+                        F.col(p).alias(n) if p is not None else F.lit(None).cast(t).alias(n)
+                        for p, n, t in zip(proj, names, types)
                     ]
                 )
             parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     # ---------------- read paths ----------------
 
@@ -656,37 +486,25 @@ class LakeTable:
         read-side one) — resolving here too would pay a second full
         aggregation + exchange for identical winners. Not valid with
         ``min_ts`` / tombstone filtering (both are winner-level predicates)."""
-        if tag is not None:
-            if version is not None:
-                raise ValueError("pass version or tag, not both")
-            version = self.resolve_tag(tag)
-        snap = self.snapshot(version)
-        schema = T.StructType.fromJson(snap["schema"]) if snap else None
-        has_delta = False
-        if conv_id_eq is not None and buckets is None:
-            buckets = [self.bucket_of(conv_id_eq)]
-        if snap is None or not snap["files"]:
-            if schema is None:
-                raise ValueError("table has no snapshot yet")
-            df = self.spark.createDataFrame([], schema)
-        else:
-            files = snap["files"]
-            if buckets is not None:
-                want = set(buckets)
-                files = [f for f in files if f["bucket"] in want]
-            if conv_id_eq is not None:
-                files = [f for f in files if _stats_keep(f, "conv_id", conv_id_eq, conv_id_eq)]
-            if min_ts is not None:
-                files = [f for f in files if _stats_keep(f, "ts", lo=_ts_us(min_ts))]
-            has_delta = any(f.get("kind", "base") == "delta" for f in files)
-            if not files:
-                df = self.spark.createDataFrame([], schema)
-            else:
-                # Era-aware read (field ids): old files are read through the
-                # evolved schema (absent columns -> NULL, renamed columns
-                # resolved by id); column pruning and predicate pushdown
-                # still reach the parquet scan.
-                df = self._read_files(files, snap)
+        snap = self.snapshot(meta.endpoint(self.root, version, tag))
+        if snap is None:
+            raise ValueError("table has no snapshot yet")
+        # manifest pruning by the snapshot's own bucket count — time travel
+        # across a rebucket hashes the key the way that snapshot's files
+        # were laid out
+        files = meta.prune(
+            snap["files"],
+            snap["num_buckets"],
+            buckets=buckets,
+            conv_eq=conv_id_eq,
+            ts_lo=None if min_ts is None else _ts_us(min_ts),
+        )
+        has_delta = any(f.get("kind", "base") == "delta" for f in files)
+        # Era-aware read (field ids): old files are read through the
+        # evolved schema (absent columns -> NULL, renamed columns resolved
+        # by id); column pruning and predicate pushdown still reach the
+        # parquet scan.
+        df = self._read_files(files, snap["columns"], snap["schemas"])
         if conv_id_eq is not None:
             df = df.where(F.col("conv_id") == F.lit(conv_id_eq))
         if not resolve_deltas:
@@ -732,50 +550,10 @@ class LakeTable:
         "what changed between corpus-2026-07 and corpus-2026-08" without
         anyone remembering snapshot ids; tags pin their manifests against
         expiry, so a tag-to-tag diff can't hit an expired endpoint."""
-        if from_tag is not None:
-            if from_version is not None:
-                raise ValueError("pass from_version or from_tag, not both")
-            from_version = self.resolve_tag(from_tag)
-        if to_tag is not None:
-            if to_version is not None:
-                raise ValueError("pass to_version or to_tag, not both")
-            to_version = self.resolve_tag(to_tag)
-        old = self.snapshot(from_version) if from_version else None
-        new = self.snapshot(to_version)
-        if new is None:
-            raise ValueError("table has no snapshot yet")
-        old_paths = {f["path"] for f in old["files"]} if old else set()
-        added = [f for f in new["files"] if f["path"] not in old_paths]
-        if skip_rewrites and from_version is not None:
-            # Walk the span's manifests collecting every NON-rewrite file
-            # added anywhere in it — the endpoint diff alone is wrong here:
-            # a fold inside the span supersedes unconsumed delta files, and
-            # skipping the rewrite files that absorbed them would lose
-            # their changes. Superseded files stay readable while their
-            # manifests are retained (gc honors retained history). If an
-            # intermediate manifest was expired, fall back to the endpoint
-            # diff INCLUDING rewrites — a full redelivery the idempotent
-            # downstream absorbs, never silent loss.
-            try:
-                span: dict[str, dict] = {}
-                prev_paths = set(old_paths)
-                for v in range(from_version + 1, new["snapshot_id"] + 1):
-                    s = self.snapshot(v)
-                    for f_ in s["files"]:
-                        if (
-                            f_["path"] not in prev_paths
-                            and not f_.get("rewrite")
-                            and f_["path"] not in span
-                        ):
-                            span[f_["path"]] = f_
-                    prev_paths = {f_["path"] for f_ in s["files"]}
-                added = list(span.values())
-            except FileNotFoundError:
-                pass
-        schema = T.StructType.fromJson(new["schema"])
-        if not added:
-            return self.spark.createDataFrame([], schema)
-        return self._read_files(added, new)
+        frm = meta.endpoint(self.root, from_version, from_tag, ("from_version", "from_tag"))
+        to = meta.endpoint(self.root, to_version, to_tag, ("to_version", "to_tag"))
+        span = meta.span(self.root, frm, to, skip_rewrites)
+        return self._read_files(span.files, span.snap["columns"], span.eras)
 
     def _metadata_evolution(
         self, snap: dict, new_cols: list[dict], next_id: int, extra: dict | None = None
@@ -783,9 +561,8 @@ class LakeTable:
         """Commit a metadata-only schema change (drop/rename): no data
         files touched, schema_version bumped, era map retains every era a
         live file still reads through."""
-        _, _, files, schemas = self._upgraded(snap)
         new_sv = snap["schema_version"] + 1
-        live_svs = {str(f["sv"]) for f in files}
+        live_svs = {str(f["sv"]) for f in snap["files"]}
         manifest = {
             **snap,
             "snapshot_id": snap["snapshot_id"] + 1,
@@ -795,9 +572,8 @@ class LakeTable:
             "schema_version": new_sv,
             "columns": new_cols,
             "next_column_id": next_id,
-            "files": files,
             "schemas": {
-                **{sv: c for sv, c in schemas.items() if sv in live_svs},
+                **{sv: c for sv, c in snap["schemas"].items() if sv in live_svs},
                 str(new_sv): new_cols,
             },
             **(extra or {}),
@@ -826,7 +602,7 @@ class LakeTable:
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError("table has no snapshot yet")
-        cols, next_id, _, _ = self._upgraded(snap)
+        cols, next_id = snap["columns"], snap["next_column_id"]
         if name not in {c["name"] for c in cols}:
             raise ValueError(f"no such column {name!r}")
         new_cols = [c for c in cols if c["name"] != name]
@@ -851,7 +627,7 @@ class LakeTable:
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError("table has no snapshot yet")
-        cols, next_id, _, _ = self._upgraded(snap)
+        cols, next_id = snap["columns"], snap["next_column_id"]
         names = {c["name"] for c in cols}
         if old not in names:
             raise ValueError(f"no such column {old!r}")
@@ -866,9 +642,7 @@ class LakeTable:
         algorithm + seed as the write path's ``F.xxhash64``; parity pinned
         by a test), so a point lookup costs exactly ONE Spark job (the
         pruned read), not a scheduling round-trip to hash the key."""
-        h = xxhash64(conv_id.encode("utf-8"))
-        signed = h - (1 << 64) if h >= (1 << 63) else h
-        return signed % self.num_buckets
+        return meta.bucket_of(conv_id, self.num_buckets)
 
     def read_conversation(self, conv_id: str, include_tombstones: bool = False) -> DataFrame:
         """Point lookup: manifest bucket pruning (hash the key, read only
@@ -918,7 +692,7 @@ class LakeTable:
         for fn in sorted(os.listdir(self._manifest_dir)):
             if not re.fullmatch(r"v\d{8}\.json", fn):
                 continue
-            s = _mf.load_snapshot(self._manifest_dir, int(fn[1:-5]))
+            s = self.snapshot(int(fn[1:-5]))
             n_delta = sum(1 for x in s["files"] if x.get("kind", "base") == "delta")
             rows.append(
                 (
@@ -1069,7 +843,8 @@ class LakeTable:
             # Field-id schema merge: known names keep their id, new names
             # (incl. a re-added dropped name) get fresh ids — old bytes in
             # un-rewritten files stay invisible because reads resolve by id.
-            cols, next_id, snap_files, schemas = self._upgraded(snap)
+            cols, next_id, snap_files = snap["columns"], snap["next_column_id"], snap["files"]
+            schemas = snap["schemas"]
             new_cols, next_id = _merge_columns(cols, next_id, delta_schema)
             new_schema = _cols_to_schema(new_cols)
             new_sv = snap["schema_version"] + (1 if new_cols != cols else 0)
@@ -1108,7 +883,7 @@ class LakeTable:
         if old_files:
             # era-aware: a renamed column's old physical name is resolved
             # by field id, then _conform pads columns the delta introduced
-            sides.append(_conform(self._read_files(old_files, snap)))
+            sides.append(_conform(self._read_files(old_files, snap["columns"], schemas)))
         unioned = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
 
         # ONE exchange for the whole merge (guide §2.4 — two operations
@@ -1309,7 +1084,7 @@ class LakeTable:
         }
 
         files_out = carried + new_files
-        live_svs = {str(f["sv"]) for f in files_out if "sv" in f}
+        live_svs = {str(f["sv"]) for f in files_out}
         manifest = {
             "format_version": FORMAT_VERSION,
             "snapshot_id": new_version,

@@ -155,13 +155,28 @@ def test_wap_stage_audit_publish_and_abort(spark, tmp_path):
         table.abort_snapshot(1)
 
 
+def test_time_travel_point_lookup_across_a_rebucket(spark, tmp_path):
+    """read(version=v, conv_id_eq=k) prunes by the bucket ``k`` had in
+    snapshot v — hashing with the table's current (post-rebucket) count
+    would look in the wrong old bucket and lose the key."""
+    from dibbs_ecr_refiner_spark.lake.maintenance import rebucket
+
+    keys = [f"k{i}" for i in range(16)]
+    table = mk(spark, tmp_path, [(k, 0, k, i + 1, False, None) for i, k in enumerate(keys)], buckets=2)
+    v1 = table.current_snapshot()["snapshot_id"]
+    rebucket(table, 8)
+    for k in keys:
+        assert [r["text"] for r in table.read(version=v1, conv_id_eq=k).collect()] == [k], k
+        assert [r["text"] for r in table.read_conversation(k).collect()] == [k], k
+
+
 def test_driver_side_xxhash64_parity(spark):
     """bucket_of computes the bucket driver-side; it must agree bit-for-bit
     with the write path's F.xxhash64 expression for any key — covering all
     XXH64 length regimes (<4, <8, <32, >=32 bytes) and multi-byte UTF-8."""
     import random
 
-    from dibbs_ecr_refiner_spark.lake.table import xxhash64
+    from dibbs_ecr_refiner_spark.lake.meta import xxhash64
 
     rng = random.Random(7)
     keys = ["", "a", "conv", "c" * 31, "c" * 32, "c" * 100, "naïve-Ωλ⚡", "日本語のキー"]
@@ -502,6 +517,31 @@ def test_no_driver_side_footer_reads():
     assert "read_metadata" not in src
     assert "pyarrow" not in src
     assert inspect.signature(mod.LakeTable.merge).parameters["collect_stats"].default is False
+
+
+def test_lake_meta_and_stream_source_stay_sparksession_free():
+    """The streaming driver and executors plan spans through lake/meta.py
+    without a SparkSession: meta imports nothing from pyspark.sql, and the
+    lake_cdc source reaches lake metadata only through meta, never through
+    LakeTable."""
+    import ast
+    import pathlib
+
+    import dibbs_ecr_refiner_spark.lake.meta as meta
+    import dibbs_ecr_refiner_spark.lake.stream_source as src
+
+    def imports(mod):
+        names = set()
+        for node in ast.walk(ast.parse(pathlib.Path(mod.__file__).read_text())):
+            if isinstance(node, ast.Import):
+                names.update(a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                names.add(node.module or "")
+                names.update(f"{node.module or ''}.{a.name}" for a in node.names)
+        return names
+
+    assert not [n for n in imports(meta) if n.startswith("pyspark.sql")]
+    assert not [n for n in imports(src) if "table" in n.split(".")]
 
 
 def test_concurrent_writer_loser_cannot_clobber_winner(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Compaction / tombstone-GC and skew-handling tests."""
+"""Compaction / tombstone-GC tests."""
 
 import datetime as dt
 
@@ -6,8 +6,6 @@ from pyspark.sql import functions as F
 
 from dibbs_ecr_refiner_spark.lake.maintenance import compact, min_safe_gc_lsn
 from dibbs_ecr_refiner_spark.lake.table import LakeTable
-from dibbs_ecr_refiner_spark.operators import cdc
-from dibbs_ecr_refiner_spark.operators.skew import hot_key_report, salted_lww
 
 TS = dt.datetime(2026, 1, 1)
 SCHEMA = (
@@ -61,27 +59,3 @@ def test_compact_explicit_buckets_preserves_state(spark, tmp_path):
         by_bucket[f["bucket"]] = by_bucket.get(f["bucket"], 0) + 1
     assert all(n == 1 for n in by_bucket.values())
     assert res["compacted_buckets"] == 2
-
-
-def test_salted_lww_equals_plain_lww(spark):
-    rows = []
-    for i in range(500):  # one pathologically hot key + cold keys
-        rows.append(("hot", 0, "insert", "user", f"v{i}", None, TS + dt.timedelta(seconds=i), i))
-    rows += [(f"cold{i}", 0, "insert", "user", "x", None, TS, 1000 + i) for i in range(20)]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, op string, role string, text string, "
-        "tool string, ts timestamp, change_lsn long",
-    )
-    a = sorted(map(tuple, cdc.lww_resolve(df).collect()))
-    b = sorted(map(tuple, salted_lww(df).collect()))
-    assert a == b
-    hot = {r["text"] for r in salted_lww(df).where("conv_id='hot'").collect()}
-    assert hot == {"v499"}
-
-
-def test_hot_key_report(spark):
-    rows = [("hot", i) for i in range(90)] + [("cold", 0)] * 10
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int")
-    top = hot_key_report(df, top=1).collect()[0]
-    assert top["conv_id"] == "hot" and abs(top["share"] - 0.9) < 1e-9

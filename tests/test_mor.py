@@ -522,6 +522,35 @@ def test_feed_skips_maintenance_rewrites_without_losing_changes(spark, tmp_path)
     assert feed.poll().isEmpty()
 
 
+def test_feed_reads_superseded_delta_through_its_era_after_rename_then_fold(spark, tmp_path):
+    """A MOR delta written under column ``m``, then ``rename m -> meta``,
+    then a fold of every bucket: the fold prunes the delta's era from the
+    END manifest, but the span walk still delivers the delta file — it
+    must be read through the era recorded in the walked manifests, not by
+    the current name (which the file does not have)."""
+    from dibbs_ecr_refiner_spark.lake.feed import ChangeFeedReader
+    from dibbs_ecr_refiner_spark.lake.maintenance import compact
+
+    schema = SCHEMA.replace(" _deleted", " m string, _deleted")
+    rows = lambda *rs: spark.createDataFrame(  # noqa: E731
+        [(c, 0, TS, lsn, "user", "t", None, m, False) for (c, lsn, m) in rs], schema
+    )
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=2)
+    table.merge(rows(("c0", 1, "base")), "b0")
+    v1 = table.current_snapshot()["snapshot_id"]
+    feed = ChangeFeedReader(table, str(tmp_path / "cur.json"))
+    feed.poll()
+    feed.commit()
+
+    table.merge(rows(("c1", 2, "a")), "b1", mode="mor")
+    table.rename_column("m", "meta")
+    compact(table, buckets=[0, 1])
+
+    want = [("c1", "a")]
+    assert [(r["conv_id"], r["meta"]) for r in table.read_changes(v1).collect()] == want
+    assert [(r["conv_id"], r["meta"]) for r in feed.poll().collect()] == want
+
+
 def test_feed_expired_intermediate_falls_back_to_full_redelivery(spark, tmp_path):
     """When the span's manifests were expired, the feed over-delivers (the
     endpoint diff including rewrites) instead of silently losing changes."""
@@ -652,6 +681,28 @@ def test_mor_crash_resume_heals(spark, tmp_path, changes):
     stats = eng.replay(changes, mode="mor")
     assert stats.batches_skipped == 2 and stats.batches == PARAMS.n_batches - 2
     assert final_state_matches(table.read(), batch_oracle(changes, eng.plan))
+
+
+def test_rerun_after_crash_before_completion_fold_still_folds(spark, tmp_path, changes):
+    """A crash between the last batch commit and the completion fold
+    leaves every batch applied and the table all pending deltas. The rerun
+    applies no batch, yet must still fold: no delta file may remain and
+    the plain read equals the batch oracle, displays included."""
+    table, eng = _fresh(spark, tmp_path)
+
+    def crash(*_a, **_kw):
+        raise OSError("simulated crash before the completion fold")
+
+    eng.fold_deltas = crash
+    with pytest.raises(OSError):
+        eng.replay(changes)
+    del eng.fold_deltas
+    assert any(f.get("kind") == "delta" for f in table.current_snapshot()["files"])
+
+    stats = eng.replay(changes)
+    assert stats.batches == 0 and stats.batches_skipped == PARAMS.n_batches
+    assert not any(f.get("kind") == "delta" for f in table.current_snapshot()["files"])
+    assert _rows(table.read()) == _rows(batch_oracle(changes, eng.plan).select(*CMP_COLS))
 
 
 # ---------------- snapshot retention ----------------

@@ -179,25 +179,92 @@ def test_rename_era_projection_reads_old_files_by_field_id(spark, tmp_path):
     assert got == {"c1": "old-bytes", "c2": "new-bytes"}
 
 
-def test_batch_face_matches_read_changes(spark, tmp_path):
+def _span_mor_commit(spark, table):
+    table.merge(
+        _delta(spark, [("c3", 0, "c", 3, False), ("c1", 0, "a2", 4, False), ("c2", 0, None, 5, True)]),
+        "b1",
+        mode="mor",
+    )
+
+
+def _span_fold(spark, table):
+    table.merge(_delta(spark, [("c1", 0, "a2", 3, False)]), "b1", mode="mor")
+    maintenance.compact(table)
+    table.merge(_delta(spark, [("c4", 0, "d", 4, False)]), "b2", mode="mor")
+
+
+def _span_rename(spark, table):
+    # the fold of every bucket prunes the pre-rename era from the END
+    # manifest while the span still delivers the superseded delta
+    table.merge(_delta(spark, [("c1", 0, "pre", 3, False)]), "b1", mode="mor")
+    table.rename_column("text", "body")
+    maintenance.compact(table, buckets=list(range(table.num_buckets)))
+    renamed = spark.createDataFrame(
+        [("c5", 0, TS, 4, "user", "post", None, False)], SCHEMA.replace(" text ", " body ")
+    )
+    table.merge(renamed, "b2", mode="mor")
+
+
+def _span_drop(spark, table):
+    # a dropped-then-re-added name gets a fresh id: the pre-drop delta's
+    # `tool` bytes must read as NULL on every surface
+    table.merge(
+        spark.createDataFrame([("c1", 0, TS, 3, "user", "x", "old-tool", False)], SCHEMA), "b1", mode="mor"
+    )
+    table.drop_column("tool")
+    table.merge(
+        spark.createDataFrame([("c6", 0, TS, 4, "user", "y", "new-tool", False)], SCHEMA), "b2", mode="mor"
+    )
+
+
+def _span_rebucket(spark, table):
+    table.merge(_delta(spark, [("c1", 0, "a2", 3, False)]), "b1", mode="mor")
+    maintenance.rebucket(table, 8)
+    table.merge(_delta(spark, [("c7", 0, "e", 4, False)]), "b2", mode="mor")
+
+
+SPANS = {
+    "mor_commit": _span_mor_commit,
+    "fold": _span_fold,
+    "rename": _span_rename,
+    "drop": _span_drop,
+    "rebucket": _span_rebucket,
+    "tags": _span_mor_commit,
+}
+
+
+@pytest.mark.parametrize("span", sorted(SPANS))
+def test_batch_face_matches_read_changes(spark, tmp_path, span):
+    """Every read surface returns the same rows for the same snapshot
+    span: ``read_changes`` ≡ the ``lake_cdc`` batch scan ≡
+    ``ChangeFeedReader.poll``, for spans crossing a MOR commit, a fold, a
+    rename, a drop, a rebucket, and with tag endpoints."""
+    from dibbs_ecr_refiner_spark.lake.stream_source import scan
+
     root = str(tmp_path / "t")
     table = LakeTable(spark, root, num_buckets=4)
     table.merge(_delta(spark, [("c1", 0, "a", 1, False), ("c2", 0, "b", 2, False)]), "b0")
     v1 = table.current_snapshot()["snapshot_id"]
-    table.merge(_delta(spark, [("c3", 0, "c", 3, False), ("c1", 0, "a2", 4, False)]), "b1", mode="mor")
+    table.tag("start")
+    feed = ChangeFeedReader(table, str(tmp_path / "cursor"))
+    feed.poll()
+    feed.commit()
 
-    register(spark)
-    via_source = (
-        spark.read.format("lake_cdc").option("path", root).option("fromVersion", v1).load()
-    )
-    via_table = table.read_changes(v1)
+    SPANS[span](spark, table)
+    if span == "tags":
+        table.tag("end")
+        via_table = table.read_changes(None, from_tag="start", to_tag="end")
+        via_source = scan(spark, root, fromTag="start", toTag="end")
+    else:
+        via_table = table.read_changes(v1)
+        via_source = scan(spark, root, fromVersion=v1)
+    rows = lambda df: sorted(repr(tuple(r)) for r in df.collect())  # noqa: E731
     assert via_source.schema == via_table.schema
-    assert _key_set(via_source.collect()) == _key_set(via_table.collect())
+    assert rows(via_table) == rows(via_source) == rows(feed.poll())
     # time travel: toVersion pins the endpoint
-    at_v1 = (
-        spark.read.format("lake_cdc").option("path", root).option("toVersion", v1).load()
-    )
+    at_v1 = scan(spark, root, toVersion=v1)
     assert _key_set(at_v1.collect()) == {("c1", 0, 1), ("c2", 0, 2)}
+    assert rows(at_v1) == rows(table.read_changes(None, v1))
 
 
 def test_stream_agrees_with_poll_commit_feed(spark, tmp_path):

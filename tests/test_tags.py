@@ -198,33 +198,6 @@ def test_concurrent_taggers_with_different_names_both_land(spark, tmp_path):
     assert len(collisions) == 4
 
 
-def test_legacy_single_file_refs_migrate_on_first_write(spark, tmp_path):
-    """A pre-round-4 table carries one _refs.json; reads see it as-is and
-    the first tag mutation bursts it into per-tag files (legacy file
-    removed, nothing lost), including for the SparkSession-less resolver
-    the lake_cdc source uses."""
-    import json
-
-    from dibbs_ecr_refiner_spark.lake.stream_source import _resolve_tag
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=4)
-    table.merge(_delta(spark, [("c1", 0, "v1", 1)]), "b0")
-    table.merge(_delta(spark, [("c1", 0, "v2", 2)]), "b1")
-    with open(os.path.join(root, "_manifests", "_refs.json"), "w") as f:
-        json.dump({"tags": {"old-a": {"version": 1}, "old-b": {"version": 2}}}, f)
-
-    assert table.resolve_tag("old-a") == 1
-    assert _resolve_tag(root, "old-b") == 2
-
-    table.tag("new", version=2)  # first write migrates
-    assert not os.path.exists(os.path.join(root, "_manifests", "_refs.json"))
-    assert set(table.tags()) == {"old-a", "old-b", "new"}
-    assert _resolve_tag(root, "old-a") == 1  # now a per-tag file
-    table.delete_tag("old-a")
-    assert set(table.tags()) == {"old-b", "new"}
-
-
 def test_tag_names_are_validated_as_filenames(spark, tmp_path):
     table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     table.merge(_delta(spark, [("c1", 0, "v1", 1)]), "b0")
@@ -251,15 +224,16 @@ def test_delete_tag_validates_name_before_touching_paths(spark, tmp_path):
 
 
 def test_stream_source_tag_options_reject_traversal_names(spark, tmp_path):
-    from dibbs_ecr_refiner_spark.lake.stream_source import _resolve_tag
+    from dibbs_ecr_refiner_spark.lake.stream_source import LakeCdcBatchReader
 
-    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    root = str(tmp_path / "t")
+    table = LakeTable(spark, root, num_buckets=4)
     table.merge(_delta(spark, [("c1", 0, "v1", 1)]), "b0")
     table.tag("good")
-    assert _resolve_tag(str(tmp_path / "t"), "good") == 1
+    assert LakeCdcBatchReader({"path": root, "totag": "good"}).to == 1
     for bad in ("../v00000001", "a/b", ".hidden"):
         with pytest.raises(ValueError, match="invalid tag name"):
-            _resolve_tag(str(tmp_path / "t"), bad)
+            LakeCdcBatchReader({"path": root, "fromtag": bad})
 
 
 def test_tag_collision_message_survives_winner_deletion(spark, tmp_path, monkeypatch):
