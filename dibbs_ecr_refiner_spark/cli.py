@@ -405,12 +405,13 @@ def main(argv=None) -> int:
     r.add_argument("--config", default=None, help="config store root (default: built-in plan)")
     r.add_argument("--buckets", type=int, default=64)
     r.add_argument("--mode", choices=["auto", "cow", "mor"], default="auto",
-                   help="auto (default) picks the cheaper commit mode: mor throughout when "
-                        "the scheduled completion fold makes cow's rewrites double-work, "
-                        "cow only for 1-2 bulk batches; cow rewrites touched buckets; mor "
-                        "commits delta files resolved at read")
+                   help="auto (default) commits every batch as delta files (mor), folds "
+                        "over-threshold buckets every 8 batches and folds all pending "
+                        "deltas at the end; mor commits delta files resolved at read, "
+                        "folding only with --fold-every; cow rewrites touched buckets")
     r.add_argument("--fold-every", type=int, default=None,
-                   help="mor only: compact deltas every N committed batches")
+                   help="auto/mor: every N committed batches, fold the buckets over the "
+                        "should_fold threshold (auto default: 8)")
 
     c = sub.add_parser("compact", help="compact buckets / fold MOR deltas / GC tombstones")
     c.add_argument("--table", required=True)

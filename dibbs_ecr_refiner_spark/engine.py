@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .lake.stats import _ts_us
-from .lake.table import LakeTable
+from .lake.table import LakeTable, bucket_expr
 from .operators import cdc
 from .operators.enrich import enrich_displays
 from .operators.refine import compile_refinement
@@ -39,6 +39,41 @@ def _touched_and_hot(bucket_counts: dict[int, int]) -> tuple[list[int], list[int
     mean = sum(bucket_counts.values()) / len(bucket_counts)
     hot = sorted(b for b, n in bucket_counts.items() if n > 2 * mean)
     return touched, hot
+
+
+def _bucket_prepass(
+    changes: DataFrame, num_buckets: int, batch_col: str | None = None
+) -> dict:
+    """Per-bucket event count, max ``change_lsn`` and ts range of the raw
+    change rows, in ONE partial-aggregate job (column pruning keeps the
+    scan to conv_id + change_lsn + ts). With ``batch_col`` the grouping is
+    per (batch, bucket), so one job covers a whole replay.
+
+    Returns ``{batch id (None without batch_col): (counts, lsn_max,
+    ts_range)}``, each a dict keyed by bucket; a bucket whose ts is all
+    NULL has no range (leaving it out means "must-scan" at prune time)."""
+    keys = [F.col(batch_col)] if batch_col else []
+    rows = (
+        changes.groupBy(*keys, bucket_expr(num_buckets).alias("b"))
+        .agg(
+            F.count(F.lit(1)).alias("count"),
+            F.max("change_lsn").alias("lsn"),
+            F.min("ts").alias("ts_lo"),
+            F.max("ts").alias("ts_hi"),
+        )
+        .collect()
+    )
+    out: dict = {}
+    for r in rows:
+        counts, lsn_max, ts_range = out.setdefault(
+            r[batch_col] if batch_col else None, ({}, {}, {})
+        )
+        b = int(r["b"])
+        counts[b] = r["count"]
+        lsn_max[b] = int(r["lsn"])
+        if r["ts_lo"] is not None:
+            ts_range[b] = [_ts_us(r["ts_lo"]), _ts_us(r["ts_hi"])]
+    return out
 
 
 @dataclass
@@ -63,11 +98,10 @@ class ReplayStats:
 
     @property
     def events_per_sec_ingest(self) -> float:
-        """Throughput of the apply path alone — fold time excluded. The
-        number comparable with a pure-MOR replay's ingest rate: auto mode's
-        per-batch cost IS the MOR cost at steady state; the fold is the
-        separately-amortizable convergence sweep (same split the bench
-        reports for explicit MOR + fold_deltas)."""
+        """Throughput of the apply path alone — fold time excluded. Auto
+        mode commits every batch merge-on-read, so this is the MOR ingest
+        rate; the folds are the separately-amortizable convergence work
+        (same split the bench reports for explicit MOR + fold_deltas)."""
         ingest = self.seconds - self.fold_seconds
         return self.events / ingest if ingest > 0 else 0.0
 
@@ -152,37 +186,6 @@ class ReplayEngine:
     def plan(self) -> RefinePlan:
         return self._plan
 
-    # auto mode switches to merge-on-read once the table holds more than
-    # MOR_THRESHOLD× the batch's rows: COW rewrites O(touched buckets) per
-    # batch, so at steady state (small batches into a big table) it writes
-    # 14-18× more bytes than MOR (measured in BENCH.md); for bulk backfill
-    # (batch ≈ table) the rewrite IS the batch and COW's read-optimal files
-    # win. The estimate sums per-batch upsert counts from the manifest —
-    # an overcount when keys are re-updated, which only biases toward MOR
-    # in update-heavy regimes, exactly where MOR wins.
-    MOR_THRESHOLD = 2.0
-
-    def _live_rows_estimate(self) -> int:
-        snap = self.table.current_snapshot()
-        if not snap:
-            return 0
-        # maintenance rewrites (compact/fold/rebucket) register as applied
-        # batches whose rows_upserted is the ENTIRE rewritten bucket
-        # content — counting them would inflate the estimate by up to a
-        # table-size per maintenance pass and drift auto mode unboundedly
-        # MOR-biased. Skip anything flagged as a rewrite.
-        return sum(
-            max(0, r["rows_upserted"])
-            for r in snap["applied_batches"].values()
-            if not r.get("rewrite")
-        )
-
-    def _resolve_mode(self, mode: str, batch_rows: int) -> str:
-        if mode != "auto":
-            return mode
-        table_rows = self._live_rows_estimate()
-        return "mor" if table_rows > self.MOR_THRESHOLD * max(1, batch_rows) else "cow"
-
     def apply_batch(
         self,
         changes: DataFrame,
@@ -191,42 +194,18 @@ class ReplayEngine:
         hot: list[int] | None = None,
         bucket_lsn_max: dict[int, int] | None = None,
         bucket_ts_range: dict[int, list[int]] | None = None,
-        mode: str = "auto",
+        mode: str = "mor",
     ) -> dict:
+        if mode not in ("mor", "cow"):
+            raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
         if self.table.is_applied(batch_id):
             return {"skipped": True, "batch_id": batch_id}
         if touched is None:
-            # Touched + hot buckets, per-bucket applied-LSN maxes AND
-            # per-bucket ts ranges from a three-column scan of the raw batch
-            # (column pruning keeps this to conv_id+change_lsn+ts + a
-            # partial agg). replay() precomputes these for ALL batches in
-            # one pass instead.
-            from .lake.table import bucket_expr
-
-            counts = (
-                changes.groupBy(bucket_expr(self.table.num_buckets).alias("b"))
-                .agg(
-                    F.count(F.lit(1)).alias("count"),
-                    F.max("change_lsn").alias("lsn"),
-                    F.min("ts").alias("ts_lo"),
-                    F.max("ts").alias("ts_hi"),
-                )
-                .collect()
-            )
-            touched, hot = _touched_and_hot({r["b"]: r["count"] for r in counts})
-            bucket_lsn_max = {int(r["b"]): int(r["lsn"]) for r in counts}
-            # an all-NULL-ts bucket has no range to stamp; leaving the key
-            # out already means "must-scan" at prune time
-            bucket_ts_range = {
-                int(r["b"]): [_ts_us(r["ts_lo"]), _ts_us(r["ts_hi"])]
-                for r in counts
-                if r["ts_lo"] is not None
-            }
-            mode = self._resolve_mode(mode, sum(r["count"] for r in counts))
-        elif mode == "auto":
-            # caller precomputed buckets but not the row count — a pruned
-            # count on the batch is cheap relative to the merge itself
-            mode = self._resolve_mode(mode, changes.count())
+            # replay() precomputes these for ALL batches in one pass instead
+            counts, bucket_lsn_max, bucket_ts_range = _bucket_prepass(
+                changes, self.table.num_buckets
+            ).get(None, ({}, {}, {}))
+            touched, hot = _touched_and_hot(counts)
         # The batch is merged RAW: merge runs one LWW over (delta ∪ target)
         # — or over the delta alone in merge-on-read mode — and then the
         # guarded refinement pass over the fresh winners: exactly one
@@ -305,12 +284,6 @@ class ReplayEngine:
             max_buckets_per_commit=max_buckets_per_commit,
         )
 
-    def _pending_delta_buckets(self) -> list[int]:
-        snap = self.table.current_snapshot()
-        if not snap:
-            return []
-        return sorted({f["bucket"] for f in snap["files"] if f.get("kind", "base") == "delta"})
-
     def replay(
         self,
         changes: DataFrame,
@@ -323,25 +296,15 @@ class ReplayEngine:
         already recorded in the manifest are skipped — resuming after a
         crash replays only uncommitted work (exactly-once).
 
-        ``mode="mor"`` commits each batch as delta files (write cost
-        O(batch) instead of O(touched buckets) — the COW write
-        amplification is the dominant ingest cost when batches are small
-        relative to the table); ``fold_every=k`` compacts the deltas every
-        k committed batches so read-time merge cost stays bounded.
-        ``mode="auto"`` (default) resolves per batch: COW while the batch
-        is large relative to the table (bulk backfill), MOR once the table
-        dwarfs the batch (steady-state ingest, where COW's measured write
-        amplification is 14-18×). With ``final_fold="all"`` a lookahead
-        over the known batch list overrides the ramp: if any batch would
-        resolve MOR, the completion fold will rewrite its buckets anyway,
-        so every batch commits MOR and each row is written exactly twice
-        (ingest + fold) instead of the COW ramp's rewrite-then-fold
-        double-pay (see the cost model at the lookahead below). Mid-replay folding is DEMAND-driven:
-        after each MOR batch (checked every ``fold_every`` of them, default
-        8) only the buckets whose pending delta count exceeds the
-        ``should_fold`` threshold are compacted — read amplification stays
-        bounded without the old fold-everything sweep, whose cost at
-        steady state approached a table rewrite per cadence.
+        ``mode="auto"`` (default) commits every batch merge-on-read: delta
+        files, write cost O(batch) instead of O(touched buckets). Folding
+        is DEMAND-driven: after every ``fold_every`` (default 8) committed
+        batches only the buckets whose pending delta count exceeds the
+        ``should_fold`` threshold are compacted, so read amplification
+        stays bounded without a fold-everything sweep. ``mode="mor"``
+        commits the same delta files but folds only when ``fold_every`` is
+        given and never runs the completion fold; ``mode="cow"`` rewrites
+        the touched buckets on every commit.
 
         ``final_fold`` controls what a completed auto replay leaves behind:
         ``"all"`` (default) folds every pending delta bucket so plain
@@ -358,7 +321,7 @@ class ReplayEngine:
         touch only its own files; on an UNPARTITIONED frame each batch
         re-scans the full input — fine for small backfills, a full-scan-
         per-batch footgun at log scale. Prefer ``replay_path``."""
-        from .lake.table import bucket_expr
+        from .lake.maintenance import should_fold
 
         if final_fold not in ("all", "threshold", "none"):
             # a typo'd value would otherwise silently run the full
@@ -367,117 +330,54 @@ class ReplayEngine:
             raise ValueError(
                 f"final_fold must be 'all', 'threshold' or 'none', got {final_fold!r}"
             )
+        batch_mode = "mor" if mode == "auto" else mode
+        if mode == "auto" and fold_every is None:
+            fold_every = 8
         stats = ReplayStats()
         # one pass over (batch_col, bucket) for the event count, the batch
         # list, every batch's touched/hot bucket sets AND the true
         # per-bucket applied-LSN watermarks — replaces one driver job per
         # batch with a single partial-agg job
-        pre = (
-            changes.groupBy(
-                F.col(batch_col), bucket_expr(self.table.num_buckets).alias("b")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("count"),
-                F.max("change_lsn").alias("lsn"),
-                F.min("ts").alias("ts_lo"),
-                F.max("ts").alias("ts_hi"),
-            )
-            .collect()
-        )
-        stats.events = sum(r["count"] for r in pre)
-        by_batch: dict[str, dict[int, int]] = {}
-        lsn_by_batch: dict[str, dict[int, int]] = {}
-        ts_by_batch: dict[str, dict[int, list[int]]] = {}
-        for r in pre:
-            by_batch.setdefault(r[batch_col], {})[r["b"]] = r["count"]
-            lsn_by_batch.setdefault(r[batch_col], {})[int(r["b"])] = int(r["lsn"])
-            ts_by_batch.setdefault(r[batch_col], {})
-            if r["ts_lo"] is not None:  # all-NULL ts bucket: no range = must-scan
-                ts_by_batch[r[batch_col]][int(r["b"])] = [
-                    _ts_us(r["ts_lo"]),
-                    _ts_us(r["ts_hi"]),
-                ]
-        if mode == "auto" and fold_every is None:
-            fold_every = 8
-        # Completion-fold lookahead (the whole-replay form of the COW/MOR
-        # trade): with ``final_fold="all"`` the fold rewrites every bucket
-        # any MOR batch touches, so a COW batch in the SAME replay pays its
-        # table-so-far rewrite now AND the fold rewrites the result again —
-        # pure double-write. Cost model (equal batches of b rows, n
-        # batches): heuristic ramp ≈ (2n+3)·b rows written vs all-MOR+fold
-        # 2n·b, so once ANY batch would resolve MOR, committing every batch
-        # MOR is never worse and saves the whole ramp. replay() knows the
-        # batch list up front — simulate the per-batch heuristic on the
-        # known sizes; only replays that stay COW throughout (1-2 bulk
-        # batches: there COW genuinely wins, no fold happens) keep it.
-        # ``final_fold="threshold"``/``"none"`` keep the per-batch
-        # heuristic: no scheduled sweep, so COW's read-optimal commits are
-        # not thrown away. apply_batch() callers (no fold knowledge) are
-        # untouched.
-        force_mor = False
-        if mode == "auto" and final_fold == "all":
-            running = self._live_rows_estimate()
-            for bid in sorted(by_batch):
-                b = sum(by_batch[bid].values())
-                if running > self.MOR_THRESHOLD * max(1, b):
-                    force_mor = True
-                    break
-                running += b
+        pre = _bucket_prepass(changes, self.table.num_buckets, batch_col)
+        stats.events = sum(sum(counts.values()) for counts, _, _ in pre.values())
         t0 = time.time()
-        mor_batches = 0
-        for batch_id in sorted(by_batch):
-            touched, hot = _touched_and_hot(by_batch[batch_id])
+        for batch_id in sorted(pre):
+            counts, lsn_max, ts_range = pre[batch_id]
+            touched, hot = _touched_and_hot(counts)
             batch = changes.where(F.col(batch_col) == batch_id)
-            n_batch_events = sum(by_batch[batch_id].values())
-            batch_mode = (
-                "mor" if force_mor else self._resolve_mode(mode, n_batch_events)
-            )
             tb = time.time()
             res = self.apply_batch(
                 batch,
                 batch_id,
                 touched=touched,
                 hot=hot,
-                bucket_lsn_max=lsn_by_batch[batch_id],
-                bucket_ts_range=ts_by_batch[batch_id],
+                bucket_lsn_max=lsn_max,
+                bucket_ts_range=ts_range,
                 mode=batch_mode,
             )
             if res.get("skipped"):
                 stats.batches_skipped += 1
-            else:
-                stats.batches += 1
-                stats.batch_seconds.append(round(time.time() - tb, 3))
-                stats.batch_events.append(n_batch_events)
-                if batch_mode == "mor":
-                    mor_batches += 1
-                stats.lineage.append(res)
-                # demand-driven periodic fold: only when THIS batch was MOR
-                # (a non-MOR batch can't have advanced the counter — the old
-                # `mor_batches % k` check re-fired on every later COW batch
-                # while the count sat on a multiple) and only the buckets
-                # whose delta pile-up actually exceeds the threshold
-                if fold_every and batch_mode == "mor" and mor_batches % fold_every == 0:
-                    from .lake.maintenance import should_fold
-
-                    over = should_fold(self.table)
-                    if over:
-                        tf = time.time()
-                        self.fold_deltas(buckets=over)
-                        stats.fold_seconds += time.time() - tf
+                continue
+            stats.batches += 1
+            stats.batch_seconds.append(round(time.time() - tb, 3))
+            stats.batch_events.append(sum(counts.values()))
+            stats.lineage.append(res)
+            # demand-driven periodic fold: only the buckets whose delta
+            # pile-up actually exceeds the threshold
+            if fold_every and batch_mode == "mor" and stats.batches % fold_every == 0:
+                over = should_fold(self.table)
+                if over:
+                    tf = time.time()
+                    self.fold_deltas(buckets=over)
+                    stats.fold_seconds += time.time() - tf
         # Not gated on this call having applied a batch: a rerun after a
         # crash between the last commit and the fold must still fold.
         if mode == "auto" and final_fold != "none":
-            if final_fold == "threshold":
-                from .lake.maintenance import should_fold
-
-                pending = should_fold(self.table)
-            else:
-                # finish converged: fold any pending deltas (only their
-                # buckets) so a completed auto replay gives the COW
-                # guarantee — plain table.read() equals the batch oracle,
-                # displays included — while the per-batch writes kept MOR's
-                # O(batch) cost.
-                pending = self._pending_delta_buckets()
+            # "all" finishes converged (every pending delta bucket, so plain
+            # table.read() equals the batch oracle, displays included);
+            # "threshold" folds only the over-threshold buckets
+            kw = {"max_deltas_per_bucket": 0} if final_fold == "all" else {}
+            pending = should_fold(self.table, **kw)
             if pending:
                 tf = time.time()
                 self.fold_deltas(buckets=pending)

@@ -44,8 +44,8 @@ def compact(
     per group. Every intermediate snapshot is a valid table (the groups
     partition the bucket set, and an un-folded bucket still LWW-resolves
     at read time), a crash between groups leaves the completed groups
-    committed and the rest still pending (``should_fold`` /
-    ``_pending_delta_buckets`` re-derive them), and the final state is
+    committed and the rest still pending (``should_fold`` re-derives
+    them), and the final state is
     row-identical to a one-shot fold. Scratch per commit is O(k·bucket).
 
     Folding MOR deltas happens for free: ``table.read`` LWW-resolves them,

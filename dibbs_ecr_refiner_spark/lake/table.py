@@ -1079,8 +1079,6 @@ class LakeTable:
             "rows_deleted": int(n_del),
             "files_written": len(new_files),
             "buckets_touched": len(touched),
-            # rewrites re-count existing rows; live-row estimators skip them
-            **({"rewrite": True} if replace_buckets else {}),
         }
 
         files_out = carried + new_files

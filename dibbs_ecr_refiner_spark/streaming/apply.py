@@ -54,20 +54,19 @@ def stream_replay(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    mode: str = "auto",
+    mode: str = "mor",
     fold_every: int | None = None,
 ):
     """Tail ``log_path`` as a stream and MERGE each micro-batch.
 
     With ``available_now=True`` the query drains everything currently in
     the log and stops (the batch-replay analog, good for tests/backfill);
-    with False it runs continuously. ``mode="auto"`` (default, same rule
-    as batch replay) resolves per micro-batch: COW while the batch is
-    large relative to the table, MOR once the table dwarfs it — which for
-    a long-running stream means MOR (the low-latency choice: commit cost
-    O(micro-batch), independent of table size). Fold governance stays
-    explicit here (``fold_every`` epochs, or ``maintenance.should_fold``
-    out of band) — a continuous stream has no "completion" to fold at."""
+    with False it runs continuously. ``mode="mor"`` (default) commits each
+    micro-batch as delta files — commit cost O(micro-batch), independent
+    of table size; ``mode="cow"`` rewrites the touched buckets instead.
+    Fold governance stays explicit here (``fold_every`` epochs, or
+    ``maintenance.should_fold`` out of band) — a continuous stream has no
+    "completion" to fold at."""
     reader = spark.readStream.schema(CHANGE_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -154,37 +154,46 @@ def _added_kinds_per_commit(table, stats):
     return kinds_by_snapshot
 
 
-def test_auto_mode_switches_cow_to_mor_and_converges(spark, tmp_path, changes):
-    """Auto mode WITHOUT a scheduled completion fold (final_fold=
-    "threshold") keeps the per-batch heuristic: COW while the batch is
-    large relative to the table (bulk backfill), MOR once the table dwarfs
-    the batch — and read_refined() equals the batch oracle."""
+@pytest.mark.parametrize("final_fold", ["all", "threshold"])
+@pytest.mark.parametrize("n_batches", [1, 2])
+def test_auto_commits_mor_and_converges_on_fresh_small_log(
+    spark, tmp_path, n_batches, final_fold
+):
+    """Auto mode has one commit policy whatever the batch-to-table ratio:
+    even a 1-2 bulk-batch replay into an empty table commits every batch
+    merge-on-read. ``final_fold="all"`` then leaves no delta behind (plain
+    read equals the batch oracle, displays included); under either policy
+    read_refined() equals the batch oracle."""
     table, eng = _fresh(spark, tmp_path)
-    stats = eng.replay(changes, final_fold="threshold")
-    assert stats.batches == PARAMS.n_batches
-
-    # mode switching actually happened: the first batch(es) committed COW
-    # (no delta files at that snapshot), later batches committed deltas
+    log = generate_changes(
+        spark,
+        ChangeLogParams(
+            n_conversations=40, turns_per_conv=8, n_events=1000, n_batches=n_batches
+        ),
+    )
+    want = _rows(batch_oracle(log, eng.plan).select(*CMP_COLS))
+    stats = eng.replay(log, final_fold=final_fold)
+    assert stats.batches == n_batches
     kinds_by_snapshot = _added_kinds_per_commit(table, stats)
-    assert "base" in kinds_by_snapshot[0], "first batch into an empty table must be COW"
-    assert any("delta" in k for k in kinds_by_snapshot[1:]), "steady-state batches must be MOR"
-
-    assert final_state_matches(eng.read_refined(), batch_oracle(changes, eng.plan))
+    assert all(k == {"delta"} for k in kinds_by_snapshot), kinds_by_snapshot
+    if final_fold == "all":
+        assert not any(
+            f.get("kind", "base") == "delta" for f in table.current_snapshot()["files"]
+        )
+        assert _rows(table.read()) == want
+    assert _rows(eng.read_refined()) == want
 
 
 def test_auto_with_final_fold_resolves_all_mor_and_converges(spark, tmp_path, changes):
-    """Auto mode WITH the default completion fold: the lookahead sees the
-    table will outgrow the batches (some batch would resolve MOR, making
-    the fold inevitable), so every batch commits MOR — each row is written
-    at most twice (ingest + fold) instead of the COW ramp's
-    rewrite-then-fold double-pay — and the completed replay still gives
-    the COW guarantee: no pending deltas, plain read == batch oracle,
-    displays included."""
+    """Auto mode WITH the default completion fold over a multi-batch log:
+    every batch commits MOR — each row is written at most twice (ingest +
+    fold) — and the completed replay still gives the COW guarantee: no
+    pending deltas, plain read == batch oracle, displays included."""
     table, eng = _fresh(spark, tmp_path)
     stats = eng.replay(changes)  # default mode="auto", final_fold="all"
     assert stats.batches == PARAMS.n_batches
 
-    # lookahead fired: every ingest commit is a delta commit
+    # every ingest commit is a delta commit
     kinds_by_snapshot = _added_kinds_per_commit(table, stats)
     assert all(k == {"delta"} for k in kinds_by_snapshot), kinds_by_snapshot
 
@@ -193,26 +202,6 @@ def test_auto_with_final_fold_resolves_all_mor_and_converges(spark, tmp_path, ch
         f.get("kind", "base") == "delta" for f in table.current_snapshot()["files"]
     )
     assert _rows(table.read()) == _rows(batch_oracle(changes, eng.plan).select(*CMP_COLS))
-
-
-def test_auto_final_fold_small_replay_stays_cow(spark, tmp_path):
-    """A 1-2 bulk-batch replay stays COW under the lookahead (the
-    simulated heuristic never reaches MOR): COW genuinely wins there —
-    fewer total rows written than MOR + a whole-table fold — and no
-    completion fold is needed (nothing pending)."""
-    table, eng = _fresh(spark, tmp_path)
-    two = generate_changes(
-        spark,
-        ChangeLogParams(
-            n_conversations=40, turns_per_conv=8, n_events=1000, n_batches=2
-        ),
-    )
-    stats = eng.replay(two)  # default mode="auto", final_fold="all"
-    assert stats.batches == 2
-    kinds_by_snapshot = _added_kinds_per_commit(table, stats)
-    assert all(k == {"base"} for k in kinds_by_snapshot), kinds_by_snapshot
-    assert stats.fold_seconds == 0.0
-    assert _rows(table.read()) == _rows(batch_oracle(two, eng.plan).select(*CMP_COLS))
 
 
 def test_mor_replay_with_periodic_fold_matches_oracle(spark, tmp_path, changes):
@@ -738,31 +727,6 @@ def test_gc_preserves_time_travel_until_expiry(spark, tmp_path):
         table.read(version=1)
 
 
-def test_live_rows_estimate_ignores_maintenance_rewrites(spark, tmp_path, changes):
-    """compact/fold/rebucket register applied batches whose rows_upserted
-    is the full rewritten bucket content — the auto-mode size estimate
-    must not count them, or every maintenance pass inflates it by up to a
-    table size and the COW-vs-MOR threshold drifts MOR-biased forever."""
-    from dibbs_ecr_refiner_spark.lake import maintenance
-
-    table, eng = _fresh(spark, tmp_path)
-    eng.replay(changes, mode="mor")
-    before = eng._live_rows_estimate()
-    assert before > 0
-    maintenance.compact(table)
-    assert eng._live_rows_estimate() == before
-    maintenance.rebucket(table, 16)
-    assert eng._live_rows_estimate() == before
-    # sanity: the estimate would have at least doubled if rewrites counted
-    snap = table.current_snapshot()
-    rewritten = sum(
-        max(0, r["rows_upserted"])
-        for bid, r in snap["applied_batches"].items()
-        if r.get("rewrite")
-    )
-    assert rewritten > 0
-
-
 def test_auto_replay_final_fold_threshold_keeps_refined_read_converged(
     spark, tmp_path, changes
 ):
@@ -824,7 +788,7 @@ def test_continuous_pipeline_threshold_final_fold_long_replay(spark, tmp_path, c
     # demand-driven + disk-bounded compose: a later operator decision to
     # converge the pipeline's table uses the grouped fold, and the result
     # is the full COW guarantee (all base files, displays included)
-    pending = eng._pending_delta_buckets()
+    pending = should_fold(table, max_deltas_per_bucket=0)
     if pending:
         res = eng.fold_deltas(max_buckets_per_commit=2)
         if res.get("grouped"):

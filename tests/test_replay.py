@@ -27,6 +27,11 @@ PARAMS = ChangeLogParams(
     n_batches=5,
 )
 
+CMP_COLS = [
+    "conv_id", "turn_idx", "role", "text", "tool", "ts",
+    "_outcome", "_matched_code", "_matched_display",
+]
+
 
 @pytest.fixture(scope="module")
 def changes(spark):
@@ -39,6 +44,10 @@ def changes(spark):
 def _fresh(spark, tmp_path):
     table = LakeTable(spark, str(tmp_path / "lake"), num_buckets=8)
     return table, ReplayEngine(spark, table, default_plan())
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(*CMP_COLS).collect())
 
 
 def test_generator_has_required_hazards(changes):
@@ -87,6 +96,9 @@ def test_resume_after_crash_midway(spark, tmp_path, changes):
     stats = eng.replay(changes)  # resume: skips 2 committed, applies the rest
     assert stats.batches_skipped == 2 and stats.batches == PARAMS.n_batches - 2
     assert final_state_matches(table.read(), batch_oracle(changes, eng.plan))
+    # the completion fold also folds the deltas the pre-crash batches left
+    assert not any(f.get("kind") == "delta" for f in table.current_snapshot()["files"])
+    assert _rows(table.read()) == _rows(batch_oracle(changes, eng.plan).select(*CMP_COLS))
 
 
 def test_schema_evolution_mid_replay(spark, tmp_path, changes):
@@ -212,6 +224,14 @@ def test_items_prune_through_replay_matches_oracle(spark, tmp_path):
         .count()
     )
     assert bad == 0
+
+
+def test_apply_batch_takes_mor_or_cow_only(spark, tmp_path, changes):
+    """"auto" names replay's fold policy; a single batch commits MOR or COW."""
+    table, eng = _fresh(spark, tmp_path)
+    with pytest.raises(ValueError, match="mode"):
+        eng.apply_batch(changes, "b0", mode="auto")
+    assert table._current_version() is None
 
 
 def test_replay_rejects_misspelled_final_fold(spark, tmp_path, changes):
