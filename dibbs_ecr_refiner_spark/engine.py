@@ -235,8 +235,7 @@ class ReplayEngine:
             # (converging to the batch oracle's global view)
             post = lambda d: enrich_displays(refine(d), plan)  # noqa: E731
         else:
-            # identical to enrich_displays(..., narrative=False), with the
-            # config display Column prebuilt once per engine
+            # the config display only, its Column prebuilt once per engine
             cfg = self._cfg_display
             post = lambda d: refine(d).withColumn("_matched_display", cfg)  # noqa: E731
         return self.table.merge(

@@ -22,6 +22,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from . import meta
 from .table import LakeTable
 
 
@@ -104,7 +105,7 @@ def compact(
     # winners are PERSISTed so the display-enrichment pass — whose
     # narrative-index branch is a second consumer of the same subtree —
     # reads them once instead of re-running the scan + reduce, and the
-    # rewrite commits with assume_reduced=True so merge skips its own
+    # rewrite commits with mode="rewrite" so merge skips its own
     # (redundant) re-reduce of already-unique rows.
     df = table.read(buckets=buckets, include_tombstones=True)
     from pyspark import StorageLevel
@@ -119,23 +120,11 @@ def compact(
         out = post(out)
 
     batch_id = f"compact-{snap['snapshot_id']}-{int(time.time() * 1000)}"
-    # replace_buckets: the filtered read IS the new bucket content (rows are
-    # already LWW winners); merge handles file layout + snapshot commit.
-    # advance_watermarks=False: rewriting old content applies no new events,
-    # so per-bucket watermarks must not be inflated to the table max.
+    # A rewrite commit: the filtered read IS the new bucket content (rows
+    # are already LWW winners); merge lays out the files, stamps their
+    # footer stats and leaves the watermarks alone.
     try:
-        res = table.merge(
-            out,
-            batch_id,
-            touched_buckets=buckets,
-            replace_buckets=True,
-            advance_watermarks=False,
-            assume_reduced=True,
-            # Maintenance is the one pass that pays per-file footer reads:
-            # stamp min/max stats so reads can skip the rewritten files
-            # (point lookups + read_since) — the ingest path never does.
-            collect_stats=True,
-        )
+        res = table.merge(out, batch_id, touched_buckets=buckets, mode="rewrite")
     finally:
         df.unpersist()
     res["compacted_buckets"] = len(buckets)
@@ -149,7 +138,6 @@ def expire_snapshots(table: LakeTable, keep_last: int = 5) -> dict:
     are reclaimed by the next ``gc_orphans`` (which scans every RETAINED
     manifest, so retained history stays readable)."""
     import os
-    import re
 
     cur = table._current_version()
     if cur is None:
@@ -159,13 +147,9 @@ def expire_snapshots(table: LakeTable, keep_last: int = 5) -> dict:
     # and its data files survive until the tag is deleted.
     pinned = {int(t["version"]) for t in table.tags().values()}
     expired = 0
-    for fn in sorted(os.listdir(table._manifest_dir)):
-        m = re.fullmatch(r"v(\d{8})\.json", fn)
-        if not m:
-            continue
-        v = int(m.group(1))
+    for v in meta.versions(table.root):
         if v != cur and v <= cur - keep_last and v not in pinned:
-            os.remove(os.path.join(table._manifest_dir, fn))
+            os.remove(os.path.join(table._manifest_dir, f"v{v:08d}.json"))
             expired += 1
     return {"expired": expired, "keep_last": keep_last, "current": cur, "pinned": sorted(pinned)}
 
@@ -179,17 +163,14 @@ def _retained_references(table: LakeTable) -> tuple[set[str], set[str]]:
     also sweep segments orphaned by expire/abort/conflict."""
     import json
     import os
-    import re
 
     from . import manifests as _mf
 
     refs: set[str] = set()
     seg_refs: set[str] = set()
-    for fn in os.listdir(table._manifest_dir):
-        if not re.fullmatch(r"v\d{8}\.json", fn):
-            continue
+    for v in meta.versions(table.root):
         try:
-            with open(os.path.join(table._manifest_dir, fn)) as f:
+            with open(os.path.join(table._manifest_dir, f"v{v:08d}.json")) as f:
                 raw = json.load(f)
             seg_refs.update(_mf.segment_refs(raw))
             snap = _mf.inflate(table._manifest_dir, raw)
@@ -276,7 +257,7 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
     }
 
 
-def rebucket(table: LakeTable, new_num_buckets: int, post=None) -> dict:
+def rebucket(table: LakeTable, new_num_buckets: int) -> dict:
     """Partition evolution (≙ Iceberg partition-spec evolution): rewrite
     the table under a new ``num_buckets``. A bucket count sized for 1 TB
     strangles a 100 TB table (each MERGE's per-bucket files grow without
@@ -286,10 +267,11 @@ def rebucket(table: LakeTable, new_num_buckets: int, post=None) -> dict:
     layout; pending MOR deltas are resolved and folded in on the way.
 
     Watermarks: old per-bucket watermarks are keyed by dead bucket ids;
-    every new bucket inherits the MINIMUM old watermark (each new bucket
-    mixes rows from many old buckets, so the only claim that stays true
-    per-bucket is the weakest one — conservative, GC-safe: min_safe_gc_lsn
-    is unchanged by the rewrite)."""
+    the rewrite commit (``merge(mode="rewrite")``) sees the bucket count
+    change and gives every new bucket the MINIMUM old watermark (each new
+    bucket mixes rows from many old buckets, so the only claim that stays
+    true per-bucket is the weakest one — conservative, GC-safe:
+    min_safe_gc_lsn is unchanged by the rewrite)."""
     snap = table.current_snapshot()
     if snap is None:
         return {"skipped": True, "reason": "no snapshot"}
@@ -300,26 +282,16 @@ def rebucket(table: LakeTable, new_num_buckets: int, post=None) -> dict:
         return {"skipped": True, "reason": "empty table"}
 
     # same shape as compact: resolved read (partial reduce before the
-    # exchange), post over the winners, assume_reduced rewrite
+    # exchange), then a rewrite commit under the new bucket count
     df = table.read(include_tombstones=True)
-    if post is not None:
-        df = post(df)
-    wm_vals = [int(v) for v in snap["watermarks"].values()]
-    floor_wm = min(wm_vals) if wm_vals else -1
-    new_wm = {str(b): floor_wm for b in range(int(new_num_buckets))}
-
     old_n = table.num_buckets
     table.num_buckets = int(new_num_buckets)
     try:
         res = table.merge(
             df,
-            batch_id=f"rebucket-{snap['snapshot_id']}-{old_n}to{new_num_buckets}",
+            f"rebucket-{snap['snapshot_id']}-{old_n}to{new_num_buckets}",
             touched_buckets=old_buckets,
-            replace_buckets=True,
-            advance_watermarks=False,
-            watermarks_override=new_wm,
-            assume_reduced=True,
-            collect_stats=True,
+            mode="rewrite",
         )
     except Exception:
         table.num_buckets = old_n
@@ -372,20 +344,15 @@ def verify_table(table: LakeTable) -> dict:
     "issues": [str...]} — empty issues on a healthy table."""
     import json as _json
     import os
-    import re
 
     from . import manifests as _mf
 
     issues: list[str] = []
     snaps: dict[int, dict] = {}
     raws: dict[int, dict] = {}
-    for fn in sorted(os.listdir(table._manifest_dir)):
-        m = re.fullmatch(r"v(\d{8})\.json", fn)
-        if not m:
-            continue
-        v = int(m.group(1))
+    for v in meta.versions(table.root):
         try:
-            with open(os.path.join(table._manifest_dir, fn)) as f:
+            with open(os.path.join(table._manifest_dir, f"v{v:08d}.json")) as f:
                 raw = _json.load(f)
         except (OSError, _json.JSONDecodeError) as exc:
             issues.append(f"v{v}: manifest unreadable: {exc}")

@@ -50,6 +50,16 @@ def current_version(root: str) -> int | None:
         return None
 
 
+_VERSION_FILE = re.compile(r"v(\d{8})\.json")
+
+
+def versions(root: str) -> list[int]:
+    """Every retained snapshot version (published or staged), ascending."""
+    return sorted(
+        int(m.group(1)) for fn in os.listdir(manifest_dir(root)) if (m := _VERSION_FILE.fullmatch(fn))
+    )
+
+
 def snapshot(root: str, version: int | None = None) -> dict | None:
     """A retained snapshot (default: the current one), inflated to the
     inline ``files`` / ``applied_batches`` shape; None for a table with no

@@ -4,8 +4,8 @@ bookkeeping of refiner/app/lambda/lambda_function.py:276-295, generalized
 to file-granular pruning metadata).
 
 EXACT (footer-read) stats are stamped only by maintenance rewrites
-(compact / fold / rebucket pass ``collect_stats=True`` to
-``LakeTable.merge``). The ingest hot path stamps a CONSERVATIVE ``ts``
+(compact / fold / rebucket commit through ``LakeTable.merge(mode=
+"rewrite")``). The ingest hot path stamps a CONSERVATIVE ``ts``
 range on merge-on-read delta entries instead: the replay pre-pass
 aggregation already computes each bucket's min/max event ts per batch — a
 superset of the winners the delta file holds — so fresh deltas are

@@ -75,7 +75,7 @@ from pyspark.sql import types as T
 
 # Manifest file-level min/max stats (≙ Iceberg data-file column stats).
 # EXACT stats are stamped only on maintenance rewrites (compact/fold/
-# rebucket pass collect_stats=True); the ingest hot path stamps a
+# rebucket commit with mode="rewrite"); the ingest hot path stamps a
 # CONSERVATIVE per-bucket ts range on MOR delta entries, computed by the
 # caller's pre-pass aggregation (bucket_ts_range) — either way the MERGE
 # finalize stays a single os.replace with zero per-file footer reads
@@ -128,9 +128,8 @@ class IncompatibleSchemaChange(Exception):
     """A delta changed an existing column's type — hard fail on commit."""
 
 
-def bucket_expr(num_buckets: int, col: str | None = "conv_id", lit: str | None = None):
-    src = F.lit(lit) if col is None else F.col(col)
-    return F.pmod(F.xxhash64(src), F.lit(num_buckets)).cast("int")
+def bucket_expr(num_buckets: int):
+    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(num_buckets)).cast("int")
 
 
 def _widen_nullability(old: T.DataType, new: T.DataType) -> T.DataType | None:
@@ -164,30 +163,6 @@ def _widen_nullability(old: T.DataType, new: T.DataType) -> T.DataType | None:
             return None
         return T.MapType(kt, vt, old.valueContainsNull or new.valueContainsNull)
     return old if old == new else None
-
-
-def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
-    """Additive schema merge: old column order preserved, new columns
-    appended nullable. Type changes are incompatible (nullability-only
-    differences widen, see ``_widen_nullability``)."""
-    by_name = {f.name: f for f in new.fields}
-    fields: list[T.StructField] = []
-    for f in old.fields:
-        nf = by_name.get(f.name)
-        if nf is None:
-            fields.append(f)
-            continue
-        dt = _widen_nullability(f.dataType, nf.dataType)
-        if dt is None:
-            raise IncompatibleSchemaChange(
-                f"column {f.name!r}: {f.dataType.simpleString()} -> {nf.dataType.simpleString()}"
-            )
-        fields.append(T.StructField(f.name, dt, f.nullable or nf.nullable))
-    old_names = {f.name for f in old.fields}
-    for f in new.fields:
-        if f.name not in old_names:
-            fields.append(T.StructField(f.name, f.dataType, True))
-    return T.StructType(fields)
 
 
 # ---------------- field ids (≙ Iceberg's schema-evolution mechanism) ----
@@ -251,6 +226,30 @@ def _merge_columns(
         if widened != registered:
             by_name_out[f.name]["type"] = widened.jsonValue()
     return out, next_id
+
+
+def _next_manifest(
+    snap: dict | None, cols: list[dict], next_id: int, sv: int, files: list[dict], **fields
+) -> dict:
+    """The manifest that follows ``snap`` (None: the first one) with the
+    logical columns ``cols`` under era ``sv`` and the live ``files``, plus
+    ``fields``. The era map is bounded to the eras a live file still reads
+    through."""
+    live_svs = {str(f["sv"]) for f in files}
+    eras = snap["schemas"] if snap else {}
+    return {
+        "format_version": FORMAT_VERSION,
+        "snapshot_id": snap["snapshot_id"] + 1 if snap else 1,
+        "parent_id": snap["snapshot_id"] if snap else None,
+        "committed_at": time.time(),
+        "schema": json.loads(_cols_to_schema(cols).json()),
+        "schema_version": sv,
+        "columns": cols,
+        "next_column_id": next_id,
+        "schemas": {**{k: c for k, c in eras.items() if k in live_svs}, str(sv): cols},
+        "files": files,
+        **fields,
+    }
 
 
 class LakeTable:
@@ -561,22 +560,11 @@ class LakeTable:
         """Commit a metadata-only schema change (drop/rename): no data
         files touched, schema_version bumped, era map retains every era a
         live file still reads through."""
-        new_sv = snap["schema_version"] + 1
-        live_svs = {str(f["sv"]) for f in snap["files"]}
         manifest = {
             **snap,
-            "snapshot_id": snap["snapshot_id"] + 1,
-            "parent_id": snap["snapshot_id"],
-            "committed_at": time.time(),
-            "schema": json.loads(_cols_to_schema(new_cols).json()),
-            "schema_version": new_sv,
-            "columns": new_cols,
-            "next_column_id": next_id,
-            "schemas": {
-                **{sv: c for sv, c in snap["schemas"].items() if sv in live_svs},
-                str(new_sv): new_cols,
-            },
-            **(extra or {}),
+            **_next_manifest(
+                snap, new_cols, next_id, snap["schema_version"] + 1, snap["files"], **(extra or {})
+            ),
         }
         # Metadata-only commit: zero data files changed, so every file
         # segment is carried by path — the commit writes ONE small
@@ -686,13 +674,9 @@ class LakeTable:
         """Snapshot-chain metadata table (≙ Iceberg ``history``/
         ``snapshots``): one row per retained snapshot, from the immutable
         manifest files — driver-side metadata only, no data-file reads."""
-        import re
-
         rows = []
-        for fn in sorted(os.listdir(self._manifest_dir)):
-            if not re.fullmatch(r"v\d{8}\.json", fn):
-                continue
-            s = self.snapshot(int(fn[1:-5]))
+        for v in meta.versions(self.root):
+            s = self.snapshot(v)
             n_delta = sum(1 for x in s["files"] if x.get("kind", "base") == "delta")
             rows.append(
                 (
@@ -774,17 +758,12 @@ class LakeTable:
         delta: DataFrame,
         batch_id: str,
         touched_buckets: list[int] | None = None,
-        replace_buckets: bool = False,
         post_reduce=None,
         hot_buckets: list[int] | None = None,
         bucket_lsn_max: dict[int, int] | None = None,
         bucket_ts_range: dict[int, list[int]] | None = None,
-        advance_watermarks: bool = True,
         mode: str = "cow",
-        watermarks_override: dict[str, int] | None = None,
         publish: bool = True,
-        collect_stats: bool = False,
-        assume_reduced: bool = False,
     ) -> dict:
         """Exactly-once LWW MERGE of a prepared delta.
 
@@ -800,9 +779,22 @@ class LakeTable:
         ``mode="mor"``: only the batch's own winners are written, as delta
         files resolved at read time — write cost O(batch). Exactly-once,
         watermark, and lineage semantics are identical in both modes.
+        ``mode="rewrite"``: a maintenance rewrite (compaction fold,
+        rebucket). ``delta`` holds ≤1 row per key and is the whole new
+        content of ``touched_buckets`` (required), so neither the old files
+        nor an LWW reduce take part. The new files are flagged ``rewrite``
+        (change feeds skip them) and carry exact footer stats. Watermarks
+        stay as they are — rewriting old content applies no new events —
+        except across a bucket-count change (``self.num_buckets`` differs
+        from the parent's), where every bucket gets the parent's minimum
+        watermark: old bucket ids mean nothing under the new layout, and
+        the weakest per-bucket claim is the only one still true for each
+        new bucket (``min_safe_gc_lsn`` is unchanged).
         """
-        if mode not in ("cow", "mor"):
+        if mode not in ("cow", "mor", "rewrite"):
             raise ValueError(f"unknown merge mode {mode!r}")
+        if mode == "rewrite" and touched_buckets is None:
+            raise ValueError('mode="rewrite" needs touched_buckets')
         # Defensive inflate: current_snapshot() already inflates, but a
         # caller racing through merge_with_retry may hand us a raw on-disk
         # snapshot dict; inflation is idempotent either way.
@@ -844,28 +836,24 @@ class LakeTable:
             # (incl. a re-added dropped name) get fresh ids — old bytes in
             # un-rewritten files stay invisible because reads resolve by id.
             cols, next_id, snap_files = snap["columns"], snap["next_column_id"], snap["files"]
-            schemas = snap["schemas"]
             new_cols, next_id = _merge_columns(cols, next_id, delta_schema)
             new_schema = _cols_to_schema(new_cols)
             new_sv = snap["schema_version"] + (1 if new_cols != cols else 0)
-            if mode == "mor" and not replace_buckets:
-                # merge-on-read: existing files are untouched (all carried);
-                # the batch's winners land beside them as delta files.
-                old_files, carried = [], snap_files
-            else:
-                # replace_buckets: the delta IS the new content of the touched
-                # buckets (compaction/GC path) — don't union the old files.
-                old_files = (
-                    []
-                    if replace_buckets
-                    else [f for f in snap_files if f["bucket"] in set(touched)]
-                )
-                carried = [f for f in snap_files if f["bucket"] not in set(touched)]
+            # cow: the touched buckets' files join the reduce and are
+            # replaced; mor: every file is carried and the winners land
+            # beside them as delta files; rewrite: the delta IS the new
+            # content of the touched buckets, so their files are replaced
+            # without being read.
+            touched_set = set(touched)
+            old_files = [f for f in snap_files if f["bucket"] in touched_set] if mode == "cow" else []
+            carried = (
+                snap_files if mode == "mor" else [f for f in snap_files if f["bucket"] not in touched_set]
+            )
         else:
             new_cols = _schema_to_cols(delta_schema)
             next_id = len(new_cols) + 1
             new_schema = _cols_to_schema(new_cols)
-            new_sv, old_files, carried, schemas = 1, [], [], {}
+            new_sv, old_files, carried = 1, [], []
 
         cols = [f.name for f in new_schema.fields]
 
@@ -883,7 +871,7 @@ class LakeTable:
         if old_files:
             # era-aware: a renamed column's old physical name is resolved
             # by field id, then _conform pads columns the delta introduced
-            sides.append(_conform(self._read_files(old_files, snap["columns"], schemas)))
+            sides.append(_conform(self._read_files(old_files, snap["columns"], snap["schemas"])))
         unioned = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
 
         # ONE exchange for the whole merge (guide §2.4 — two operations
@@ -924,10 +912,9 @@ class LakeTable:
         )
         n_out = max(self.spark.sparkContext.defaultParallelism, len(touched))
         work = work.repartition(n_out, F.col("_bucket"), F.col("_salt"))
-        # assume_reduced: the caller guarantees ≤1 row per (conv_id,
-        # turn_idx) — maintenance rewrites feed already-LWW-resolved
-        # content, so re-reducing here would sort+aggregate the full
-        # rewrite for identical winners (the old shape paid exactly that).
+        # A rewrite feeds already-LWW-resolved content (≤1 row per
+        # (conv_id, turn_idx)), so re-reducing it would sort+aggregate the
+        # full rewrite for identical winners.
         # Grouping-key ORDER is chosen so the SortAggregate's output
         # ordering (_bucket, conv_id, turn_idx, _salt) has the file-layout
         # sort (_bucket, conv_id, turn_idx) as a prefix — the staged
@@ -937,7 +924,7 @@ class LakeTable:
         # is a set, so winners are unchanged.
         merged = (
             work
-            if assume_reduced
+            if mode == "rewrite"
             else lww_resolve(work, key=("_bucket", *KEY, "_salt"), order=ORDER)
         )
         if post_reduce is not None:
@@ -977,7 +964,6 @@ class LakeTable:
         # footer reads; row counts come from the in-flight Observation).
         # The manifest then references files at their nested final paths.
         t_files = time.time()
-        new_version = (snap["snapshot_id"] + 1) if snap else 1
         commit_rel = f"data/c{token}"
         commit_dir = os.path.join(self.root, commit_rel)
         os.replace(staging, commit_dir)
@@ -997,7 +983,7 @@ class LakeTable:
                         "sv": new_sv,
                         "bytes": ent.stat().st_size,
                     }
-                    if mode == "mor" and not replace_buckets:
+                    if mode == "mor":
                         entry["kind"] = "delta"
                         # Ingest-path ts skipping with ZERO footer reads:
                         # the caller's pre-pass aggregation already knows
@@ -1012,16 +998,16 @@ class LakeTable:
                         # by bucket hash.
                         if bucket_ts_range and b in bucket_ts_range:
                             entry["stats"] = {"ts": list(bucket_ts_range[b])}
-                    if replace_buckets:
-                        # maintenance rewrite (compaction / rebucket): same
-                        # logical content in new files — change-feed readers
-                        # skip these so a fold doesn't re-deliver the table
+                    if mode == "rewrite":
+                        # same logical content in new files — change-feed
+                        # readers skip these so a fold doesn't re-deliver
+                        # the table
                         entry["rewrite"] = True
                     new_files.append(entry)
-        if collect_stats:
-            # Maintenance rewrites only (compact/fold): stamp per-file
-            # min/max so reads can skip files. Deliberately NOT done on the
-            # ingest hot path — see the STATS_COLS note at the top.
+        if mode == "rewrite":
+            # Maintenance rewrites only: stamp per-file min/max so reads
+            # can skip files. Deliberately NOT done on the ingest hot path
+            # — see the file-stats note at the top.
             # Footer reads are independent driver-side I/O — a small thread
             # pool overlaps them instead of paying one serial open+parse
             # per file (a big fold rewrites hundreds of files).
@@ -1049,18 +1035,14 @@ class LakeTable:
         # max(change_lsn) (the replay pre-pass computes it in the same agg
         # as the bucket counts); without it fall back to the batch-global
         # lsn_max, which overstates cold buckets but stays GC-safe because
-        # batches commit in contiguous LSN order. Maintenance rewrites
-        # (compaction) pass advance_watermarks=False: rewriting old content
-        # applies no new events.
-        # watermarks_override: the caller rewrites the whole mapping — used
-        # by maintenance.rebucket, where old bucket ids stop meaning
-        # anything and every new bucket inherits a conservative watermark.
-        watermarks = (
-            dict(watermarks_override)
-            if watermarks_override is not None
-            else (dict(snap["watermarks"]) if snap else {})
-        )
-        if stats["n"] and advance_watermarks and watermarks_override is None:
+        # batches commit in contiguous LSN order. A rewrite advances none;
+        # across a bucket-count change it floors them (see the docstring).
+        watermarks = dict(snap["watermarks"]) if snap else {}
+        if mode == "rewrite":
+            if snap and snap["num_buckets"] != self.num_buckets:
+                floor = min((int(v) for v in watermarks.values()), default=-1)
+                watermarks = {str(b): floor for b in range(self.num_buckets)}
+        elif stats["n"]:
             for b in touched:
                 applied_lsn = (
                     bucket_lsn_max.get(b, int(stats["lsn_max"]))
@@ -1069,7 +1051,21 @@ class LakeTable:
                 )
                 watermarks[str(b)] = max(int(watermarks.get(str(b), -1)), int(applied_lsn))
 
+        # this batch's registry entry is added below, once the manifest
+        # has claimed its snapshot id
         applied = dict(snap["applied_batches"]) if snap else {}
+        manifest = _next_manifest(
+            snap,
+            new_cols,
+            next_id,
+            new_sv,
+            carried + new_files,
+            num_buckets=self.num_buckets,
+            watermarks=watermarks,
+            applied_batches=applied,
+            dropped_columns=snap.get("dropped_columns", []) if snap else [],
+        )
+        new_version = manifest["snapshot_id"]
         n_del = int(stats["n_del"] or 0)
         applied[batch_id] = {
             "snapshot_id": new_version,
@@ -1081,32 +1077,10 @@ class LakeTable:
             "buckets_touched": len(touched),
         }
 
-        files_out = carried + new_files
-        live_svs = {str(f["sv"]) for f in files_out}
-        manifest = {
-            "format_version": FORMAT_VERSION,
-            "snapshot_id": new_version,
-            "parent_id": snap["snapshot_id"] if snap else None,
-            "committed_at": time.time(),
-            "schema": json.loads(new_schema.json()),
-            "schema_version": new_sv,
-            "columns": new_cols,
-            "next_column_id": next_id,
-            # era map bounded: only eras a live file still reads through
-            "schemas": {
-                **{sv: c for sv, c in schemas.items() if sv in live_svs},
-                str(new_sv): new_cols,
-            },
-            "num_buckets": self.num_buckets,
-            "files": files_out,
-            "watermarks": watermarks,
-            "applied_batches": applied,
-            "dropped_columns": snap.get("dropped_columns", []) if snap else [],
-        }
         # Segmented commit: only the buckets this commit touched get their
         # file segment rewritten; every other bucket's segment is carried
         # by path — metadata write cost O(touched), not O(all files). A
-        # COW/replace commit changes exactly `touched`; MOR delta files
+        # COW/rewrite commit changes exactly `touched`; MOR delta files
         # land inside `touched` too; a rebucket changes num_buckets, which
         # deflate detects and rewrites everything.
         changed = set(touched) | {int(f["bucket"]) for f in new_files}

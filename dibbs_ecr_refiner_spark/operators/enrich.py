@@ -20,11 +20,14 @@ left join keyed on (conv_id, code). Both are conv_id-clustered, so at a
 real table layout (bucketed by conv_id) AQE keeps the exchange local; the
 index side is tiny (≤ |keep codes| rows per conversation).
 
-Enrichment is recomputed on every merge over the touched buckets (a
-conversation lives wholly in its bucket), so a narrative turn arriving in a
-later batch back-fills earlier rows' displays — converging to the batch
-oracle's global view. The recompute is idempotent: display is a pure
-function of (config, live conversation content).
+A merge-on-read batch fills only the config display (its batch cannot see
+narrative turns outside itself). Both sources are recomputed over whole
+conversations at fold time and in ``ReplayEngine.read_refined`` (and on a
+copy-on-write merge, over the touched buckets — a conversation lives wholly
+in its bucket), so a narrative turn arriving in a later batch back-fills
+earlier rows' displays — converging to the batch oracle's global view. The
+recompute is idempotent: display is a pure function of (config, live
+conversation content).
 """
 
 from __future__ import annotations
@@ -96,21 +99,13 @@ def narrative_index(df: DataFrame, plan: RefinePlan) -> DataFrame | None:
     )
 
 
-def enrich_displays(df: DataFrame, plan: RefinePlan, narrative: bool = True) -> DataFrame:
+def enrich_displays(df: DataFrame, plan: RefinePlan) -> DataFrame:
     """Recompute ``_matched_display`` for every row from both sources:
     ``coalesce(config display, narrative-index display)``. Rows without a
     matched code keep NULL. Pure function of (config, conversation content)
-    — safe to re-run on carried rows during a MERGE.
-
-    ``narrative=False`` fills from the config map only (no index subtree,
-    no join). Used on the merge-on-read ingest path, where the per-batch
-    display is batch-local anyway (a later batch's narrative turn can't be
-    seen) and the converged value is recomputed at fold / ``read_refined``
-    time regardless — the index+join there would be dead work: it doubles
-    the batch pipeline (the index branch re-evaluates the LWW aggregation
-    subtree) for a column the convergence pass overwrites."""
+    — safe to re-run on carried rows during a MERGE."""
     cfg = config_display_expr(plan)
-    idx = narrative_index(df, plan) if narrative else None
+    idx = narrative_index(df, plan)
     if idx is None:
         return df.withColumn("_matched_display", cfg)
     cols = df.columns

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from dibbs_ecr_refiner_spark.lake.table import (
     IncompatibleSchemaChange,
     LakeTable,
-    _merge_schemas,
+    _merge_columns,
 )
 
 TS = dt.datetime(2026, 1, 1)
@@ -328,10 +328,10 @@ def test_rename_under_mor_deltas_and_compaction(spark, tmp_path):
 def test_incompatible_type_change_fails(spark):
     import pyspark.sql.types as T
 
-    old = T.StructType([T.StructField("a", T.StringType())])
+    old = [{"id": 1, "name": "a", "type": T.StringType().jsonValue()}]
     new = T.StructType([T.StructField("a", T.LongType())])
     with pytest.raises(IncompatibleSchemaChange):
-        _merge_schemas(old, new)
+        _merge_columns(old, 2, new)
 
 
 def test_nullability_only_difference_widens_not_fails(spark, tmp_path):
@@ -369,8 +369,9 @@ def test_nullability_only_difference_widens_not_fails(spark, tmp_path):
     # read-back shape: everything nullable (what compact/fold feeds merge)
     df2 = table.read(include_tombstones=True, resolve_deltas=False)
     assert df2.schema["items"].dataType != item(False)  # round-trip widened
-    table.merge(df2, "b2", touched_buckets=[0, 1, 2, 3], replace_buckets=True,
-                advance_watermarks=False, assume_reduced=True)
+    with pytest.raises(ValueError, match="touched_buckets"):
+        table.merge(df2, "b2", mode="rewrite")
+    table.merge(df2, "b2", touched_buckets=[0, 1, 2, 3], mode="rewrite")
 
     snap = table.current_snapshot()
     ids2 = {c["name"]: c["id"] for c in snap["columns"]}
@@ -502,21 +503,35 @@ def test_corrupt_record_quarantine_csv(spark, tmp_path):
 # ---------------- round-2 hardening ----------------
 
 
-def test_no_driver_side_footer_reads():
+def test_no_driver_side_footer_reads(spark, tmp_path, monkeypatch):
     """INGEST finalize must stay O(1) in file count: no per-file parquet
-    footer reads and no per-file renames on the driver. The footer reader
-    that stamps data-skipping stats lives in lake/stats.py and runs only
-    when a MAINTENANCE rewrite opts in — so this module stays pyarrow-free
-    and merge's collect_stats must default off."""
-    import inspect
+    footer reads on the driver. The footer reader that stamps data-skipping
+    stats lives in lake/stats.py (this module stays pyarrow-free) and runs
+    only on a MAINTENANCE rewrite: COW and MOR merges call it 0 times,
+    compaction at least once."""
     import pathlib
 
     import dibbs_ecr_refiner_spark.lake.table as mod
+    from dibbs_ecr_refiner_spark.lake import maintenance
 
     src = pathlib.Path(mod.__file__).read_text()
     assert "read_metadata" not in src
     assert "pyarrow" not in src
-    assert inspect.signature(mod.LakeTable.merge).parameters["collect_stats"].default is False
+
+    calls = []
+    real = mod.file_column_stats
+
+    def counted(path):
+        calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(mod, "file_column_stats", counted)
+    table = mk(spark, tmp_path, [("c1", 0, "a", 1, False, None), ("c2", 0, "b", 2, False, None)])
+    table.merge(_delta(spark, [("c2", 0, "b2", 3, False, None)]), "b1")
+    table.merge(_delta(spark, [("c1", 0, "a2", 4, False, None)]), "b2", mode="mor")
+    assert calls == []
+    maintenance.compact(table)
+    assert len(calls) >= 1
 
 
 def test_lake_meta_and_stream_source_stay_sparksession_free():
@@ -634,7 +649,7 @@ def test_per_bucket_watermarks_are_true_maxima(spark, tmp_path):
     assert wm == per
 
 
-def test_compaction_does_not_advance_watermarks(spark, tmp_path):
+def test_compaction_leaves_watermarks_unchanged(spark, tmp_path):
     from dibbs_ecr_refiner_spark.lake.maintenance import compact
 
     table = mk(spark, tmp_path, [("c1", 0, "x", 7, False, None)])

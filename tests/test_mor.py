@@ -360,6 +360,53 @@ def test_rebucket_preserves_state_and_lww_continuity(spark, tmp_path, changes):
     )
 
 
+def test_crash_mid_rebucket_resumes(spark, tmp_path, changes):
+    """Crash inside a rebucket, after its files are written but before the
+    snapshot commit: the handle keeps the old bucket count, the table
+    reads and verifies as before, GC reclaims the orphaned commit dir, and
+    the rerun lands with every new bucket at the old minimum watermark."""
+    import os
+
+    from dibbs_ecr_refiner_spark.lake.maintenance import (
+        gc_orphans,
+        min_safe_gc_lsn,
+        rebucket,
+        verify_table,
+    )
+
+    table, eng = _fresh(spark, tmp_path)
+    eng.replay(changes, mode="mor")  # leaves pending deltas
+    snap = table.current_snapshot()
+    before = _rows(table.read())
+    floor = min(int(v) for v in snap["watermarks"].values())
+    data_dirs = set(os.listdir(table._data_dir))
+
+    def crash(*_a, **_kw):
+        raise OSError("simulated crash before the rebucket commit")
+
+    table._commit = crash
+    with pytest.raises(OSError):
+        rebucket(table, 16)
+    del table._commit
+
+    assert table.num_buckets == 8
+    assert table.current_snapshot()["snapshot_id"] == snap["snapshot_id"]
+    assert _rows(table.read()) == before
+    assert verify_table(table)["issues"] == []
+    orphans = set(os.listdir(table._data_dir)) - data_dirs
+    assert len(orphans) == 1, "the rebucket's commit dir is left unreferenced"
+    assert gc_orphans(table, min_age_sec=0)["removed_dirs"] >= 1
+    assert not orphans & set(os.listdir(table._data_dir))
+
+    res = rebucket(table, 16)
+    assert res["num_buckets"] == 16 and not res.get("skipped")
+    wm = table.current_snapshot()["watermarks"]
+    assert wm == {str(b): floor for b in range(16)}
+    assert min_safe_gc_lsn(table) == floor
+    assert _rows(table.read()) == before
+    assert verify_table(table)["ok"]
+
+
 def test_rebucket_same_count_is_noop(spark, tmp_path):
     from dibbs_ecr_refiner_spark.lake.maintenance import rebucket
 
@@ -641,7 +688,7 @@ def test_chaos_interleaved_modes_and_maintenance_match_oracle(spark, tmp_path, c
             if over:
                 compact(table, buckets=over, post=lambda d: d)
         if i == 2:
-            rebucket(table, 16, post=None)
+            rebucket(table, 16)
         if i == 3:
             eng.fold_deltas()
             expire_snapshots(table, keep_last=2)
