@@ -68,7 +68,7 @@ def cmd_compact(args) -> dict:
     from dibbs_ecr_refiner_spark.lake.table import LakeTable
 
     spark = _spark(args)
-    table = LakeTable(spark, args.table, num_buckets=args.buckets)
+    table = LakeTable(spark, args.table)
     gc_below = min_safe_gc_lsn(table) if args.gc_tombstones else None
     post = None
     if args.config:
@@ -165,7 +165,7 @@ def cmd_changes(args) -> dict:
     from dibbs_ecr_refiner_spark.lake.table import LakeTable
 
     spark = _spark(args)
-    table = LakeTable(spark, args.table, num_buckets=args.buckets)
+    table = LakeTable(spark, args.table)
     feed = table.read_changes(
         args.from_version, args.to_version, from_tag=args.from_tag, to_tag=args.to_tag
     )
@@ -249,7 +249,7 @@ def cmd_tail(args) -> dict:
     from dibbs_ecr_refiner_spark.lake.table import LakeTable, _ts_us
 
     spark = _spark(args)
-    table = LakeTable(spark, args.table, num_buckets=args.buckets)
+    table = LakeTable(spark, args.table)
     since = dt.datetime.fromisoformat(args.since)
     snap = table.current_snapshot()
     total = len(snap["files"]) if snap else 0
@@ -280,7 +280,7 @@ def cmd_gc(args) -> dict:
     from dibbs_ecr_refiner_spark.lake.table import LakeTable
 
     spark = _spark(args)
-    table = LakeTable(spark, args.table, num_buckets=args.buckets)
+    table = LakeTable(spark, args.table)
     res = gc_orphans(table, min_age_sec=args.min_age)
     return {"cmd": "gc", **res}
 
@@ -322,7 +322,7 @@ def cmd_refine_one(args) -> dict:
         if args.config
         else default_plan()
     )
-    table = LakeTable(spark, args.table, num_buckets=args.buckets)
+    table = LakeTable(spark, args.table)
     cur = table.read_conversation(args.conv, include_tombstones=True)
     payload = [c for c in ("conv_id", "turn_idx", "role", "text", "tool", "extra", "items") if c in cur.columns]
     before = cur.select(
@@ -365,7 +365,7 @@ def cmd_show(args) -> dict:
     from dibbs_ecr_refiner_spark.lake.table import LakeTable
 
     spark = _spark(args)
-    table = LakeTable(spark, args.table, num_buckets=args.buckets)
+    table = LakeTable(spark, args.table)
     snap = table.current_snapshot()
     live = table.read().count()
     return {
@@ -415,18 +415,15 @@ def main(argv=None) -> int:
 
     c = sub.add_parser("compact", help="compact buckets / fold MOR deltas / GC tombstones")
     c.add_argument("--table", required=True)
-    c.add_argument("--buckets", type=int, default=64)
     c.add_argument("--gc-tombstones", action="store_true")
     c.add_argument("--config", default=None,
                    help="config store root: re-enrich displays while folding deltas")
 
     s = sub.add_parser("show", help="table status from the current snapshot")
     s.add_argument("--table", required=True)
-    s.add_argument("--buckets", type=int, default=64)
 
     gc = sub.add_parser("gc", help="remove orphaned/unreferenced data files")
     gc.add_argument("--table", required=True)
-    gc.add_argument("--buckets", type=int, default=64)
     gc.add_argument("--min-age", type=float, default=3600.0)
 
     e = sub.add_parser("events", help="config-mutation audit log")
@@ -466,7 +463,6 @@ def main(argv=None) -> int:
     )
     ro.add_argument("--table", required=True)
     ro.add_argument("--conv", required=True, help="conversation id to simulate on")
-    ro.add_argument("--buckets", type=int, default=64)
     ro.add_argument("--config", default=None, help="config store root (default: built-in plan)")
     ro.add_argument("--config-version", type=int, default=None,
                     help="store version to simulate (default: active)")
@@ -475,13 +471,11 @@ def main(argv=None) -> int:
 
     tl = sub.add_parser("tail", help="rows updated since a timestamp (stats-pruned read)")
     tl.add_argument("--table", required=True)
-    tl.add_argument("--buckets", type=int, default=64)
     tl.add_argument("--since", required=True, help="ISO timestamp, e.g. 2026-01-20T00:00:00")
     tl.add_argument("--out", default=None, help="optional parquet dir to write the tail")
 
     ch = sub.add_parser("changes", help="incremental scan: rows added between snapshots")
     ch.add_argument("--table", required=True)
-    ch.add_argument("--buckets", type=int, default=64)
     ch.add_argument("--from-version", type=int, default=None)
     ch.add_argument("--to-version", type=int, default=None)
     ch.add_argument("--from-tag", default=None, help="resolve the low endpoint via a named ref")

@@ -19,61 +19,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lake.stats import _ts_us
-from .lake.table import LakeTable, bucket_expr
+from .lake.table import LakeTable, Prepass
 from .operators import cdc
 from .operators.enrich import enrich_displays
 from .operators.refine import compile_refinement
 from .plans.config import RefinePlan
 
 CHANGE_COLS = ("conv_id", "turn_idx", "op", "role", "text", "tool", "ts", "change_lsn")
-
-
-def _touched_and_hot(bucket_counts: dict[int, int]) -> tuple[list[int], list[int]]:
-    """Hot = a bucket carrying >2× the mean delta rows (the cheap pre-pass
-    hot-key detection of SURVEY §4 item 1); hot buckets get salted parallel
-    writes, cold ones stay one-file-per-bucket."""
-    touched = sorted(bucket_counts)
-    if not touched:
-        return [], []
-    mean = sum(bucket_counts.values()) / len(bucket_counts)
-    hot = sorted(b for b, n in bucket_counts.items() if n > 2 * mean)
-    return touched, hot
-
-
-def _bucket_prepass(
-    changes: DataFrame, num_buckets: int, batch_col: str | None = None
-) -> dict:
-    """Per-bucket event count, max ``change_lsn`` and ts range of the raw
-    change rows, in ONE partial-aggregate job (column pruning keeps the
-    scan to conv_id + change_lsn + ts). With ``batch_col`` the grouping is
-    per (batch, bucket), so one job covers a whole replay.
-
-    Returns ``{batch id (None without batch_col): (counts, lsn_max,
-    ts_range)}``, each a dict keyed by bucket; a bucket whose ts is all
-    NULL has no range (leaving it out means "must-scan" at prune time)."""
-    keys = [F.col(batch_col)] if batch_col else []
-    rows = (
-        changes.groupBy(*keys, bucket_expr(num_buckets).alias("b"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.max("change_lsn").alias("lsn"),
-            F.min("ts").alias("ts_lo"),
-            F.max("ts").alias("ts_hi"),
-        )
-        .collect()
-    )
-    out: dict = {}
-    for r in rows:
-        counts, lsn_max, ts_range = out.setdefault(
-            r[batch_col] if batch_col else None, ({}, {}, {})
-        )
-        b = int(r["b"])
-        counts[b] = r["count"]
-        lsn_max[b] = int(r["lsn"])
-        if r["ts_lo"] is not None:
-            ts_range[b] = [_ts_us(r["ts_lo"]), _ts_us(r["ts_hi"])]
-    return out
 
 
 @dataclass
@@ -172,15 +124,12 @@ class ReplayEngine:
         self.spark = spark
         self.table = table
         self._plan = plan
-        # The compiled refinement and the config display map are pure
-        # Column expression trees (DataFrame-independent) — build them once
-        # per engine, not once per batch: per-batch reconstruction was
-        # ~0.2 s of py4j driver chatter (profiled, OPTIMIZATION_r06.md).
-        # ``plan`` is read-only so they can never drift from it.
+        # The compiled refinement is a pure Column expression tree
+        # (DataFrame-independent) — build it once per engine, not once per
+        # batch: per-batch reconstruction was ~0.2 s of py4j driver chatter
+        # (profiled, OPTIMIZATION_r06.md). ``plan`` is read-only so it can
+        # never drift from it.
         self._refine = compile_refinement(plan, guarded=True)
-        from .operators.enrich import config_display_expr
-
-        self._cfg_display = config_display_expr(plan)
 
     @property
     def plan(self) -> RefinePlan:
@@ -190,22 +139,16 @@ class ReplayEngine:
         self,
         changes: DataFrame,
         batch_id: str,
-        touched: list[int] | None = None,
-        hot: list[int] | None = None,
-        bucket_lsn_max: dict[int, int] | None = None,
-        bucket_ts_range: dict[int, list[int]] | None = None,
+        prepass: Prepass | None = None,
         mode: str = "mor",
     ) -> dict:
+        """Refine and commit one batch of raw change rows through
+        ``LakeTable.merge`` — the one exactly-once gate: an applied
+        ``batch_id`` returns ``{"skipped": True}``. ``prepass`` is the
+        batch's ``table.prepass`` entry (``replay`` computes every batch's
+        in one job); without it ``merge`` computes it."""
         if mode not in ("mor", "cow"):
             raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
-        if self.table.is_applied(batch_id):
-            return {"skipped": True, "batch_id": batch_id}
-        if touched is None:
-            # replay() precomputes these for ALL batches in one pass instead
-            counts, bucket_lsn_max, bucket_ts_range = _bucket_prepass(
-                changes, self.table.num_buckets
-            ).get(None, ({}, {}, {}))
-            touched, hot = _touched_and_hot(counts)
         # The batch is merged RAW: merge runs one LWW over (delta ∪ target)
         # — or over the delta alone in merge-on-read mode — and then the
         # guarded refinement pass over the fresh winners: exactly one
@@ -235,19 +178,10 @@ class ReplayEngine:
             # (converging to the batch oracle's global view)
             post = lambda d: enrich_displays(refine(d), plan)  # noqa: E731
         else:
-            # the config display only, its Column prebuilt once per engine
-            cfg = self._cfg_display
-            post = lambda d: refine(d).withColumn("_matched_display", cfg)  # noqa: E731
-        return self.table.merge(
-            delta,
-            batch_id,
-            touched_buckets=touched,
-            post_reduce=post,
-            hot_buckets=hot,
-            bucket_lsn_max=bucket_lsn_max,
-            bucket_ts_range=bucket_ts_range,
-            mode=mode,
-        )
+            # every MOR winner is fresh, so the guarded refinement alone
+            # gives it the config display
+            post = refine
+        return self.table.merge(delta, batch_id, post_reduce=post, prepass=prepass, mode=mode)
 
     def read_refined(self) -> DataFrame:
         """Fully-converged live view: table read (LWW-resolves any
@@ -337,29 +271,19 @@ class ReplayEngine:
         # list, every batch's touched/hot bucket sets AND the true
         # per-bucket applied-LSN watermarks — replaces one driver job per
         # batch with a single partial-agg job
-        pre = _bucket_prepass(changes, self.table.num_buckets, batch_col)
-        stats.events = sum(sum(counts.values()) for counts, _, _ in pre.values())
+        pre = self.table.prepass(changes, batch_col)
+        stats.events = sum(sum(p.counts.values()) for p in pre.values())
         t0 = time.time()
         for batch_id in sorted(pre):
-            counts, lsn_max, ts_range = pre[batch_id]
-            touched, hot = _touched_and_hot(counts)
             batch = changes.where(F.col(batch_col) == batch_id)
             tb = time.time()
-            res = self.apply_batch(
-                batch,
-                batch_id,
-                touched=touched,
-                hot=hot,
-                bucket_lsn_max=lsn_max,
-                bucket_ts_range=ts_range,
-                mode=batch_mode,
-            )
+            res = self.apply_batch(batch, batch_id, prepass=pre[batch_id], mode=batch_mode)
             if res.get("skipped"):
                 stats.batches_skipped += 1
                 continue
             stats.batches += 1
             stats.batch_seconds.append(round(time.time() - tb, 3))
-            stats.batch_events.append(sum(counts.values()))
+            stats.batch_events.append(sum(pre[batch_id].counts.values()))
             stats.lineage.append(res)
             # demand-driven periodic fold: only the buckets whose delta
             # pile-up actually exceeds the threshold

@@ -38,8 +38,8 @@ that references them (a crash or SnapshotConflict in between leaves an
 orphaned segment — swept by ``maintenance.gc_orphans`` with its normal
 age guard, exactly like orphaned data files). ``expire_snapshots`` only
 removes ``v*.json``; a segment lives until NO retained snapshot references
-it. Legacy inline manifests load unchanged and are upgraded to segments
-on the first commit that follows them.
+it. Every format-2 manifest is segmented: an on-disk manifest with an
+inline ``files`` list is rejected on load.
 
 Pure stdlib on purpose: the streaming source's driver/executor code loads
 snapshots through this module without a SparkSession.
@@ -93,13 +93,18 @@ def _write_segment(manifest_dir: str, obj) -> str:
 
 def inflate(manifest_dir: str, snap: dict | None) -> dict | None:
     """Resolve a raw on-disk snapshot to the in-memory shape: inline
-    ``files`` and ``applied_batches`` reconstructed from segments.
-    Idempotent — legacy inline manifests and already-inflated dicts pass
-    through unchanged. File-entry dicts are shallow-copied so callers may
-    extend them (e.g. stats stamping on fresh entries) without poisoning
-    the immutable segment cache."""
-    if snap is None or "files" in snap:
-        return snap
+    ``files`` and ``applied_batches`` reconstructed from segments. A raw
+    manifest that inlines ``files`` is not a segmented manifest and raises
+    ValueError. File-entry dicts are shallow-copied so callers may extend
+    them (e.g. stats stamping on fresh entries) without poisoning the
+    immutable segment cache."""
+    if snap is None:
+        return None
+    if "files" in snap:
+        raise ValueError(
+            f"snapshot v{snap.get('snapshot_id')} inlines its file list; "
+            "manifests are segmented (file_segments) — rewrite the table"
+        )
     snap = dict(snap)
     files: list[dict] = []
     segs = snap.get("file_segments", {})
@@ -118,15 +123,15 @@ def deflate(
     manifest_dir: str,
     manifest: dict,
     parent: dict | None,
-    changed_buckets: set[int] | None,
+    changed_buckets: set[int],
 ) -> dict:
     """The on-disk form of ``manifest``: ``files`` split into per-bucket
     segments (buckets outside ``changed_buckets`` reuse the parent
     snapshot's segment by path — zero bytes written for them) and
-    ``applied_batches`` spilled past the inline tail. ``changed_buckets=
-    None`` means every bucket changed (bootstrap / legacy upgrade).
-    Parent segments are only reusable when the bucket layout is the same
-    (a rebucket renumbers buckets, so nothing carries over)."""
+    ``applied_batches`` spilled past the inline tail. ``parent`` is the
+    INFLATED parent snapshot, or None for the first commit. Parent
+    segments are only reusable when the bucket layout is the same (a
+    rebucket renumbers buckets, so nothing carries over)."""
     disk = dict(manifest)
 
     files = disk.pop("files")
@@ -136,11 +141,7 @@ def deflate(
     parent_segs = dict((parent or {}).get("file_segments") or {})
     if parent is not None and parent.get("num_buckets") != manifest.get("num_buckets"):
         parent_segs = {}
-    changed = (
-        set(by_bucket)
-        if changed_buckets is None or not parent_segs
-        else {int(b) for b in changed_buckets}
-    )
+    changed = {int(b) for b in changed_buckets} if parent_segs else set(by_bucket)
     segs: dict[str, dict] = {}
     for b, fs in sorted(by_bucket.items()):
         prev = parent_segs.get(str(b))
@@ -151,19 +152,14 @@ def deflate(
     disk["file_segments"] = segs
 
     applied = disk.pop("applied_batches")
-    applied_segs = list((parent or {}).get("applied_segments") or [])
-    if parent is not None and "applied_recent" in parent and "applied_batches" in parent:
-        # O(1) tail derivation: an INFLATED parent carries both the full
-        # registry and its inline tail — the new tail is the parent's tail
-        # plus this commit's new batch ids. Never touches the segment
-        # chain, so commit cost stays flat at 10^6 applied batches.
-        recent = dict(parent["applied_recent"])
-        recent.update({k: v for k, v in applied.items() if k not in parent["applied_batches"]})
-    else:
-        spilled: set[str] = set()
-        for rel in applied_segs:
-            spilled.update(_load_segment(manifest_dir, rel))
-        recent = {k: v for k, v in applied.items() if k not in spilled}
+    parent = parent or {}
+    applied_segs = list(parent.get("applied_segments", []))
+    # O(1) tail derivation: the inflated parent carries both the full
+    # registry and its inline tail — the new tail is the parent's tail plus
+    # this commit's new batch ids. Never touches the segment chain, so
+    # commit cost stays flat at 10^6 applied batches.
+    recent = dict(parent.get("applied_recent", {}))
+    recent.update({k: v for k, v in applied.items() if k not in parent.get("applied_batches", {})})
     if len(recent) > APPLIED_SPILL_AT:
         applied_segs.append(_write_segment(manifest_dir, recent))
         recent = {}

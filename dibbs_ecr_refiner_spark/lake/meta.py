@@ -150,18 +150,18 @@ class Span:
     num_buckets: int | None
 
 
-def span(root: str, frm: int | None, to: int | None = None, skip_rewrites: bool = True) -> Span:
+def span(root: str, frm: int | None, to: int | None = None) -> Span:
     """Files added in the snapshot span ``(frm, to]`` (``to`` default: the
     current snapshot; ``frm`` None or 0: the whole table as of ``to``).
 
-    With ``skip_rewrites`` the walk visits every manifest in the span and
-    keeps each NON-rewrite file added anywhere in it: maintenance rewrites
-    (fold, compact, rebucket) carry the same logical content, so a fold
-    between polls yields nothing — while delta files an in-span fold
-    superseded are still delivered (the endpoint diff alone would lose
-    them; they stay readable while their manifests are retained). If an
-    intermediate manifest was expired, the span falls back to the endpoint
-    diff INCLUDING rewrites: a full redelivery an idempotent downstream
+    The walk visits every manifest in the span and keeps each NON-rewrite
+    file added anywhere in it: maintenance rewrites (fold, compact,
+    rebucket) carry the same logical content, so a fold between polls
+    yields nothing — while delta files an in-span fold superseded are
+    still delivered (the endpoint diff alone would lose them; they stay
+    readable while their manifests are retained). If an intermediate
+    manifest was expired, the span falls back to the endpoint diff
+    INCLUDING rewrites: a full redelivery an idempotent downstream
     absorbs, never silent loss."""
     new = snapshot(root, to)
     if new is None:
@@ -169,9 +169,6 @@ def span(root: str, frm: int | None, to: int | None = None, skip_rewrites: bool 
     if not frm:
         return Span(list(new["files"]), new, new["schemas"], new["num_buckets"])
     old_paths = {f["path"] for f in snapshot(root, frm)["files"]}
-    diff = Span([f for f in new["files"] if f["path"] not in old_paths], new, new["schemas"], new["num_buckets"])
-    if not skip_rewrites:
-        return diff
     added: dict[str, dict] = {}
     eras = dict(new["schemas"])
     num_buckets = new["num_buckets"]
@@ -188,7 +185,8 @@ def span(root: str, frm: int | None, to: int | None = None, skip_rewrites: bool 
                     added.setdefault(f["path"], f)
             prev = {f["path"] for f in s["files"]}
     except FileNotFoundError:
-        return diff
+        diff = [f for f in new["files"] if f["path"] not in old_paths]
+        return Span(diff, new, new["schemas"], new["num_buckets"])
     return Span(list(added.values()), new, eras, num_buckets)
 
 

@@ -5,12 +5,13 @@ to file-granular pruning metadata).
 
 EXACT (footer-read) stats are stamped only by maintenance rewrites
 (compact / fold / rebucket commit through ``LakeTable.merge(mode=
-"rewrite")``). The ingest hot path stamps a CONSERVATIVE ``ts``
-range on merge-on-read delta entries instead: the replay pre-pass
-aggregation already computes each bucket's min/max event ts per batch — a
-superset of the winners the delta file holds — so fresh deltas are
-``read_since``/``sinceTs``-prunable with zero extra jobs and zero footer
-reads (pinned by tests/test_lake.py::test_no_driver_side_footer_reads).
+"rewrite")``). Every ingest merge stamps a CONSERVATIVE ``ts`` range
+on its merge-on-read delta entries instead: the batch's pre-pass
+aggregate (``LakeTable.prepass``) already computes each bucket's min/max
+event ts — a superset of the winners the delta file holds — so fresh
+deltas are ``read_since``/``sinceTs``-prunable with zero extra jobs and
+zero footer reads (pinned by
+tests/test_lake.py::test_no_driver_side_footer_reads).
 Readers treat a missing stats block, or a missing per-column range, as
 "must scan", so mixed stamped/unstamped tables are always correct.
 

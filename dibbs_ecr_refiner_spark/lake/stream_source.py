@@ -106,7 +106,6 @@ def _plan_partitions(
     root: str,
     frm: int,
     to: int,
-    skip_rewrites: bool,
     split_bytes: int,
     pin_cols: list[dict] | None,
     prune: dict,
@@ -119,7 +118,7 @@ def _plan_partitions(
     NULL-fills, and a column added after the pin is invisible until the
     stream restarts (≙ Iceberg's schema-pinned incremental scan).
     ``prune`` holds ``meta.prune``'s key / ts bounds."""
-    span = meta.span(root, frm, to, skip_rewrites)
+    span = meta.span(root, frm, to)
     files = meta.prune(span.files, span.num_buckets, **prune)
     cols = pin_cols if pin_cols is not None else span.snap["columns"]
     if not files:
@@ -183,10 +182,6 @@ def _version_opt(options, root: str, version_key: str, tag_key: str) -> int:
     return meta.endpoint(root, v, options.get(tag_key) or None, (version_key, tag_key)) or 0
 
 
-def _skip_rewrites(options) -> bool:
-    return str(options.get("skiprewrites", "true")).lower() != "false"
-
-
 def _parse_ts_opt(v) -> int:
     """A ``sinceTs`` option value as epoch-µs: integer epoch-µs verbatim,
     else an ISO-8601 timestamp (naive = UTC, same convention the stats
@@ -219,7 +214,6 @@ class LakeCdcStreamReader(DataSourceStreamReader):
 
     def __init__(self, options):
         self.root = options["path"]
-        self.skip_rewrites = _skip_rewrites(options)
         self.split_bytes = _split_bytes(options)
         self.max_versions = int(options.get("maxversionsperbatch", 0) or 0)
         self._prune = {
@@ -257,7 +251,6 @@ class LakeCdcStreamReader(DataSourceStreamReader):
             self.root,
             frm,
             to,
-            self.skip_rewrites,
             self.split_bytes,
             self._pin_cols,
             self._prune,
@@ -292,7 +285,6 @@ class LakeCdcBatchReader(DataSourceReader):
         self.to = _version_opt(options, self.root, "toversion", "totag") or (
             meta.current_version(self.root) or 0
         )
-        self.skip_rewrites = _skip_rewrites(options)
         self.split_bytes = _split_bytes(options)
         self._prune: dict = {}
 
@@ -326,7 +318,7 @@ class LakeCdcBatchReader(DataSourceReader):
         if self.to <= self.frm:
             return [LakeFilePartition(None, (), [])]
         return _plan_partitions(
-            self.root, self.frm, self.to, self.skip_rewrites, self.split_bytes, None, self._prune
+            self.root, self.frm, self.to, self.split_bytes, None, self._prune
         )
 
     def read(self, partition: LakeFilePartition) -> Iterator:
@@ -415,7 +407,7 @@ def scan(spark, root: str, **options):
     whenever the session supports it — the one call site that bridges the
     driver-side conf (visible here) to the worker-side reader choice (the
     ``pushdown`` option). Keyword options pass through verbatim
-    (``fromVersion=…``, ``toVersion=…``, ``fromTag=…``, ``skipRewrites=…``);
+    (``fromVersion=…``, ``toVersion=…``, ``fromTag=…``, ``sinceTs=…``);
     pass ``pushdown=`` explicitly to override the conf-based default."""
     register(spark)
     r = spark.read.format(SOURCE_NAME).option("path", root)

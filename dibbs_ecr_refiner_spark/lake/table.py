@@ -68,6 +68,7 @@ import json
 import os
 import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -75,9 +76,9 @@ from pyspark.sql import types as T
 
 # Manifest file-level min/max stats (≙ Iceberg data-file column stats).
 # EXACT stats are stamped only on maintenance rewrites (compact/fold/
-# rebucket commit with mode="rewrite"); the ingest hot path stamps a
-# CONSERVATIVE per-bucket ts range on MOR delta entries, computed by the
-# caller's pre-pass aggregation (bucket_ts_range) — either way the MERGE
+# rebucket commit with mode="rewrite"); every ingest merge stamps a
+# CONSERVATIVE per-bucket ts range on its MOR delta entries, taken from
+# the batch's ``LakeTable.prepass`` aggregate — either way the MERGE
 # finalize stays a single os.replace with zero per-file footer reads
 # (pinned by test_no_driver_side_footer_reads, which bans the
 # footer-reading library from THIS module — the reader lives in
@@ -89,11 +90,6 @@ from .stats import _stats_keep, _ts_us, file_column_stats  # noqa: F401
 
 KEY = ("conv_id", "turn_idx")
 ORDER = ("ts", "change_lsn")
-# Sort rows by key inside each data file (within-partition sort, no
-# shuffle): parquet row-group min/max stats on conv_id then let point
-# lookups skip row groups, and like-keyed rows compress better. Costs a
-# per-batch sort in the write path — measured A/B in BENCH.md.
-SORT_WITHIN_FILES = True
 # Splitting threshold for staged data files. At 100 TB a compacted bucket is
 # MANY files; because files are key-sorted, the split points give each file a
 # disjoint conv_id range — which manifest-level stats (below) turn into a
@@ -130,6 +126,33 @@ class IncompatibleSchemaChange(Exception):
 
 def bucket_expr(num_buckets: int):
     return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(num_buckets)).cast("int")
+
+
+@dataclass(frozen=True)
+class Prepass:
+    """One batch's per-bucket layout facts (``LakeTable.prepass``): event
+    count, max ``change_lsn`` and ``[min, max]`` ts (epoch-µs), each keyed
+    by bucket. A bucket whose ts is all NULL has no range — leaving it out
+    means "must-scan" at prune time."""
+
+    counts: dict = field(default_factory=dict)
+    lsn_max: dict = field(default_factory=dict)
+    ts_range: dict = field(default_factory=dict)
+
+    @property
+    def touched(self) -> list[int]:
+        return sorted(self.counts)
+
+    @property
+    def hot(self) -> list[int]:
+        """Hot = a bucket carrying >2× the mean rows (the cheap pre-pass
+        hot-key detection of SURVEY §4 item 1): ``merge`` salts a hot
+        bucket's reduce and write across parallel tasks, cold ones stay
+        one file per bucket."""
+        if not self.counts:
+            return []
+        mean = sum(self.counts.values()) / len(self.counts)
+        return sorted(b for b, n in self.counts.items() if n > 2 * mean)
 
 
 def _widen_nullability(old: T.DataType, new: T.DataType) -> T.DataType | None:
@@ -446,7 +469,6 @@ class LakeTable:
         conv_id_eq: str | None = None,
         min_ts=None,
         tag: str | None = None,
-        resolve_deltas: bool = True,
     ) -> DataFrame:
         """Read a snapshot (current, or ``version`` for time travel),
         pruning to ``buckets`` via the manifest file list (no directory
@@ -475,16 +497,7 @@ class LakeTable:
         safe: 10% of events carry ts out of lsn order by construction.)
 
         ``tag``: read the snapshot a named ref pins (``table.tag(...)``) —
-        time travel by name, expiry-protected.
-
-        ``resolve_deltas=False`` returns the selected files' rows RAW —
-        merge-on-read delta files are not LWW-reduced, so a key may appear
-        once per commit that touched it. For callers that immediately run
-        their own per-key reduce (maintenance.compact / rebucket feed the
-        rows straight into ``merge``, whose bucket-layout LWW subsumes the
-        read-side one) — resolving here too would pay a second full
-        aggregation + exchange for identical winners. Not valid with
-        ``min_ts`` / tombstone filtering (both are winner-level predicates)."""
+        time travel by name, expiry-protected."""
         snap = self.snapshot(meta.endpoint(self.root, version, tag))
         if snap is None:
             raise ValueError("table has no snapshot yet")
@@ -506,13 +519,6 @@ class LakeTable:
         df = self._read_files(files, snap["columns"], snap["schemas"])
         if conv_id_eq is not None:
             df = df.where(F.col("conv_id") == F.lit(conv_id_eq))
-        if not resolve_deltas:
-            if min_ts is not None or not include_tombstones:
-                raise ValueError(
-                    "resolve_deltas=False requires include_tombstones=True "
-                    "and no min_ts (winner-level predicates need the reduce)"
-                )
-            return df
         if has_delta:
             from ..operators.cdc import lww_resolve
 
@@ -527,7 +533,6 @@ class LakeTable:
         self,
         from_version: int | None,
         to_version: int | None = None,
-        skip_rewrites: bool = True,
         from_tag: str | None = None,
         to_tag: str | None = None,
     ) -> DataFrame:
@@ -541,9 +546,8 @@ class LakeTable:
         commits a rewritten bucket's file carries the whole bucket, so
         the feed is bucket-granular (a superset of the true changes).
         Maintenance rewrites (compaction fold, rebucket) are tagged in
-        the manifest and skipped by default — same logical content, so a
-        fold between polls yields an empty feed; pass
-        ``skip_rewrites=False`` to see physical file churn too.
+        the manifest and skipped — same logical content, so a fold between
+        polls yields an empty feed (see ``meta.span``).
 
         ``from_tag``/``to_tag``: resolve endpoints through named refs —
         "what changed between corpus-2026-07 and corpus-2026-08" without
@@ -551,7 +555,7 @@ class LakeTable:
         expiry, so a tag-to-tag diff can't hit an expired endpoint."""
         frm = meta.endpoint(self.root, from_version, from_tag, ("from_version", "from_tag"))
         to = meta.endpoint(self.root, to_version, to_tag, ("to_version", "to_tag"))
-        span = meta.span(self.root, frm, to, skip_rewrites)
+        span = meta.span(self.root, frm, to)
         return self._read_files(span.files, span.snap["columns"], span.eras)
 
     def _metadata_evolution(
@@ -568,8 +572,7 @@ class LakeTable:
         }
         # Metadata-only commit: zero data files changed, so every file
         # segment is carried by path — the commit writes ONE small
-        # snapshot JSON regardless of table size (unless the parent was a
-        # legacy inline manifest, whose first touch writes the segments).
+        # snapshot JSON regardless of table size.
         self._commit(_mf.deflate(self._manifest_dir, manifest, snap, set()))
         return manifest
 
@@ -753,15 +756,43 @@ class LakeTable:
         snap = self.current_snapshot()
         return bool(snap and batch_id in snap["applied_batches"])
 
+    def prepass(self, changes: DataFrame, batch_col: str | None = None) -> dict:
+        """Per-bucket event count, max ``change_lsn`` and ts range of the
+        rows of ``changes``, in ONE partial-aggregate job (column pruning
+        keeps the scan to conv_id + change_lsn + ts). With ``batch_col``
+        the grouping is per (batch, bucket), so one job covers a whole
+        replay.
+
+        Returns ``{batch id: Prepass}`` (a batch with no rows has no
+        entry), or ``{None: Prepass}`` without ``batch_col``."""
+        keys = [F.col(batch_col)] if batch_col else []
+        rows = (
+            changes.groupBy(*keys, bucket_expr(self.num_buckets).alias("b"))
+            .agg(
+                F.count(F.lit(1)).alias("count"),
+                F.max("change_lsn").alias("lsn"),
+                F.min("ts").alias("ts_lo"),
+                F.max("ts").alias("ts_hi"),
+            )
+            .collect()
+        )
+        out: dict = {} if batch_col else {None: Prepass()}
+        for r in rows:
+            p = out.setdefault(r[batch_col] if batch_col else None, Prepass())
+            b = int(r["b"])
+            p.counts[b] = r["count"]
+            p.lsn_max[b] = int(r["lsn"])
+            if r["ts_lo"] is not None:
+                p.ts_range[b] = [_ts_us(r["ts_lo"]), _ts_us(r["ts_hi"])]
+        return out
+
     def merge(
         self,
         delta: DataFrame,
         batch_id: str,
         touched_buckets: list[int] | None = None,
         post_reduce=None,
-        hot_buckets: list[int] | None = None,
-        bucket_lsn_max: dict[int, int] | None = None,
-        bucket_ts_range: dict[int, list[int]] | None = None,
+        prepass: Prepass | None = None,
         mode: str = "cow",
         publish: bool = True,
     ) -> dict:
@@ -769,10 +800,17 @@ class LakeTable:
 
         ``delta`` must carry KEY + ORDER columns and ``_deleted``; any other
         columns are payload. Re-invoking with an already-applied batch_id is
-        a no-op (idempotent replay). A crash before the snapshot commit
-        leaves only unreferenced staging files — the rerun produces an
-        identical result (deterministic content, fresh file names).
+        a no-op (idempotent replay) — this is the one exactly-once gate. A
+        crash before the snapshot commit leaves only unreferenced staging
+        files — the rerun produces an identical result (deterministic
+        content, fresh file names).
 
+        Ingest modes take every per-bucket fact from ``prepass`` (the
+        batch's ``self.prepass(...)`` entry; computed here over ``delta``,
+        one job, when not given): the touched buckets, the hot buckets
+        whose reduce and write are salted across 4 tasks, each touched
+        bucket's watermark (its true max ``change_lsn``) and each MOR delta
+        file's ts range.
         ``mode="cow"`` (default): the touched buckets' existing rows join
         the LWW reduce and the buckets are rewritten wholly — read-optimal,
         write cost O(touched buckets).
@@ -781,40 +819,32 @@ class LakeTable:
         watermark, and lineage semantics are identical in both modes.
         ``mode="rewrite"``: a maintenance rewrite (compaction fold,
         rebucket). ``delta`` holds ≤1 row per key and is the whole new
-        content of ``touched_buckets`` (required), so neither the old files
-        nor an LWW reduce take part. The new files are flagged ``rewrite``
-        (change feeds skip them) and carry exact footer stats. Watermarks
-        stay as they are — rewriting old content applies no new events —
-        except across a bucket-count change (``self.num_buckets`` differs
-        from the parent's), where every bucket gets the parent's minimum
-        watermark: old bucket ids mean nothing under the new layout, and
-        the weakest per-bucket claim is the only one still true for each
-        new bucket (``min_safe_gc_lsn`` is unchanged).
+        content of ``touched_buckets`` (given for this mode only), so
+        neither the old files nor an LWW reduce take part. The new files
+        are flagged ``rewrite`` (change feeds skip them) and carry exact
+        footer stats. Watermarks stay as they are — rewriting old content
+        applies no new events — except across a bucket-count change
+        (``self.num_buckets`` differs from the parent's), where every
+        bucket gets the parent's minimum watermark: old bucket ids mean
+        nothing under the new layout, and the weakest per-bucket claim is
+        the only one still true for each new bucket (``min_safe_gc_lsn`` is
+        unchanged).
         """
         if mode not in ("cow", "mor", "rewrite"):
             raise ValueError(f"unknown merge mode {mode!r}")
-        if mode == "rewrite" and touched_buckets is None:
-            raise ValueError('mode="rewrite" needs touched_buckets')
-        # Defensive inflate: current_snapshot() already inflates, but a
-        # caller racing through merge_with_retry may hand us a raw on-disk
-        # snapshot dict; inflation is idempotent either way.
-        snap = _mf.inflate(self._manifest_dir, self.current_snapshot())
+        if (mode == "rewrite") != (touched_buckets is not None):
+            raise ValueError('touched_buckets is given with mode="rewrite" and only with it')
+        snap = self.current_snapshot()
         if snap and batch_id in snap["applied_batches"]:
             return {"skipped": True, "batch_id": batch_id}
 
         t0 = time.time()
-
-        # Touched buckets: either supplied by the caller (computed from a
-        # cheap conv_id-only column scan of the raw batch — see
-        # ReplayEngine.apply_batch), or derived here from the delta.
-        if touched_buckets is None:
-            touched_buckets = [
-                r[0]
-                for r in delta.select(bucket_expr(self.num_buckets).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        touched = sorted(int(b) for b in touched_buckets)
+        if mode == "rewrite":
+            touched, hot = sorted(int(b) for b in touched_buckets), []
+        else:
+            if prepass is None:
+                prepass = self.prepass(delta)[None]
+            touched, hot = prepass.touched, prepass.hot
         if not touched:
             return {"skipped": True, "batch_id": batch_id, "empty": True}
 
@@ -891,7 +921,7 @@ class LakeTable:
         # now meet in one task, where the salt already spreads hot buckets
         # across 4 writers (the explicit hot-key splitting below).
         #
-        # Hot buckets — detected by the caller from per-bucket delta
+        # Hot buckets — detected by the pre-pass from per-bucket delta
         # counts — get a turn-level salt so one hot bucket is reduced and
         # written by several tasks in parallel; cold buckets stay
         # one-file-per-bucket so later target reads don't pay a per-file
@@ -900,9 +930,9 @@ class LakeTable:
         # small sizes, serializing the write).
         from ..operators.cdc import lww_resolve
 
-        if hot_buckets:
+        if hot:
             salt = F.when(
-                F.col("_bucket").isin([int(b) for b in hot_buckets]),
+                F.col("_bucket").isin(hot),
                 F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4)),
             ).otherwise(F.lit(0))
         else:
@@ -943,17 +973,15 @@ class LakeTable:
         # its orphaned directory is swept by gc_orphans().
         token = uuid.uuid4().hex[:12]
         staging = os.path.join(self._staging_dir, token)
-        staged_df = merged
-        if SORT_WITHIN_FILES:
-            # key-clustered files: a within-partition sort (no shuffle)
-            # gives parquet row-group min/max stats on conv_id, so point
-            # lookups skip row groups, and like-keyed rows compress better.
-            # MUST lead with _bucket: the dynamic-partition writer requires
-            # ordering by the partition column and would re-sort (unstably,
-            # destroying the key order) if the child's ordering lacks it.
-            staged_df = staged_df.sortWithinPartitions("_bucket", "conv_id", "turn_idx")
+        # key-clustered files: a within-partition sort (no shuffle) gives
+        # parquet row-group min/max stats on conv_id, so point lookups skip
+        # row groups, and like-keyed rows compress better. MUST lead with
+        # _bucket: the dynamic-partition writer requires ordering by the
+        # partition column and would re-sort (unstably, destroying the key
+        # order) if the child's ordering lacks it.
         (
-            staged_df.write.option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+            merged.sortWithinPartitions("_bucket", "conv_id", "turn_idx")
+            .write.option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
             .partitionBy("_bucket")
             .parquet(staging)
         )
@@ -986,8 +1014,8 @@ class LakeTable:
                     if mode == "mor":
                         entry["kind"] = "delta"
                         # Ingest-path ts skipping with ZERO footer reads:
-                        # the caller's pre-pass aggregation already knows
-                        # each bucket's min/max event ts for this batch,
+                        # the pre-pass aggregation already knows each
+                        # bucket's min/max event ts for this batch,
                         # a conservative superset of the LWW winners the
                         # delta file actually holds (refine/enrich never
                         # rewrite ts). Stamping it makes FRESH delta files
@@ -996,8 +1024,8 @@ class LakeTable:
                         # conv_id is deliberately absent (missing per-column
                         # range ⇒ must-scan) — point lookups already prune
                         # by bucket hash.
-                        if bucket_ts_range and b in bucket_ts_range:
-                            entry["stats"] = {"ts": list(bucket_ts_range[b])}
+                        if b in prepass.ts_range:
+                            entry["stats"] = {"ts": list(prepass.ts_range[b])}
                     if mode == "rewrite":
                         # same logical content in new files — change-feed
                         # readers skip these so a fold doesn't re-deliver
@@ -1031,11 +1059,8 @@ class LakeTable:
             # commit so the batch is recorded as applied (exactly-once).
             stats = {"lsn_min": -1, "lsn_max": -1, "n": 0, "n_del": 0}
 
-        # Per-bucket high-watermarks: prefer the caller's true per-bucket
-        # max(change_lsn) (the replay pre-pass computes it in the same agg
-        # as the bucket counts); without it fall back to the batch-global
-        # lsn_max, which overstates cold buckets but stays GC-safe because
-        # batches commit in contiguous LSN order. A rewrite advances none;
+        # Per-bucket high-watermarks: each touched bucket advances to its
+        # true max(change_lsn) from the pre-pass. A rewrite advances none;
         # across a bucket-count change it floors them (see the docstring).
         watermarks = dict(snap["watermarks"]) if snap else {}
         if mode == "rewrite":
@@ -1044,12 +1069,7 @@ class LakeTable:
                 watermarks = {str(b): floor for b in range(self.num_buckets)}
         elif stats["n"]:
             for b in touched:
-                applied_lsn = (
-                    bucket_lsn_max.get(b, int(stats["lsn_max"]))
-                    if bucket_lsn_max is not None
-                    else int(stats["lsn_max"])
-                )
-                watermarks[str(b)] = max(int(watermarks.get(str(b), -1)), int(applied_lsn))
+                watermarks[str(b)] = max(int(watermarks.get(str(b), -1)), prepass.lsn_max[b])
 
         # this batch's registry entry is added below, once the manifest
         # has claimed its snapshot id

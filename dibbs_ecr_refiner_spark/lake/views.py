@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .feed import ChangeFeedReader
-from .table import LakeTable, bucket_expr
+from .table import LakeTable
 
 
 def conversation_rollup(src_rows: DataFrame) -> DataFrame:
@@ -46,10 +46,7 @@ def refresh_conversation_rollup(
     touched conversations only, LWW-merge into ``dst``, ack the feed."""
     delta = feed.poll()
     touched_convs = delta.select("conv_id").distinct()
-    buckets = [
-        int(r[0])
-        for r in delta.select(bucket_expr(src.num_buckets).alias("b")).distinct().collect()
-    ]
+    buckets = src.prepass(delta)[None].touched
     if not buckets:
         return {"skipped": True, "empty_feed": True}
 

@@ -88,13 +88,3 @@ def high_watermarks(df: DataFrame, partition_col: str, lsn: str = "change_lsn") 
     TES sha256 manifest diff state, reference
     refiner/scripts/pipeline/detect_changes.py:227-265)."""
     return df.groupBy(partition_col).agg(F.max(lsn).alias("high_watermark"))
-
-
-def detect_hot_keys(df: DataFrame, key: str = "conv_id", threshold: int = 10_000) -> DataFrame:
-    """Cheap pre-pass hot-key detector (count per key above threshold).
-
-    Used to decide when to salt a downstream repartition; the LWW reduce
-    itself needs no salting (partial agg, see module docstring), and the
-    refinement pass is row-local, so the only consumer is storage-layout
-    balancing in the sink."""
-    return df.groupBy(key).count().where(F.col("count") >= threshold)

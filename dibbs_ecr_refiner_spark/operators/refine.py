@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.config import RefinePlan
+from .enrich import config_display_expr
 
 OUTCOMES = (
     "removed_wholesale",
@@ -146,11 +147,6 @@ def compile_refinement(plan: RefinePlan, guarded: bool = False):
     and refine afterward — re-refining refined text would not be
     idempotent (e.g. reconstruction of a reconstruction).
     """
-    display_by_code: dict[str, str] = {}
-    for k in sorted(plan.keep_codes, key=lambda k: (k.system, k.code)):
-        if k.display is not None:
-            display_by_code.setdefault(k.code, k.display)
-
     # Per-role matched code + tier + preserve flag (ordered rules, first
     # match claims — a nested CASE WHEN is exactly "break on first
     # candidate-bearing rule"). preserve_whole rides along with the winning
@@ -195,12 +191,7 @@ def compile_refinement(plan: RefinePlan, guarded: bool = False):
             hit & ~matched_preserve, F.filter(F.col("items"), keep_item)
         ).otherwise(F.col("items"))
 
-    if display_by_code:
-        pairs = [x for c, d in sorted(display_by_code.items()) for x in (F.lit(c), F.lit(d))]
-        display_map = F.create_map(*pairs)
-        matched_display = F.element_at(display_map, F.coalesce(F.col("_matched_code"), F.lit("\x00")))
-    else:
-        matched_display = F.lit(None).cast("string")
+    matched_display = config_display_expr(plan)
 
     # Per-turn provenance comment (≙ the per-entry provenance comments the
     # reference renders into the document, section/utils.py:225-324): a

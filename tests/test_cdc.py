@@ -61,9 +61,3 @@ def test_high_watermarks(spark):
     wm = {r["part"]: r["high_watermark"] for r in cdc.high_watermarks(df, "part").collect()}
     assert wm == {"c1": 9, "c2": 4}
 
-
-def test_detect_hot_keys(spark):
-    rows = [("hot", i, "insert", "user", "x", None, _ts("2026-01-01T00:00:00"), i) for i in range(50)]
-    rows += [("cold", 0, "insert", "user", "x", None, _ts("2026-01-01T00:00:00"), 99)]
-    hot = cdc.detect_hot_keys(_changes(spark, rows), threshold=10).collect()
-    assert [r["conv_id"] for r in hot] == ["hot"]

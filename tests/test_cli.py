@@ -27,18 +27,18 @@ def test_cli_mor_lifecycle(spark, tmp_path, capsys):
                "--buckets", "8", "--mode", "mor")
     assert rep["mode"] == "mor" and rep["batches_applied"] == 2
 
-    shown = _run(capsys, "show", "--table", table, "--buckets", "8")
+    shown = _run(capsys, "show", "--table", table)
     assert shown["delta_files"] > 0 and shown["live_rows"] > 0
     live_before = shown["live_rows"]
 
     # incremental scan: full feed from table creation
-    ch = _run(capsys, "changes", "--table", table, "--buckets", "8")
+    ch = _run(capsys, "changes", "--table", table)
     assert ch["rows"] >= live_before
 
-    comp = _run(capsys, "compact", "--table", table, "--buckets", "8")
+    comp = _run(capsys, "compact", "--table", table)
     assert not comp.get("skipped")
 
-    shown2 = _run(capsys, "show", "--table", table, "--buckets", "8")
+    shown2 = _run(capsys, "show", "--table", table)
     assert shown2["delta_files"] == 0
     assert shown2["live_rows"] == live_before
 
@@ -65,15 +65,15 @@ def test_cli_tail_stats_pruned(spark, tmp_path, capsys):
          "--conversations", "40", "--batches", "2")
     rep = _run(capsys, "replay", "--changelog", log, "--table", table, "--buckets", "8",
                "--mode", "mor")
-    comp = _run(capsys, "compact", "--table", table, "--buckets", "8")
+    comp = _run(capsys, "compact", "--table", table)
     assert not comp.get("skipped")  # the fold is what stamps the file stats
-    live = _run(capsys, "show", "--table", table, "--buckets", "8")["live_rows"]
+    live = _run(capsys, "show", "--table", table)["live_rows"]
 
-    past = _run(capsys, "tail", "--table", table, "--buckets", "8",
+    past = _run(capsys, "tail", "--table", table,
                 "--since", "2000-01-01T00:00:00")
     assert past["rows"] == live and past["files_skipped_by_stats"] == 0
 
-    fut = _run(capsys, "tail", "--table", table, "--buckets", "8",
+    fut = _run(capsys, "tail", "--table", table,
                "--since", "2100-01-01T00:00:00")
     assert fut["rows"] == 0 and fut["files_scanned"] == 0
     assert fut["files_total"] == past["files_total"] > 0
@@ -114,13 +114,13 @@ def test_cli_refine_one_simulator(spark, tmp_path, capsys):
     )
 
     # v1 (the active config the table was built with): system turns stay dropped
-    out1 = _run(capsys, "refine-one", "--table", table_dir, "--buckets", "8",
+    out1 = _run(capsys, "refine-one", "--table", table_dir,
                 "--conv", conv, "--config", cfg, "--config-version", "1")
     sys_turns = [t for t in out1["turns"] if t["role"] == "system"]
     assert sys_turns and all(not t["after"]["kept"] for t in sys_turns)
 
     # v2: the same turns flip to kept, reported as changes
-    out2 = _run(capsys, "refine-one", "--table", table_dir, "--buckets", "8",
+    out2 = _run(capsys, "refine-one", "--table", table_dir,
                 "--conv", conv, "--config", cfg, "--config-version", str(v2), "--diff-only")
     assert out2["config_version"] == v2
     flipped = [

@@ -367,10 +367,12 @@ def test_nullability_only_difference_widens_not_fails(spark, tmp_path):
     ids1 = {c["name"]: c["id"] for c in table.current_snapshot()["columns"]}
 
     # read-back shape: everything nullable (what compact/fold feeds merge)
-    df2 = table.read(include_tombstones=True, resolve_deltas=False)
+    df2 = table.read(include_tombstones=True)
     assert df2.schema["items"].dataType != item(False)  # round-trip widened
     with pytest.raises(ValueError, match="touched_buckets"):
         table.merge(df2, "b2", mode="rewrite")
+    with pytest.raises(ValueError, match="touched_buckets"):
+        table.merge(df2, "b2", touched_buckets=[0, 1, 2, 3])
     table.merge(df2, "b2", touched_buckets=[0, 1, 2, 3], mode="rewrite")
 
     snap = table.current_snapshot()
@@ -574,9 +576,7 @@ def test_concurrent_writer_loser_cannot_clobber_winner(spark, tmp_path):
     with pytest.raises(SnapshotConflict):
         # Force the stale writer to target the already-claimed version by
         # monkeypatching its view of the current snapshot to the stale one.
-        stale_snap = json.load(
-            open(os.path.join(str(tmp_path / "t"), "_manifests", "v00000001.json"))
-        )
+        stale_snap = stale.snapshot(1)
         stale.current_snapshot = lambda: stale_snap
         stale.merge(_delta(spark, [("c9", 0, "loser", 3, False, None)]), "loser")
     # every winner file still exists and is readable
@@ -623,8 +623,8 @@ def test_num_buckets_comes_from_manifest(spark, tmp_path):
 
 
 def test_per_bucket_watermarks_are_true_maxima(spark, tmp_path):
-    """With bucket_lsn_max supplied, cold buckets must not be advanced to
-    the batch-global lsn_max."""
+    """A plain merge advances each touched bucket to its own max
+    change_lsn, never to the batch-global one."""
     table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     from dibbs_ecr_refiner_spark.lake.table import bucket_expr
 
@@ -644,9 +644,46 @@ def test_per_bucket_watermarks_are_true_maxima(spark, tmp_path):
         .collect()
     }
     assert len(per) == 2
-    table.merge(delta, "b0", bucket_lsn_max=per)
+    table.merge(delta, "b0")
     wm = {int(k): int(v) for k, v in table.current_snapshot()["watermarks"].items()}
     assert wm == per
+
+
+def test_prepass_counts_ranges_touched_and_hot(spark, tmp_path):
+    """One aggregate gives each batch's per-bucket row count, max
+    change_lsn and ts range (none for an all-NULL-ts bucket); ``touched``
+    is every bucket with rows, ``hot`` those over twice the mean count."""
+    from dibbs_ecr_refiner_spark.lake.stats import _ts_us
+
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    conv: dict[int, str] = {}
+    for i in range(64):
+        conv.setdefault(table.bucket_of(f"c{i}"), f"c{i}")
+    (bh, hot_c), (bc, cold_c), (bn, null_c) = sorted(conv.items())[:3]
+    t1, t2 = dt.datetime(2026, 1, 1), dt.datetime(2026, 1, 5)
+    rows = [(hot_c, i, t2 if i == 9 else t1, 10 + i, "x") for i in range(10)]
+    rows += [(cold_c, 0, t1, 5, "x"), (null_c, 0, None, 7, "x"), (cold_c, 1, t2, 30, "y")]
+    changes = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts timestamp, change_lsn long, batch string"
+    )
+    us1, us2 = _ts_us(t1), _ts_us(t2)
+
+    pre = table.prepass(changes, "batch")
+    assert set(pre) == {"x", "y"}
+    x, y = pre["x"], pre["y"]
+    assert x.counts == {bh: 10, bc: 1, bn: 1}
+    assert x.lsn_max == {bh: 19, bc: 5, bn: 7}
+    assert x.ts_range == {bh: [us1, us2], bc: [us1, us1]}
+    assert x.touched == sorted([bh, bc, bn]) and x.hot == [bh]
+    assert (y.counts, y.lsn_max, y.ts_range) == ({bc: 1}, {bc: 30}, {bc: [us2, us2]})
+    assert y.touched == [bc] and y.hot == []
+
+    whole = table.prepass(changes)
+    assert set(whole) == {None}
+    assert whole[None].counts == {bh: 10, bc: 2, bn: 1} and whole[None].hot == [bh]
+    assert whole[None].lsn_max[bc] == 30 and whole[None].ts_range[bc] == [us1, us2]
+    empty = table.prepass(changes.limit(0))[None]
+    assert (empty.touched, empty.hot) == ([], [])
 
 
 def test_compaction_leaves_watermarks_unchanged(spark, tmp_path):

@@ -9,6 +9,8 @@ import json
 import os
 import re
 
+import pytest
+
 from dibbs_ecr_refiner_spark.lake import maintenance
 from dibbs_ecr_refiner_spark.lake import manifests as mf
 from dibbs_ecr_refiner_spark.lake.table import LakeTable
@@ -145,9 +147,9 @@ def test_gc_sweeps_orphaned_segments_but_never_referenced_ones(spark, tmp_path):
     os.remove(fake)
 
 
-def test_legacy_inline_manifest_chain_upgrades_on_first_commit(spark, tmp_path):
-    """A pre-segmentation table (inline files/applied_batches) must load
-    as-is, and its first new commit writes the segmented form."""
+def test_inline_manifest_is_rejected(spark, tmp_path):
+    """Format-2 manifests are always segmented: a manifest that inlines
+    its files/applied_batches raises on open instead of loading."""
     table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
     table.merge(_delta(spark, [("c1", 0, "old", 1, False)]), "b0")
     # rewrite v1 to the legacy inline shape
@@ -163,11 +165,8 @@ def test_legacy_inline_manifest_chain_upgrades_on_first_commit(spark, tmp_path):
             os.remove(os.path.join(table._manifest_dir, fn))
     mf._SEG_CACHE.clear()
 
-    t2 = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
-    assert [r["text"] for r in t2.read().collect()] == ["old"]
-    t2.merge(_delta(spark, [("c2", 0, "new", 2, False)]), "b1")
-    assert "files" not in _raw(t2, 2) and _raw(t2, 2)["file_segments"]
-    assert {r["text"] for r in t2.read().collect()} == {"old", "new"}
+    with pytest.raises(ValueError, match="inlines its file list"):
+        LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
 
 
 def test_rebucket_rewrites_every_segment(spark, tmp_path):

@@ -1,9 +1,10 @@
 """Manifest-level file stats + data skipping (≙ Iceberg data-file column
 stats; the lake-internal index behind point lookups and tail reads).
 
-Stats are stamped ONLY by maintenance rewrites (compact/fold) — the ingest
-MERGE finalize stays footer-read-free — and readers treat a missing stats
-block as "must scan", so mixed stamped/unstamped tables are always correct.
+Exact stats are stamped only by maintenance rewrites (compact/fold); an
+ingest MERGE stamps its MOR delta files with the pre-pass ts range and
+stays footer-read-free. Readers treat a missing stats block as "must
+scan", so mixed stamped/unstamped tables are always correct.
 """
 
 import datetime as dt
@@ -96,13 +97,13 @@ def test_read_since_skips_cold_files_and_matches_full_filter(spark, tmp_path):
                + [("c99", 0, "fresh", 200, False, FEB)]),
         "b1",
         mode="mor",
-    )  # fresh un-stamped delta files
+    )  # fresh delta files, stamped with the pre-pass ts range
 
     cut = dt.datetime(2026, 1, 20)
     snap = table.current_snapshot()
     kept = [f for f in snap["files"] if _stats_keep(f, "ts", lo=_ts_us(cut))]
     assert len(kept) < len(snap["files"]), "cold compacted files must be skipped"
-    assert all("stats" not in f for f in kept), "un-stamped fresh files must be kept"
+    assert kept and all(f["stats"]["ts"] == [_ts_us(FEB)] * 2 for f in kept), "fresh deltas must be kept"
 
     got = _rows(table.read_since(cut))
     want = _rows(table.read().where(F.col("ts") >= F.lit(cut)))
@@ -143,6 +144,24 @@ def test_point_lookup_correct_with_mixed_stamped_and_unstamped_files(spark, tmp_
 
 
 # ---------------- ingest-path delta stats (pre-pass ts ranges) ----------------
+
+
+def test_direct_mor_merge_stamps_prepass_ts_ranges(spark, tmp_path):
+    """A direct ``merge(mode="mor")`` — no engine, no caller pre-pass —
+    stamps each delta file with its bucket's [min, max] ts, as engine
+    batches do."""
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=2)
+    rows = [(f"c{i:02d}", 0, f"v{i}", i, False, JAN if i % 3 else FEB) for i in range(12)]
+    table.merge(_delta(spark, rows), "b0", mode="mor")
+    want: dict[int, list[int]] = {}
+    for c, _, _, _, _, t in rows:
+        b, us = table.bucket_of(c), _ts_us(t)
+        lo, hi = want.get(b, [us, us])
+        want[b] = [min(lo, us), max(hi, us)]
+    deltas = [f for f in table.current_snapshot()["files"] if f.get("kind") == "delta"]
+    assert {f["bucket"] for f in deltas} == set(want)
+    assert all(f["stats"] == {"ts": want[f["bucket"]]} for f in deltas)
+
 
 RAW_SCHEMA = (
     "conv_id string, turn_idx int, op string, role string, text string, "

@@ -93,10 +93,12 @@ def main() -> None:
         seg_dir = os.path.join(work, "_manifests")
         os.makedirs(seg_dir)
         t0 = time.time()
-        parent_disk = mf.deflate(seg_dir, dict(snap), None, None)
+        parent_disk = mf.deflate(seg_dir, dict(snap), None, set())
         with open(os.path.join(seg_dir, "v00000001.json"), "w") as f:
             json.dump(parent_disk, f, indent=1, sort_keys=True)
         bootstrap_s = time.time() - t0
+        # commits deflate against the inflated parent, as LakeTable.merge does
+        parent = mf.inflate(seg_dir, parent_disk)
 
         # ...then steady-state commits touching `touch` buckets each
         per_commit_bytes, per_commit_s = [], []
@@ -123,7 +125,7 @@ def main() -> None:
             }
             before = {fn: None for fn in os.listdir(seg_dir)}
             t0 = time.time()
-            disk = mf.deflate(seg_dir, manifest, parent_disk, tset)
+            disk = mf.deflate(seg_dir, manifest, parent, tset)
             out = os.path.join(seg_dir, f"v{manifest['snapshot_id']:08d}.json")
             with open(out, "w") as f:
                 json.dump(disk, f, indent=1, sort_keys=True)
@@ -135,7 +137,7 @@ def main() -> None:
                     if fn not in before
                 )
             )
-            parent_disk = disk
+            parent = mf.inflate(seg_dir, disk)
 
         med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
         print(
