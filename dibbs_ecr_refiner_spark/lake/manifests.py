@@ -133,14 +133,14 @@ def deflate(
     segments are only reusable when the bucket layout is the same (a
     rebucket renumbers buckets, so nothing carries over)."""
     disk = dict(manifest)
+    parent = parent or {}
 
     files = disk.pop("files")
     by_bucket: dict[int, list[dict]] = {}
     for f in files:
         by_bucket.setdefault(int(f["bucket"]), []).append(f)
-    parent_segs = dict((parent or {}).get("file_segments") or {})
-    if parent is not None and parent.get("num_buckets") != manifest.get("num_buckets"):
-        parent_segs = {}
+    same_layout = parent.get("num_buckets") == manifest.get("num_buckets")
+    parent_segs = parent.get("file_segments", {}) if same_layout else {}
     changed = {int(b) for b in changed_buckets} if parent_segs else set(by_bucket)
     segs: dict[str, dict] = {}
     for b, fs in sorted(by_bucket.items()):
@@ -152,7 +152,6 @@ def deflate(
     disk["file_segments"] = segs
 
     applied = disk.pop("applied_batches")
-    parent = parent or {}
     applied_segs = list(parent.get("applied_segments", []))
     # O(1) tail derivation: the inflated parent carries both the full
     # registry and its inline tail — the new tail is the parent's tail plus

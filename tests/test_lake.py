@@ -649,7 +649,7 @@ def test_per_bucket_watermarks_are_true_maxima(spark, tmp_path):
     assert wm == per
 
 
-def test_prepass_counts_ranges_touched_and_hot(spark, tmp_path):
+def test_prepass_counts_ranges_touched_hot(spark, tmp_path):
     """One aggregate gives each batch's per-bucket row count, max
     change_lsn and ts range (none for an all-NULL-ts bucket); ``touched``
     is every bucket with rows, ``hot`` those over twice the mean count."""
