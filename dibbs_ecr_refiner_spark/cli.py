@@ -49,9 +49,7 @@ def cmd_replay(args) -> dict:
     spark = _spark(args)
     plan = ConfigStore(spark, args.config).load_plan() if args.config else default_plan()
     table = LakeTable(spark, args.table, num_buckets=args.buckets)
-    stats = ReplayEngine(spark, table, plan).replay_path(
-        args.changelog, mode=args.mode, fold_every=args.fold_every
-    )
+    stats = ReplayEngine(spark, table, plan).replay_path(args.changelog, mode=args.mode)
     return {
         "cmd": "replay",
         "mode": args.mode,
@@ -406,12 +404,9 @@ def main(argv=None) -> int:
     r.add_argument("--buckets", type=int, default=64)
     r.add_argument("--mode", choices=["auto", "cow", "mor"], default="auto",
                    help="auto (default) commits every batch as delta files (mor), folds "
-                        "over-threshold buckets every 8 batches and folds all pending "
-                        "deltas at the end; mor commits delta files resolved at read, "
-                        "folding only with --fold-every; cow rewrites touched buckets")
-    r.add_argument("--fold-every", type=int, default=None,
-                   help="auto/mor: every N committed batches, fold the buckets over the "
-                        "should_fold threshold (auto default: 8)")
+                        "a bucket between batches once it holds more than 8 deltas and "
+                        "folds all pending deltas at the end; mor commits delta files "
+                        "resolved at read and never folds; cow rewrites touched buckets")
 
     c = sub.add_parser("compact", help="compact buckets / fold MOR deltas / GC tombstones")
     c.add_argument("--table", required=True)

@@ -19,6 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lake import maintenance
 from .lake.table import LakeTable, Prepass
 from .operators import cdc
 from .operators.enrich import enrich_displays
@@ -34,7 +35,7 @@ class ReplayStats:
     batches_skipped: int = 0
     events: int = 0
     seconds: float = 0.0
-    fold_seconds: float = 0.0  # time inside mid-replay + final folds (⊂ seconds)
+    fold_seconds: float = 0.0  # time inside the between-batch + completion folds (⊂ seconds)
     lineage: list[dict] = field(default_factory=list)
     # per-applied-batch apply() wall time + event count (fold time excluded):
     # the first batch carries the session's one-time JIT/codegen/broadcast
@@ -194,35 +195,29 @@ class ReplayEngine:
         df = self.table.read(include_tombstones=True)
         return enrich_displays(df, self.plan).where(~F.col("_deleted"))
 
-    def fold_deltas(
-        self,
-        buckets: list[int] | None = None,
-        max_buckets_per_commit: int | None = None,
-    ) -> dict:
+    def fold_deltas(self, buckets: list[int] | None = None) -> dict:
         """Compact merge-on-read deltas into base files, recomputing the
         display enrichment over the resolved rows so the folded table is
-        byte-equal to a COW replay of the same log.
-
-        ``max_buckets_per_commit`` bounds a big fold's transient scratch to
-        O(k·bucket) by folding in groups of k buckets, one atomic commit
-        each — the disk-bounded convergence fold a 10^9-event table needs
-        (see maintenance.compact)."""
-        from .lake.maintenance import compact
-
+        byte-equal to a COW replay of the same log. ``maintenance.compact``
+        sizes the commit groups, so the fold's transient scratch stays
+        bounded however big the table is."""
         plan = self.plan
-        return compact(
-            self.table,
-            buckets=buckets,
-            post=lambda d: enrich_displays(d, plan),
-            max_buckets_per_commit=max_buckets_per_commit,
+        return maintenance.compact(
+            self.table, buckets=buckets, post=lambda d: enrich_displays(d, plan)
         )
+
+    def _fold(self, stats: ReplayStats, buckets: list[int]) -> None:
+        """Fold ``buckets`` (if any), timed into ``stats.fold_seconds``."""
+        if buckets:
+            tf = time.time()
+            self.fold_deltas(buckets=buckets)
+            stats.fold_seconds += time.time() - tf
 
     def replay(
         self,
         changes: DataFrame,
         batch_col: str = "ingest_file",
         mode: str = "auto",
-        fold_every: int | None = None,
         final_fold: str = "all",
     ) -> ReplayStats:
         """Replay every batch in batch-id order (≙ LSN-range order). Batches
@@ -231,13 +226,11 @@ class ReplayEngine:
 
         ``mode="auto"`` (default) commits every batch merge-on-read: delta
         files, write cost O(batch) instead of O(touched buckets). Folding
-        is DEMAND-driven: after every ``fold_every`` (default 8) committed
-        batches only the buckets whose pending delta count exceeds the
-        ``should_fold`` threshold are compacted, so read amplification
-        stays bounded without a fold-everything sweep. ``mode="mor"``
-        commits the same delta files but folds only when ``fold_every`` is
-        given and never runs the completion fold; ``mode="cow"`` rewrites
-        the touched buckets on every commit.
+        is DEMAND-driven: between batches, the buckets whose pending delta
+        count exceeds the ``should_fold`` threshold are compacted, so read
+        amplification stays bounded without a sweep that folds everything.
+        ``mode="mor"`` commits the same delta files and never folds;
+        ``mode="cow"`` rewrites the touched buckets on every commit.
 
         ``final_fold`` controls what a completed auto replay leaves behind:
         ``"all"`` (default) folds every pending delta bucket so plain
@@ -246,7 +239,7 @@ class ReplayEngine:
         over-threshold buckets (continuous-pipeline mode: the replay call
         boundary is arbitrary, reads go through ``read_refined()`` which
         converges displays at read time, and core columns are oracle-equal
-        from the read-time LWW either way); ``"none"`` skips it.
+        from the read-time LWW either way).
 
         Scale note: each batch filters ``changes`` on ``batch_col``. When
         the input is parquet partitioned by that column (use
@@ -254,18 +247,12 @@ class ReplayEngine:
         touch only its own files; on an UNPARTITIONED frame each batch
         re-scans the full input — fine for small backfills, a full-scan-
         per-batch footgun at log scale. Prefer ``replay_path``."""
-        from .lake.maintenance import should_fold
-
-        if final_fold not in ("all", "threshold", "none"):
+        if final_fold not in ("all", "threshold"):
             # a typo'd value would otherwise silently run the full
             # completion fold — the opposite of what a continuous-pipeline
             # caller asked for
-            raise ValueError(
-                f"final_fold must be 'all', 'threshold' or 'none', got {final_fold!r}"
-            )
+            raise ValueError(f"final_fold must be 'all' or 'threshold', got {final_fold!r}")
         batch_mode = "mor" if mode == "auto" else mode
-        if mode == "auto" and fold_every is None:
-            fold_every = 8
         stats = ReplayStats()
         # one pass over (batch_col, bucket) for the event count, the batch
         # list, every batch's touched/hot bucket sets AND the true
@@ -273,8 +260,9 @@ class ReplayEngine:
         # batch with a single partial-agg job
         pre = self.table.prepass(changes, batch_col)
         stats.events = sum(sum(p.counts.values()) for p in pre.values())
+        batch_ids = sorted(pre)
         t0 = time.time()
-        for batch_id in sorted(pre):
+        for batch_id in batch_ids:
             batch = changes.where(F.col(batch_col) == batch_id)
             tb = time.time()
             res = self.apply_batch(batch, batch_id, prepass=pre[batch_id], mode=batch_mode)
@@ -285,26 +273,13 @@ class ReplayEngine:
             stats.batch_seconds.append(round(time.time() - tb, 3))
             stats.batch_events.append(sum(pre[batch_id].counts.values()))
             stats.lineage.append(res)
-            # demand-driven periodic fold: only the buckets whose delta
-            # pile-up actually exceeds the threshold
-            if fold_every and batch_mode == "mor" and stats.batches % fold_every == 0:
-                over = should_fold(self.table)
-                if over:
-                    tf = time.time()
-                    self.fold_deltas(buckets=over)
-                    stats.fold_seconds += time.time() - tf
+            if mode == "auto" and batch_id != batch_ids[-1]:
+                self._fold(stats, maintenance.should_fold(self.table))
         # Not gated on this call having applied a batch: a rerun after a
         # crash between the last commit and the fold must still fold.
-        if mode == "auto" and final_fold != "none":
-            # "all" finishes converged (every pending delta bucket, so plain
-            # table.read() equals the batch oracle, displays included);
-            # "threshold" folds only the over-threshold buckets
+        if mode == "auto":
             kw = {"max_deltas_per_bucket": 0} if final_fold == "all" else {}
-            pending = should_fold(self.table, **kw)
-            if pending:
-                tf = time.time()
-                self.fold_deltas(buckets=pending)
-                stats.fold_seconds += time.time() - tf
+            self._fold(stats, maintenance.should_fold(self.table, **kw))
         stats.seconds = time.time() - t0
         return stats
 
@@ -313,16 +288,13 @@ class ReplayEngine:
         path: str,
         batch_col: str = "ingest_file",
         mode: str = "auto",
-        fold_every: int | None = None,
         final_fold: str = "all",
     ) -> ReplayStats:
         """Replay a change log laid out as parquet partitioned by batch —
         partition pruning makes each per-batch read touch only its own
         files (the 'tail above the high-watermark' pattern, SURVEY §2.1 S1)."""
         changes = self.spark.read.parquet(path)
-        return self.replay(
-            changes, batch_col=batch_col, mode=mode, fold_every=fold_every, final_fold=final_fold
-        )
+        return self.replay(changes, batch_col=batch_col, mode=mode, final_fold=final_fold)
 
 
 def batch_oracle(changes: DataFrame, plan: RefinePlan) -> DataFrame:

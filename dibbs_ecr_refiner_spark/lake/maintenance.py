@@ -26,28 +26,34 @@ from . import meta
 from .table import LakeTable
 
 
+# Transient scratch one fold commit may use: the resolved read, its
+# shuffle and the staged rewrite of one group of buckets. ``compact`` reads
+# it at call time.
+FOLD_SCRATCH_BYTES = 4 << 30
+
+
 def compact(
     table: LakeTable,
     buckets: list[int] | None = None,
     drop_tombstones_below: int | None = None,
     post=None,
-    max_buckets_per_commit: int | None = None,
 ) -> dict:
     """Rewrite ``buckets`` (default: all with >1 file, any merge-on-read
     delta file, or any file when GC'ing) as one base file each; optionally
     drop tombstones with change_lsn <= drop_tombstones_below.
 
-    ``max_buckets_per_commit=k`` bounds the TRANSIENT scratch of a big
-    fold: instead of reading + shuffling + staging the entire selection in
-    ONE commit — O(table) scratch on the shuffle/staging volume, which is
-    exactly how a 10^9-event convergence fold dies with ENOSPC — the
-    selection is folded in groups of k buckets, one atomic snapshot commit
-    per group. Every intermediate snapshot is a valid table (the groups
-    partition the bucket set, and an un-folded bucket still LWW-resolves
-    at read time), a crash between groups leaves the completed groups
-    committed and the rest still pending (``should_fold`` re-derives
-    them), and the final state is
-    row-identical to a one-shot fold. Scratch per commit is O(k·bucket).
+    The rewrite is disk-bounded: reading + shuffling + staging the whole
+    selection in ONE commit needs O(table) scratch on the shuffle/staging
+    volume, which is exactly how a 10^9-event convergence fold dies with
+    ENOSPC. So the selection is folded in groups of k buckets, one atomic
+    snapshot commit per group, with k = FOLD_SCRATCH_BYTES ÷ the mean
+    bytes per bucket of the current snapshot (at least 1) — scratch per
+    commit is O(k·bucket). Every intermediate snapshot is a valid table
+    (the groups partition the bucket set, and an un-folded bucket still
+    LWW-resolves at read time), a crash between groups leaves the
+    completed groups committed and the rest still pending (``should_fold``
+    re-derives them), and the final state is row-identical to a one-shot
+    fold.
 
     Folding MOR deltas happens for free: ``table.read`` LWW-resolves them,
     and the rewrite commits plain base files (``kind`` absent), so the
@@ -74,29 +80,29 @@ def compact(
     if not buckets:
         return {"skipped": True, "reason": "nothing to compact"}
 
-    if max_buckets_per_commit is not None and len(buckets) > max_buckets_per_commit:
-        k = int(max_buckets_per_commit)
-        if k < 1:
-            raise ValueError("max_buckets_per_commit must be >= 1")
-        results = []
-        for i in range(0, len(buckets), k):
-            results.append(
-                compact(
-                    table,
-                    buckets=buckets[i : i + k],
-                    drop_tombstones_below=drop_tombstones_below,
-                    post=post,
-                )
-            )
-        done = [r for r in results if not r.get("skipped")]
-        return {
-            "grouped": True,
-            "commits": len(done),
-            "compacted_buckets": sum(r.get("compacted_buckets", 0) for r in done),
-            "snapshot_id": done[-1]["snapshot_id"] if done else None,
-            "results": results,
-        }
+    per_bucket = max(1, sum(f["bytes"] for f in snap["files"]) // snap["num_buckets"])
+    k = max(1, FOLD_SCRATCH_BYTES // per_bucket)
+    stamp = f"compact-{snap['snapshot_id']}-{int(time.time() * 1000)}"
+    results = [
+        _rewrite(table, buckets[i : i + k], f"{stamp}-{i}", drop_tombstones_below, post)
+        for i in range(0, len(buckets), k)
+    ]
+    if len(results) == 1:
+        return results[0]
+    return {
+        "grouped": True,
+        "group_buckets": k,
+        "commits": len(results),
+        "compacted_buckets": len(buckets),
+        "snapshot_id": results[-1]["snapshot_id"],
+        "results": results,
+    }
 
+
+def _rewrite(
+    table: LakeTable, buckets: list[int], batch_id: str, drop_tombstones_below, post
+) -> dict:
+    """One commit of ``compact``: rewrite ``buckets`` as one base file each."""
     # Fold pipeline shape (measured A/B in OPTIMIZATION_r06.md): the
     # resolved read keeps the LWW's map-side PARTIAL reduce — fold input
     # has high per-key multiplicity (base + one winner per touching delta
@@ -119,7 +125,6 @@ def compact(
     if post is not None:
         out = post(out)
 
-    batch_id = f"compact-{snap['snapshot_id']}-{int(time.time() * 1000)}"
     # A rewrite commit: the filtered read IS the new bucket content (rows
     # are already LWW winners); merge lays out the files, stamps their
     # footer stats and leaves the watermarks alone.

@@ -752,10 +752,6 @@ class LakeTable:
 
     # ---------------- MERGE ----------------
 
-    def is_applied(self, batch_id: str) -> bool:
-        snap = self.current_snapshot()
-        return bool(snap and batch_id in snap["applied_batches"])
-
     def prepass(self, changes: DataFrame, batch_col: str | None = None) -> dict:
         """Per-bucket event count, max ``change_lsn`` and ts range of the
         rows of ``changes``, in ONE partial-aggregate job (column pruning

@@ -21,6 +21,7 @@ fully-deleted conversation lands as a tombstone.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from .feed import ChangeFeedReader
@@ -79,6 +80,12 @@ def refresh_conversation_rollup(
             "last_ts",
         )
     )
-    res = dst.merge(rollup, batch_id, mode="mor")
+    # merge runs two jobs over the rollup (its bucket pre-pass, then the
+    # write); persisted, the join of the two aggregates runs once
+    rollup = rollup.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        res = dst.merge(rollup, batch_id, mode="mor")
+    finally:
+        rollup.unpersist()
     feed.commit()
     return res

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine import ReplayEngine
+from ..lake import maintenance
 from ..lake.table import LakeTable
 from ..plans.config import RefinePlan
 
@@ -55,7 +56,6 @@ def stream_replay(
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     mode: str = "mor",
-    fold_every: int | None = None,
 ):
     """Tail ``log_path`` as a stream and MERGE each micro-batch.
 
@@ -64,8 +64,10 @@ def stream_replay(
     with False it runs continuously. ``mode="mor"`` (default) commits each
     micro-batch as delta files — commit cost O(micro-batch), independent
     of table size; ``mode="cow"`` rewrites the touched buckets instead.
-    Fold governance stays explicit here (``fold_every`` epochs, or
-    ``maintenance.should_fold`` out of band) — a continuous stream has no
+    After each applied merge-on-read epoch the buckets over the
+    ``maintenance.should_fold`` threshold are folded — the same rule
+    ``ReplayEngine.replay`` applies between batches — so no bucket's
+    pending deltas outgrow the threshold; a continuous stream has no
     "completion" to fold at."""
     reader = spark.readStream.schema(CHANGE_SCHEMA)
     if max_files_per_trigger:
@@ -76,12 +78,10 @@ def stream_replay(
 
     def handle(df, epoch_id: int):
         res = eng.apply_batch(df, f"epoch-{epoch_id:08d}", mode=mode)
-        if (
-            fold_every
-            and not res.get("skipped")
-            and (epoch_id + 1) % fold_every == 0
-        ):
-            eng.fold_deltas()
+        if mode == "mor" and not res.get("skipped"):
+            over = maintenance.should_fold(table)
+            if over:
+                eng.fold_deltas(buckets=over)
 
     writer = changes.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

@@ -1,8 +1,9 @@
-"""One pipeline, every surface: CSV quarantine ingest → MOR replay with a
+"""One pipeline, every surface: CSV quarantine ingest → auto replay with a
 mid-stream fold → display-converged read → change-feed-driven rollup view
 → snapshot expiry + GC → CSV export. The cross-surface regression net: if
 any stage's contract drifts, the end state stops matching the oracle."""
 
+import collections
 import csv
 import io
 import json
@@ -42,7 +43,7 @@ def _to_csv_lines(rows) -> str:
 def test_csv_to_export_full_pipeline(spark, tmp_path):
     params = ChangeLogParams(
         n_conversations=25, turns_per_conv=6, n_events=1500,
-        pct_duplicates=0.08, pct_deletes=0.05, n_batches=3,
+        pct_duplicates=0.08, pct_deletes=0.05, n_batches=12,
     )
     changes_df = generate_changes(spark, params)
 
@@ -54,11 +55,22 @@ def test_csv_to_export_full_pipeline(spark, tmp_path):
     assert quarantined.count() == 2
     assert valid.count() == changes_df.count()
 
-    # 2) MOR replay with a fold mid-stream
+    # 2) auto replay: a bucket past 8 deltas folds between batches
     table = LakeTable(spark, str(tmp_path / "lake"), num_buckets=8)
     eng = ReplayEngine(spark, table, default_plan())
-    stats = eng.replay(valid, mode="mor", fold_every=2)
+    stats = eng.replay(valid)
     assert stats.batches == params.n_batches
+    for rec in stats.lineage[1:]:
+        before = table.snapshot(rec["snapshot_id"] - 1)
+        deltas = collections.Counter(
+            f["bucket"] for f in before["files"] if f.get("kind") == "delta"
+        )
+        assert max(deltas.values(), default=0) <= 8, "a batch landed on an over-threshold bucket"
+    applied = table.current_snapshot()["applied_batches"]
+    assert any(
+        b.startswith("compact-") and r["snapshot_id"] < stats.lineage[-1]["snapshot_id"]
+        for b, r in applied.items()
+    ), "no fold ran between batches"
 
     # 3) refined state equals the oracle computed from the ORIGINAL frame
     #    (CSV round-trip loses nothing)

@@ -7,6 +7,8 @@ Correctness bar: a MOR replay, through ``ReplayEngine.read_refined`` or
 after a fold, must equal the COW replay and the batch oracle exactly —
 including narrative-display back-fill across batches."""
 
+import collections
+import dataclasses
 import datetime as dt
 
 import pytest
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 
 from dibbs_ecr_refiner_spark.engine import ReplayEngine, batch_oracle, final_state_matches
 from dibbs_ecr_refiner_spark.fixtures.changelog import ChangeLogParams, generate_changes
+from dibbs_ecr_refiner_spark.lake import maintenance
 from dibbs_ecr_refiner_spark.lake.table import LakeTable
 from dibbs_ecr_refiner_spark.plans.config import default_plan
 
@@ -62,6 +65,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.select(*CMP_COLS).collect())
 
 
+def _bytes_per_bucket(snap):
+    return sum(f["bytes"] for f in snap["files"]) // snap["num_buckets"]
+
+
 # ---------------- MOR replay correctness ----------------
 
 
@@ -107,13 +114,13 @@ def test_mor_fold_converges_to_cow(spark, tmp_path, changes):
     assert _rows(mor_table.read()) == _rows(cow_table.read())
 
 
-def test_grouped_fold_equals_oneshot_with_valid_chain(spark, tmp_path, changes):
-    """Disk-bounded fold: max_buckets_per_commit=k folds in groups of k
-    buckets, one atomic snapshot commit per group — O(k·bucket) transient
-    scratch instead of O(table). The grouped result must equal a one-shot
-    fold row-for-row, and every intermediate snapshot must be a valid
-    readable table (a crash between groups leaves committed groups folded
-    and the rest still pending)."""
+def test_grouped_fold_equals_oneshot_with_valid_chain(spark, tmp_path, changes, monkeypatch):
+    """Disk-bounded fold: with FOLD_SCRATCH_BYTES at three buckets' bytes,
+    compact folds in groups of 3 buckets, one atomic snapshot commit per
+    group — O(k·bucket) transient scratch instead of O(table). The grouped
+    result must equal a one-shot fold row-for-row, and every intermediate
+    snapshot must be a valid readable table (a crash between groups leaves
+    committed groups folded and the rest still pending)."""
     one_t, one_e = _fresh(spark, tmp_path, "one")
     one_e.replay(changes, mode="mor")
     one_e.fold_deltas()
@@ -125,8 +132,11 @@ def test_grouped_fold_equals_oneshot_with_valid_chain(spark, tmp_path, changes):
     )
     assert len(pending) > 3, "fixture must leave several delta buckets"
     v0 = grp_t.current_snapshot()["snapshot_id"]
-    res = grp_e.fold_deltas(max_buckets_per_commit=3)
-    assert res["grouped"]
+    monkeypatch.setattr(
+        maintenance, "FOLD_SCRATCH_BYTES", 3 * _bytes_per_bucket(grp_t.current_snapshot())
+    )
+    res = grp_e.fold_deltas()
+    assert res["grouped"] and res["group_buckets"] == 3
     assert res["commits"] == -(-len(pending) // 3)  # ceil
     vN = grp_t.current_snapshot()["snapshot_id"]
     assert vN == v0 + res["commits"], "one snapshot commit per group"
@@ -140,6 +150,34 @@ def test_grouped_fold_equals_oneshot_with_valid_chain(spark, tmp_path, changes):
     n = grp_t.read().count()
     for v in range(v0, vN + 1):
         assert grp_t.read(version=v).count() == n
+
+
+def test_auto_completion_fold_commits_in_scratch_bounded_groups(
+    spark, tmp_path, changes, monkeypatch
+):
+    """A default auto replay's completion fold is disk-bounded with no
+    option set: compact folds the pending buckets in groups of
+    k = FOLD_SCRATCH_BYTES ÷ the snapshot's mean bytes per bucket, one
+    commit each, and plain read() still equals the batch oracle, displays
+    included."""
+    probe, probe_eng = _fresh(spark, tmp_path, "probe")
+    probe_eng.replay(changes, mode="mor")
+    monkeypatch.setattr(
+        maintenance, "FOLD_SCRATCH_BYTES", 3 * _bytes_per_bucket(probe.current_snapshot())
+    )
+
+    table, eng = _fresh(spark, tmp_path)
+    stats = eng.replay(changes)
+    last = table.snapshot(stats.lineage[-1]["snapshot_id"])
+    pending = {f["bucket"] for f in last["files"] if f.get("kind") == "delta"}
+    k = maintenance.FOLD_SCRATCH_BYTES // _bytes_per_bucket(last)
+    assert 1 < k < len(pending), (k, len(pending))
+    folds = table.current_snapshot()["snapshot_id"] - last["snapshot_id"]
+    assert folds == -(-len(pending) // k)  # ceil
+    assert not any(
+        f.get("kind", "base") == "delta" for f in table.current_snapshot()["files"]
+    )
+    assert _rows(table.read()) == _rows(batch_oracle(changes, eng.plan).select(*CMP_COLS))
 
 
 def _added_kinds_per_commit(table, stats):
@@ -204,11 +242,28 @@ def test_auto_with_final_fold_resolves_all_mor_and_converges(spark, tmp_path, ch
     assert _rows(table.read()) == _rows(batch_oracle(changes, eng.plan).select(*CMP_COLS))
 
 
-def test_mor_replay_with_periodic_fold_matches_oracle(spark, tmp_path, changes):
+def _max_deltas_per_bucket(snap):
+    deltas = collections.Counter(f["bucket"] for f in snap["files"] if f.get("kind") == "delta")
+    return max(deltas.values(), default=0)
+
+
+def test_mor_replay_with_periodic_fold_matches_oracle(spark, tmp_path):
+    """An auto replay of more than 8 batches folds a bucket between batches
+    as soon as it holds more than 8 deltas: no batch commits onto a bucket
+    over that bound, a fold commit lands below the last batch's snapshot,
+    and the result still equals the batch oracle."""
     table, eng = _fresh(spark, tmp_path)
-    eng.replay(changes, mode="mor", fold_every=2)
-    assert final_state_matches(table.read(), batch_oracle(changes, eng.plan))
-    assert _rows(eng.read_refined()) == _rows(batch_oracle(changes, eng.plan).select(*CMP_COLS))
+    log = generate_changes(spark, dataclasses.replace(PARAMS, n_batches=12))
+    stats = eng.replay(log)
+    assert stats.batches == 12
+    for rec in stats.lineage[1:]:
+        assert _max_deltas_per_bucket(table.snapshot(rec["snapshot_id"] - 1)) <= 8
+    applied = table.current_snapshot()["applied_batches"]
+    last_batch = stats.lineage[-1]["snapshot_id"]
+    assert any(
+        b.startswith("compact-") and r["snapshot_id"] < last_batch for b, r in applied.items()
+    ), "no fold ran between batches"
+    assert _rows(table.read()) == _rows(batch_oracle(log, eng.plan).select(*CMP_COLS))
 
 
 def test_mor_exactly_once_reapply(spark, tmp_path, changes):
@@ -721,18 +776,12 @@ def test_mor_crash_resume_heals(spark, tmp_path, changes):
 
 def test_rerun_after_crash_before_completion_fold_still_folds(spark, tmp_path, changes):
     """A crash between the last batch commit and the completion fold
-    leaves every batch applied and the table all pending deltas. The rerun
-    applies no batch, yet must still fold: no delta file may remain and
-    the plain read equals the batch oracle, displays included."""
+    leaves every batch applied and the table all pending deltas — the
+    state a merge-on-read replay leaves. The rerun applies no batch, yet
+    must still fold: no delta file may remain and the plain read equals
+    the batch oracle, displays included."""
     table, eng = _fresh(spark, tmp_path)
-
-    def crash(*_a, **_kw):
-        raise OSError("simulated crash before the completion fold")
-
-    eng.fold_deltas = crash
-    with pytest.raises(OSError):
-        eng.replay(changes)
-    del eng.fold_deltas
+    eng.replay(changes, mode="mor")
     assert any(f.get("kind") == "delta" for f in table.current_snapshot()["files"])
 
     stats = eng.replay(changes)
@@ -792,11 +841,13 @@ def test_auto_replay_final_fold_threshold_keeps_refined_read_converged(
     assert final_state_matches(table.read(), batch_oracle(changes, eng.plan))
 
 
-def test_continuous_pipeline_threshold_final_fold_long_replay(spark, tmp_path, changes):
+def test_continuous_pipeline_threshold_final_fold_long_replay(
+    spark, tmp_path, changes, monkeypatch
+):
     """Continuous-pipeline mode (final_fold="threshold", the documented
     knob): replay call boundaries are arbitrary, so across a LONG sequence
-    of alternating replay calls folds must stay demand-driven (no
-    fold-everything sweep at each call's end) while read_refined() stays
+    of alternating replay calls folds must stay demand-driven (no sweep
+    that folds everything at each call's end) while read_refined() stays
     oracle-equal after every call."""
     table, eng = _fresh(spark, tmp_path)
     from dibbs_ecr_refiner_spark.lake.maintenance import should_fold
@@ -833,13 +884,16 @@ def test_continuous_pipeline_threshold_final_fold_long_replay(spark, tmp_path, c
     assert final_state_matches(table.read(), batch_oracle(seen, eng.plan))
 
     # demand-driven + disk-bounded compose: a later operator decision to
-    # converge the pipeline's table uses the grouped fold, and the result
-    # is the full COW guarantee (all base files, displays included)
+    # converge the pipeline's table folds in scratch-bounded groups (here
+    # two buckets' bytes), and the result is the full COW guarantee (all
+    # base files, displays included)
     pending = should_fold(table, max_deltas_per_bucket=0)
-    if pending:
-        res = eng.fold_deltas(max_buckets_per_commit=2)
-        if res.get("grouped"):
-            assert res["commits"] == -(-len(pending) // 2)
+    assert len(pending) > 2, "the pipeline must leave several delta buckets"
+    monkeypatch.setattr(
+        maintenance, "FOLD_SCRATCH_BYTES", 2 * _bytes_per_bucket(table.current_snapshot())
+    )
+    res = eng.fold_deltas()
+    assert res["commits"] == -(-len(pending) // 2)
     assert not any(
         f.get("kind", "base") == "delta" for f in table.current_snapshot()["files"]
     )

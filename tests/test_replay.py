@@ -238,6 +238,8 @@ def test_replay_rejects_misspelled_final_fold(spark, tmp_path, changes):
     table, eng = _fresh(spark, tmp_path)
     with pytest.raises(ValueError, match="final_fold"):
         eng.replay(changes, final_fold="thresold")
+    with pytest.raises(ValueError, match="final_fold"):
+        eng.replay(changes, final_fold="none")
     assert table._current_version() is None  # rejected before any work
 
 
@@ -247,7 +249,7 @@ def test_all_null_ts_batch_ingests(spark, tmp_path, changes):
     the bucket simply stays must-scan at prune time."""
     nullts = changes.withColumn("ts", F.lit(None).cast("timestamp"))
     table, eng = _fresh(spark, tmp_path)
-    stats = eng.replay(nullts, mode="mor", final_fold="none")
+    stats = eng.replay(nullts, mode="mor")
     assert stats.batches == PARAMS.n_batches
     # per-batch path (apply_batch computes its own pre-pass) too
     table2 = LakeTable(spark, str(tmp_path / "lake2"), num_buckets=8)

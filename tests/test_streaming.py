@@ -2,6 +2,7 @@
 checkpointed resume processes only new files (exactly-once), windowed
 rates and stateful dedup run to completion on a memory sink."""
 
+import dataclasses
 import os
 
 import pytest
@@ -9,6 +10,7 @@ from pyspark.sql import functions as F
 
 from dibbs_ecr_refiner_spark.engine import batch_oracle, final_state_matches
 from dibbs_ecr_refiner_spark.fixtures.changelog import ChangeLogParams, generate_changes
+from dibbs_ecr_refiner_spark.lake.maintenance import should_fold
 from dibbs_ecr_refiner_spark.lake.table import LakeTable
 from dibbs_ecr_refiner_spark.plans.config import default_plan
 from dibbs_ecr_refiner_spark.streaming.apply import (
@@ -48,23 +50,38 @@ def test_stream_replay_matches_batch_oracle(spark, tmp_path, log_dir):
     assert len(table.current_snapshot()["applied_batches"]) >= 2
 
 
-def test_stream_replay_mor_with_fold_matches_batch_oracle(spark, tmp_path, log_dir):
+@pytest.fixture(scope="module")
+def long_log_dir(spark, tmp_path_factory):
+    """More log files than should_fold's threshold of 8 deltas per bucket."""
+    p = tmp_path_factory.mktemp("streamlog_long")
+    params = dataclasses.replace(PARAMS, n_batches=10)
+    generate_changes(spark, params).repartition("ingest_file").write.mode(
+        "overwrite"
+    ).partitionBy("ingest_file").parquet(str(p / "log"))
+    return str(p / "log")
+
+
+def test_stream_replay_mor_with_fold_matches_batch_oracle(spark, tmp_path, long_log_dir):
     """Low-latency streaming mode: each micro-batch commits as MOR delta
-    files (commit cost independent of table size), folding every 2 epochs;
-    final state still equals the batch oracle."""
+    files (commit cost independent of table size), and a bucket folds as
+    soon as it holds more than 8 deltas: a fold runs, no bucket ends over
+    the threshold, and the final state equals the batch oracle."""
     table = LakeTable(spark, str(tmp_path / "lake"), num_buckets=8)
     q = stream_replay(
         spark,
-        log_dir,
+        long_log_dir,
         table,
         default_plan(),
         str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
         mode="mor",
-        fold_every=2,
     )
     q.awaitTermination(300)
-    changes = spark.read.parquet(log_dir)
+    applied = table.current_snapshot()["applied_batches"]
+    assert sum(b.startswith("epoch-") for b in applied) > 8
+    assert any(b.startswith("compact-") for b in applied), "no fold ran"
+    assert not should_fold(table)
+    changes = spark.read.parquet(long_log_dir)
     assert final_state_matches(table.read(), batch_oracle(changes, default_plan()))
 
 

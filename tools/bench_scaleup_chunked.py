@@ -131,23 +131,16 @@ def main() -> None:
         out["events_per_sec"] = round(actual_events / ingest_sec, 1)
         out["actual_events"] = actual_events
 
-        # Disk-bounded convergence fold: group size derived from the
-        # manifest's own byte accounting so per-commit transient scratch
-        # (read + shuffle + staged rewrite of the group) stays under the
-        # budget — the unbounded one-commit fold is exactly what died with
-        # ENOSPC at 1.05B events. Scale-adaptive, not a constant: k shrinks
-        # as buckets grow.
+        # Convergence fold: compact folds in commit groups sized from the
+        # manifest's byte accounting (maintenance.FOLD_SCRATCH_BYTES per
+        # commit) — the unbounded one-commit fold is what died with ENOSPC
+        # at 1.05B events.
         t0 = time.time()
-        snap = table.current_snapshot()
-        table_bytes = sum(int(f.get("bytes", 0)) for f in snap["files"])
-        n_buckets = int(snap["num_buckets"])
-        per_bucket = max(1, table_bytes // n_buckets)
-        budget = int(os.environ.get("SPARK_GRAFT_FOLD_SCRATCH_BYTES", 4 * 1024**3))
-        k = max(1, min(n_buckets, budget // per_bucket))
-        fold_res = eng.fold_deltas(max_buckets_per_commit=k)
+        fold_res = eng.fold_deltas()
         out["fold_sec"] = round(time.time() - t0, 1)
-        out["fold_group_buckets"] = k
-        out["fold_commits"] = int(fold_res.get("commits", 1)) if fold_res else 1
+        # a one-commit fold returns its merge result, a grouped one a summary
+        out["fold_commits"] = fold_res.get("commits", 1)
+        out["fold_group_buckets"] = fold_res.get("group_buckets", fold_res["compacted_buckets"])
         out["events_per_sec_incl_fold"] = round(
             actual_events / (ingest_sec + out["fold_sec"]), 1
         )
