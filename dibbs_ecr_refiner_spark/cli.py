@@ -78,7 +78,7 @@ def cmd_compact(args) -> dict:
         plan = ConfigStore(spark, args.config).load_plan()
         post = lambda d: enrich_displays(d, plan)  # noqa: E731
     res = compact(table, drop_tombstones_below=gc_below, post=post)
-    return {"cmd": "compact", "gc_below": gc_below, **{k: v for k, v in res.items() if k != "seconds"}}
+    return {"cmd": "compact", "gc_below": gc_below, **{k: v for k, v in res.items() if k != "results"}}
 
 
 def cmd_expire(args) -> dict:
@@ -404,7 +404,7 @@ def main(argv=None) -> int:
     r.add_argument("--buckets", type=int, default=64)
     r.add_argument("--mode", choices=["auto", "cow", "mor"], default="auto",
                    help="auto (default) commits every batch as delta files (mor), folds "
-                        "a bucket between batches once it holds more than 8 deltas and "
+                        "a bucket between batches once it holds more than 8 delta commits and "
                         "folds all pending deltas at the end; mor commits delta files "
                         "resolved at read and never folds; cow rewrites touched buckets")
 

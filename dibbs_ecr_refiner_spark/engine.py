@@ -227,7 +227,7 @@ class ReplayEngine:
         ``mode="auto"`` (default) commits every batch merge-on-read: delta
         files, write cost O(batch) instead of O(touched buckets). Folding
         is DEMAND-driven: between batches, the buckets whose pending delta
-        count exceeds the ``should_fold`` threshold are compacted, so read
+        commits exceed the ``should_fold`` threshold are compacted, so read
         amplification stays bounded without a sweep that folds everything.
         ``mode="mor"`` commits the same delta files and never folds;
         ``mode="cow"`` rewrites the touched buckets on every commit.

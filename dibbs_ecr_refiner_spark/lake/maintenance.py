@@ -18,6 +18,7 @@ expiry in Iceberg and the reference's run-scoped manifest lifecycle
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -53,7 +54,9 @@ def compact(
     LWW-resolves at read time), a crash between groups leaves the
     completed groups committed and the rest still pending (``should_fold``
     re-derives them), and the final state is row-identical to a one-shot
-    fold.
+    fold. Returns {"group_buckets": k, "commits", "compacted_buckets",
+    "snapshot_id" (the last commit's), "results" (one merge result per
+    commit)}, or {"skipped": True, "reason"} when nothing needs folding.
 
     Folding MOR deltas happens for free: ``table.read`` LWW-resolves them,
     and the rewrite commits plain base files (``kind`` absent), so the
@@ -87,10 +90,7 @@ def compact(
         _rewrite(table, buckets[i : i + k], f"{stamp}-{i}", drop_tombstones_below, post)
         for i in range(0, len(buckets), k)
     ]
-    if len(results) == 1:
-        return results[0]
     return {
-        "grouped": True,
         "group_buckets": k,
         "commits": len(results),
         "compacted_buckets": len(buckets),
@@ -142,8 +142,6 @@ def expire_snapshots(table: LakeTable, keep_last: int = 5) -> dict:
     Data files that only expired snapshots referenced become orphans and
     are reclaimed by the next ``gc_orphans`` (which scans every RETAINED
     manifest, so retained history stays readable)."""
-    import os
-
     cur = table._current_version()
     if cur is None:
         return {"expired": 0}
@@ -167,7 +165,6 @@ def _retained_references(table: LakeTable) -> tuple[set[str], set[str]]:
     scans. Segment paths are collected from the RAW manifests so GC can
     also sweep segments orphaned by expire/abort/conflict."""
     import json
-    import os
 
     from . import manifests as _mf
 
@@ -192,7 +189,6 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
     were expired (``expire_snapshots``). ``min_age_sec`` guards in-flight
     writers (an uncommitted dir younger than the horizon is left alone).
     ≙ Iceberg's remove_orphan_files."""
-    import os
     import shutil
 
     referenced, referenced_segs = _retained_references(table)
@@ -307,19 +303,22 @@ def rebucket(table: LakeTable, new_num_buckets: int) -> dict:
 
 def should_fold(table: LakeTable, max_deltas_per_bucket: int = 8) -> list[int]:
     """Fold-scheduling policy for merge-on-read tables: the buckets whose
-    pending delta-file count exceeds the threshold. Read-time merge cost
+    pending delta commits exceed the threshold. Read-time merge cost
     grows with deltas per bucket (every read of the bucket re-reduces
     them), so a bounded threshold bounds read amplification; the caller
     compacts exactly these buckets (``compact(table, buckets=...)``)
-    instead of sweeping the whole table."""
+    instead of sweeping the whole table. A commit counts once per bucket
+    however many files it wrote there (``merge`` salts a hot bucket into
+    up to 4), so the threshold is a number of batches for every bucket."""
     snap = table.current_snapshot()
     if snap is None:
         return []
-    deltas: dict[int, int] = {}
+    commits: dict[int, set[str]] = {}
     for f in snap["files"]:
         if f.get("kind", "base") == "delta":
-            deltas[f["bucket"]] = deltas.get(f["bucket"], 0) + 1
-    return sorted(b for b, n in deltas.items() if n > max_deltas_per_bucket)
+            # each commit writes its own directory per bucket
+            commits.setdefault(f["bucket"], set()).add(os.path.dirname(f["path"]))
+    return sorted(b for b, dirs in commits.items() if len(dirs) > max_deltas_per_bucket)
 
 
 def min_safe_gc_lsn(table: LakeTable) -> int | None:
@@ -348,7 +347,6 @@ def verify_table(table: LakeTable) -> dict:
     Returns {"ok": bool, "snapshots_checked": n, "files_checked": n,
     "issues": [str...]} — empty issues on a healthy table."""
     import json as _json
-    import os
 
     from . import manifests as _mf
 

@@ -64,11 +64,12 @@ def stream_replay(
     with False it runs continuously. ``mode="mor"`` (default) commits each
     micro-batch as delta files — commit cost O(micro-batch), independent
     of table size; ``mode="cow"`` rewrites the touched buckets instead.
-    After each applied merge-on-read epoch the buckets over the
-    ``maintenance.should_fold`` threshold are folded — the same rule
-    ``ReplayEngine.replay`` applies between batches — so no bucket's
-    pending deltas outgrow the threshold; a continuous stream has no
-    "completion" to fold at."""
+    Unlike ``ReplayEngine.replay(mode="mor")``, which never folds, a
+    merge-on-read stream folds the buckets over the
+    ``maintenance.should_fold`` threshold after each applied epoch — the
+    rule an auto replay applies between batches — so no bucket's pending
+    deltas outgrow the threshold; a continuous stream has no "completion"
+    to fold at."""
     reader = spark.readStream.schema(CHANGE_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

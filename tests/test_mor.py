@@ -10,6 +10,7 @@ including narrative-display back-fill across batches."""
 import collections
 import dataclasses
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -136,7 +137,7 @@ def test_grouped_fold_equals_oneshot_with_valid_chain(spark, tmp_path, changes, 
         maintenance, "FOLD_SCRATCH_BYTES", 3 * _bytes_per_bucket(grp_t.current_snapshot())
     )
     res = grp_e.fold_deltas()
-    assert res["grouped"] and res["group_buckets"] == 3
+    assert res["group_buckets"] == 3
     assert res["commits"] == -(-len(pending) // 3)  # ceil
     vN = grp_t.current_snapshot()["snapshot_id"]
     assert vN == v0 + res["commits"], "one snapshot commit per group"
@@ -243,15 +244,18 @@ def test_auto_with_final_fold_resolves_all_mor_and_converges(spark, tmp_path, ch
 
 
 def _max_deltas_per_bucket(snap):
-    deltas = collections.Counter(f["bucket"] for f in snap["files"] if f.get("kind") == "delta")
-    return max(deltas.values(), default=0)
+    """The most pending delta commits in one bucket (should_fold's count)."""
+    commits = {
+        (f["bucket"], os.path.dirname(f["path"])) for f in snap["files"] if f.get("kind") == "delta"
+    }
+    return max(collections.Counter(b for b, _ in commits).values(), default=0)
 
 
 def test_mor_replay_with_periodic_fold_matches_oracle(spark, tmp_path):
     """An auto replay of more than 8 batches folds a bucket between batches
-    as soon as it holds more than 8 deltas: no batch commits onto a bucket
-    over that bound, a fold commit lands below the last batch's snapshot,
-    and the result still equals the batch oracle."""
+    as soon as it holds more than 8 delta commits: no batch commits onto a
+    bucket over that bound, a fold commit lands below the last batch's
+    snapshot, and the result still equals the batch oracle."""
     table, eng = _fresh(spark, tmp_path)
     log = generate_changes(spark, dataclasses.replace(PARAMS, n_batches=12))
     stats = eng.replay(log)
@@ -776,12 +780,18 @@ def test_mor_crash_resume_heals(spark, tmp_path, changes):
 
 def test_rerun_after_crash_before_completion_fold_still_folds(spark, tmp_path, changes):
     """A crash between the last batch commit and the completion fold
-    leaves every batch applied and the table all pending deltas — the
-    state a merge-on-read replay leaves. The rerun applies no batch, yet
-    must still fold: no delta file may remain and the plain read equals
-    the batch oracle, displays included."""
+    leaves every batch applied and the table all pending deltas. The rerun
+    applies no batch, yet must still fold: no delta file may remain and
+    the plain read equals the batch oracle, displays included."""
     table, eng = _fresh(spark, tmp_path)
-    eng.replay(changes, mode="mor")
+
+    def crash(*_a, **_kw):
+        raise OSError("simulated crash before the completion fold")
+
+    eng.fold_deltas = crash
+    with pytest.raises(OSError):
+        eng.replay(changes)
+    del eng.fold_deltas
     assert any(f.get("kind") == "delta" for f in table.current_snapshot()["files"])
 
     stats = eng.replay(changes)

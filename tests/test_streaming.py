@@ -52,7 +52,8 @@ def test_stream_replay_matches_batch_oracle(spark, tmp_path, log_dir):
 
 @pytest.fixture(scope="module")
 def long_log_dir(spark, tmp_path_factory):
-    """More log files than should_fold's threshold of 8 deltas per bucket."""
+    """More log files than should_fold's threshold of 8 delta commits per
+    bucket."""
     p = tmp_path_factory.mktemp("streamlog_long")
     params = dataclasses.replace(PARAMS, n_batches=10)
     generate_changes(spark, params).repartition("ingest_file").write.mode(
@@ -64,8 +65,8 @@ def long_log_dir(spark, tmp_path_factory):
 def test_stream_replay_mor_with_fold_matches_batch_oracle(spark, tmp_path, long_log_dir):
     """Low-latency streaming mode: each micro-batch commits as MOR delta
     files (commit cost independent of table size), and a bucket folds as
-    soon as it holds more than 8 deltas: a fold runs, no bucket ends over
-    the threshold, and the final state equals the batch oracle."""
+    soon as it holds more than 8 delta commits: a fold runs, no bucket ends
+    over the threshold, and the final state equals the batch oracle."""
     table = LakeTable(spark, str(tmp_path / "lake"), num_buckets=8)
     q = stream_replay(
         spark,

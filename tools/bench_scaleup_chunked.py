@@ -138,9 +138,8 @@ def main() -> None:
         t0 = time.time()
         fold_res = eng.fold_deltas()
         out["fold_sec"] = round(time.time() - t0, 1)
-        # a one-commit fold returns its merge result, a grouped one a summary
-        out["fold_commits"] = fold_res.get("commits", 1)
-        out["fold_group_buckets"] = fold_res.get("group_buckets", fold_res["compacted_buckets"])
+        out["fold_commits"] = fold_res["commits"]
+        out["fold_group_buckets"] = fold_res["group_buckets"]
         out["events_per_sec_incl_fold"] = round(
             actual_events / (ingest_sec + out["fold_sec"]), 1
         )
