@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 
+from . import manifests
 from .table import LakeTable
 
 
@@ -40,16 +40,13 @@ class ChangeFeedReader:
         self.cursor_path = cursor_path
         self._pending: int | None = None
 
-    def _read_cursor(self) -> int | None:
+    def position(self) -> int | None:
+        """Last acknowledged snapshot version (None = never committed:
+        the next poll returns the whole table)."""
         if not os.path.exists(self.cursor_path):
             return None
         with open(self.cursor_path) as f:
             return int(json.load(f)["version"])
-
-    def position(self) -> int | None:
-        """Last acknowledged snapshot version (None = never committed:
-        the next poll returns the whole table)."""
-        return self._read_cursor()
 
     def poll(self) -> DataFrame:
         """Rows committed after the acknowledged position, up to the
@@ -61,7 +58,7 @@ class ChangeFeedReader:
         # _pending is only armed on a SUCCESSFUL poll: a commit() after a
         # failed poll must not advance the cursor past an undelivered span
         self._pending = None
-        frm = self._read_cursor()
+        frm = self.position()
         if cur is None or frm == cur:
             schema = self.table.schema()
             if schema is None:
@@ -92,8 +89,5 @@ class ChangeFeedReader:
         idempotency (e.g. its own LWW merge) absorbs the repeat."""
         if self._pending is None:
             raise RuntimeError("commit() without a prior poll()")
-        tmp = f"{self.cursor_path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": self._pending}, f)
-        os.replace(tmp, self.cursor_path)
+        manifests.replace(self.cursor_path, json.dumps({"version": self._pending}))
         return self._pending

@@ -23,7 +23,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from . import meta
+from . import manifests as _mf
 from .table import LakeTable
 
 
@@ -150,9 +150,9 @@ def expire_snapshots(table: LakeTable, keep_last: int = 5) -> dict:
     # and its data files survive until the tag is deleted.
     pinned = {int(t["version"]) for t in table.tags().values()}
     expired = 0
-    for v in meta.versions(table.root):
+    for v in _mf.versions(table._manifest_dir):
         if v != cur and v <= cur - keep_last and v not in pinned:
-            os.remove(os.path.join(table._manifest_dir, f"v{v:08d}.json"))
+            os.remove(_mf.snapshot_path(table._manifest_dir, v))
             expired += 1
     return {"expired": expired, "keep_last": keep_last, "current": cur, "pinned": sorted(pinned)}
 
@@ -164,21 +164,13 @@ def _retained_references(table: LakeTable) -> tuple[set[str], set[str]]:
     from under time travel (``read(version=...)``) and incremental
     scans. Segment paths are collected from the RAW manifests so GC can
     also sweep segments orphaned by expire/abort/conflict."""
-    import json
-
-    from . import manifests as _mf
-
     refs: set[str] = set()
     seg_refs: set[str] = set()
-    for v in meta.versions(table.root):
-        try:
-            with open(os.path.join(table._manifest_dir, f"v{v:08d}.json")) as f:
-                raw = json.load(f)
+    for _v, raw, snap, _err in _mf.retained(table._manifest_dir):
+        if raw is not None:
             seg_refs.update(_mf.segment_refs(raw))
-            snap = _mf.inflate(table._manifest_dir, raw)
-            refs.update(f_["path"] for f_ in snap["files"])
-        except (OSError, json.JSONDecodeError):
-            continue
+        if snap is not None:
+            refs.update(f["path"] for f in snap["files"])
     return refs, seg_refs
 
 
@@ -186,29 +178,39 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
     """Remove data files not referenced by any retained snapshot: commit
     dirs orphaned by a crash before commit or by a SnapshotConflict loser,
     stale staging dirs, and data files whose only referencing snapshots
-    were expired (``expire_snapshots``). ``min_age_sec`` guards in-flight
-    writers (an uncommitted dir younger than the horizon is left alone).
-    ≙ Iceberg's remove_orphan_files."""
+    were expired (``expire_snapshots``); plus orphaned manifest segments
+    and the temp files a crashed metadata publish left under
+    ``_manifests/`` and ``_refs/``. ``min_age_sec`` guards in-flight
+    writers (an uncommitted dir or file younger than the horizon is left
+    alone). ≙ Iceberg's remove_orphan_files."""
     import shutil
 
     referenced, referenced_segs = _retained_references(table)
     now = time.time()
     removed_dirs, removed_files = 0, 0
 
+    def remove_stale(p: str) -> int:
+        try:  # gone since the listing (a publish removes its own temp)
+            if now - os.path.getmtime(p) >= min_age_sec:
+                os.remove(p)
+                return 1
+        except FileNotFoundError:
+            pass
+        return 0
+
     # Manifest segments (lake/manifests.py) orphaned by expire_snapshots,
     # abort_snapshot, or a SnapshotConflict loser: a segment is live while
     # any retained v*.json references it; the age guard protects segments
-    # written by an in-flight commit whose snapshot file isn't down yet.
-    removed_segs = 0
-    import re as _re
-
+    # written by an in-flight commit whose snapshot file isn't down yet,
+    # and the temps of publishes still in flight.
+    removed_segs, removed_temps = 0, 0
     for fn in os.listdir(table._manifest_dir):
-        if not _re.fullmatch(r"seg-[0-9a-f]+\.json", fn):
-            continue
-        p = os.path.join(table._manifest_dir, fn)
-        if fn not in referenced_segs and now - os.path.getmtime(p) >= min_age_sec:
-            os.remove(p)
-            removed_segs += 1
+        if _mf.SEGMENT_FILE.fullmatch(fn) and fn not in referenced_segs:
+            removed_segs += remove_stale(os.path.join(table._manifest_dir, fn))
+    for d in (table._manifest_dir, _mf.refs_dir(table._manifest_dir)):
+        for fn in os.listdir(d) if os.path.isdir(d) else ():
+            if fn.startswith(_mf.TEMP_PREFIX):
+                removed_temps += remove_stale(os.path.join(d, fn))
 
     for token_dir in os.listdir(table._staging_dir):
         p = os.path.join(table._staging_dir, token_dir)
@@ -239,14 +241,8 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
             for dirpath, _dirs, files in os.walk(p):
                 for fn in files:
                     fp = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(fp, table.root)
-                    if (
-                        fn.endswith(".parquet")
-                        and rel not in referenced
-                        and now - os.path.getmtime(fp) >= min_age_sec
-                    ):
-                        os.remove(fp)
-                        removed_files += 1
+                    if fn.endswith(".parquet") and os.path.relpath(fp, table.root) not in referenced:
+                        removed_files += remove_stale(fp)
             continue
         if now - os.path.getmtime(p) >= min_age_sec:
             shutil.rmtree(p, ignore_errors=True)
@@ -255,6 +251,7 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
         "removed_dirs": removed_dirs,
         "removed_files": removed_files,
         "removed_segments": removed_segs,
+        "removed_temp_files": removed_temps,
     }
 
 
@@ -346,29 +343,19 @@ def verify_table(table: LakeTable) -> dict:
     manifests, and per-bucket watermarks never regress child→parent.
     Returns {"ok": bool, "snapshots_checked": n, "files_checked": n,
     "issues": [str...]} — empty issues on a healthy table."""
-    import json as _json
-
-    from . import manifests as _mf
-
     issues: list[str] = []
     snaps: dict[int, dict] = {}
     raws: dict[int, dict] = {}
-    for v in meta.versions(table.root):
-        try:
-            with open(os.path.join(table._manifest_dir, f"v{v:08d}.json")) as f:
-                raw = _json.load(f)
-        except (OSError, _json.JSONDecodeError) as exc:
-            issues.append(f"v{v}: manifest unreadable: {exc}")
-            continue
-        raws[v] = raw
-        for seg in sorted(_mf.segment_refs(raw)):
-            p = os.path.join(table._manifest_dir, seg)
-            if not os.path.exists(p):
-                issues.append(f"v{v}: missing segment {seg}")
-        try:
-            snaps[v] = _mf.inflate(table._manifest_dir, raw)
-        except (OSError, _json.JSONDecodeError) as exc:
-            issues.append(f"v{v}: segment unreadable: {exc}")
+    for v, raw, snap, err in _mf.retained(table._manifest_dir):
+        if raw is not None:
+            raws[v] = raw
+            for seg in sorted(_mf.segment_refs(raw)):
+                if not os.path.exists(os.path.join(table._manifest_dir, seg)):
+                    issues.append(f"v{v}: missing segment {seg}")
+        if snap is not None:
+            snaps[v] = snap
+        else:
+            issues.append(f"v{v}: {err}")
 
     files_checked = 0
     for v, snap in snaps.items():

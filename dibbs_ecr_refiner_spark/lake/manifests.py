@@ -41,6 +41,15 @@ removes ``v*.json``; a segment lives until NO retained snapshot references
 it. Every format-2 manifest is segmented: an on-disk manifest with an
 inline ``files`` list is rejected on load.
 
+It also owns the ``_manifests/`` layout — ``v<NNNNNNNN>.json`` snapshots,
+``seg-<hex>.json`` segments, ``_refs/<name>.json`` tags, the ``_current``
+pointer — and the two ways a metadata file is published: a full temp file
+(``TEMP_PREFIX``), then one step, so a reader never sees a torn file and a
+crash leaves at most a temp (``gc_orphans`` sweeps it). ``create_if_absent``
+hard-links it — immutable snapshots, segments, tags: a rename would silently
+replace a racing winner's file. ``replace`` renames it — the ``_current``
+pointer and consumer cursors.
+
 Pure stdlib on purpose: the streaming source's driver/executor code loads
 snapshots through this module without a SparkSession.
 """
@@ -49,6 +58,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 from collections import OrderedDict
 
@@ -60,6 +70,73 @@ APPLIED_SPILL_AT = 64
 
 _SEG_CACHE: OrderedDict[str, object] = OrderedDict()
 _SEG_CACHE_MAX = 4096
+
+SNAPSHOT_FILE = re.compile(r"v(\d{8})\.json")
+SEGMENT_FILE = re.compile(r"seg-[0-9a-f]+\.json")
+TEMP_PREFIX = ".tmp-"
+
+
+def snapshot_path(manifest_dir: str, version: int) -> str:
+    return os.path.join(manifest_dir, f"v{version:08d}.json")
+
+
+def pointer_path(directory: str) -> str:
+    """The version pointer of a table's ``_manifests/`` or a config store."""
+    return os.path.join(directory, "_current")
+
+
+def refs_dir(manifest_dir: str) -> str:
+    return os.path.join(manifest_dir, "_refs")
+
+
+def tag_path(manifest_dir: str, name: str) -> str:
+    return os.path.join(refs_dir(manifest_dir), f"{name}.json")
+
+
+def versions(manifest_dir: str) -> list[int]:
+    """Every retained snapshot version (published or staged), ascending."""
+    return sorted(
+        int(m.group(1)) for fn in os.listdir(manifest_dir) if (m := SNAPSHOT_FILE.fullmatch(fn))
+    )
+
+
+def _write_temp(path: str, text: str) -> str:
+    """Write ``text`` to a fresh temp file next to ``path`` (same directory,
+    so publishing never crosses a filesystem); returns the temp's path."""
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f"{TEMP_PREFIX}{uuid.uuid4().hex}-{tail}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    return tmp
+
+
+def create_if_absent(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` unless a file is already there: the
+    temp carries the full content before the hard link claims the name,
+    and ``os.link`` raises FileExistsError if another writer holds it."""
+    tmp = _write_temp(path, text)
+    try:
+        os.link(tmp, path)
+    finally:
+        os.remove(tmp)
+
+
+def replace(path: str, text: str) -> None:
+    """Publish ``text`` at ``path``, replacing any file there."""
+    os.replace(_write_temp(path, text), path)
+
+
+def read_pointer(path: str) -> int | None:
+    """The int an int-pointer file holds, or None when there is none."""
+    try:
+        with open(path) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def flip_pointer(path: str, value: int) -> None:
+    replace(path, str(value))
 
 
 def _load_segment(manifest_dir: str, rel: str):
@@ -79,14 +156,10 @@ def _load_segment(manifest_dir: str, rel: str):
 
 def _write_segment(manifest_dir: str, obj) -> str:
     """Write one immutable segment file; returns its manifest-relative
-    path. Atomic (tmp + rename) so a reader never sees a torn segment;
-    compact separators — segments are the bulk of metadata bytes."""
+    path. Compact separators — segments are the bulk of metadata bytes."""
     rel = f"seg-{uuid.uuid4().hex[:16]}.json"
     final = os.path.join(manifest_dir, rel)
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, separators=(",", ":"))
-    os.rename(tmp, final)
+    create_if_absent(final, json.dumps(obj, separators=(",", ":")))
     _SEG_CACHE[final] = obj
     return rel
 
@@ -178,5 +251,21 @@ def segment_refs(raw_snap: dict) -> set[str]:
 def load_snapshot(manifest_dir: str, version: int) -> dict:
     """Load + inflate one snapshot by version. Raises FileNotFoundError
     for an expired version — span walks rely on that to fall back."""
-    with open(os.path.join(manifest_dir, f"v{version:08d}.json")) as f:
+    with open(snapshot_path(manifest_dir, version)) as f:
         return inflate(manifest_dir, json.load(f))
+
+
+def retained(manifest_dir: str):
+    """Every retained snapshot file as ``(version, raw, snap, error)``: its
+    RAW on-disk JSON (None when unreadable), the inflated snapshot (None
+    when the manifest or a segment it references is unreadable) and what
+    failed. GC and fsck both walk this, so they agree on what is retained."""
+    for v in versions(manifest_dir):
+        raw = snap = err = None
+        try:
+            with open(snapshot_path(manifest_dir, v)) as f:
+                raw = json.load(f)
+            snap = inflate(manifest_dir, raw)
+        except (OSError, json.JSONDecodeError) as exc:
+            err = f"{'manifest' if raw is None else 'segment'} unreadable: {exc}"
+        yield v, raw, snap, err

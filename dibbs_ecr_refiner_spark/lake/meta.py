@@ -34,30 +34,12 @@ def manifest_dir(root: str) -> str:
     return os.path.join(root, "_manifests")
 
 
-def refs_dir(root: str) -> str:
-    return os.path.join(manifest_dir(root), "_refs")
-
-
 # ---------------- snapshots ----------------
 
 
 def current_version(root: str) -> int | None:
     """The published snapshot version, or None for a table with none."""
-    try:
-        with open(os.path.join(manifest_dir(root), "_current")) as f:
-            return int(f.read().strip())
-    except FileNotFoundError:
-        return None
-
-
-_VERSION_FILE = re.compile(r"v(\d{8})\.json")
-
-
-def versions(root: str) -> list[int]:
-    """Every retained snapshot version (published or staged), ascending."""
-    return sorted(
-        int(m.group(1)) for fn in os.listdir(manifest_dir(root)) if (m := _VERSION_FILE.fullmatch(fn))
-    )
+    return manifests.read_pointer(manifests.pointer_path(manifest_dir(root)))
 
 
 def snapshot(root: str, version: int | None = None) -> dict | None:
@@ -98,24 +80,25 @@ def check_tag_name(name: str) -> None:
 
 def tags(root: str) -> dict[str, dict]:
     out: dict[str, dict] = {}
+    refs = manifests.refs_dir(manifest_dir(root))
     try:
-        entries = os.listdir(refs_dir(root))
+        entries = os.listdir(refs)
     except FileNotFoundError:
         return out
     for fn in entries:
         if fn.endswith(".json") and not fn.startswith("."):
             try:
-                with open(os.path.join(refs_dir(root), fn)) as f:
+                with open(os.path.join(refs, fn)) as f:
                     out[fn[:-5]] = json.load(f)
             except (OSError, json.JSONDecodeError):
-                continue  # racing delete / half-linked temp
+                continue  # racing delete
     return out
 
 
 def resolve_tag(root: str, name: str) -> int:
     check_tag_name(name)
     try:
-        with open(os.path.join(refs_dir(root), f"{name}.json")) as f:
+        with open(manifests.tag_path(manifest_dir(root), name)) as f:
             return int(json.load(f)["version"])
     except (OSError, ValueError, KeyError, TypeError):
         raise ValueError(f"unknown tag {name!r}") from None

@@ -7,7 +7,8 @@ The design mirrors, at lake scale, the reference's two commit artifacts:
 
 - the ``RefinerComplete`` manifest written only after all outputs succeed
   (reference refiner/app/lambda/lambda_function.py:276-295) → our snapshot
-  JSON, committed by atomic rename only after all data files are in place;
+  JSON, created only after all data files are in place, and only if no
+  other writer created that version first;
 - deterministic output identity making retries idempotent
   (reference refiner/app/services/ecr/augment.py:119-224) → our
   ``applied_batches`` registry + per-bucket high-watermark LSNs, making a
@@ -17,8 +18,8 @@ Layout::
 
     <root>/
       data/c<token>/_bucket=<b>/part-*.parquet   # immutable per-commit dirs
-      _manifests/v<NNNNNNNN>.json                # immutable snapshots
-      _manifests/_current                        # pointer, atomic rename
+      _manifests/                                # snapshots, segments, tags,
+                                                 # pointer: lake/manifests.py
       _staging/<token>/...                       # uncommitted writes
 
 Commit-dir names carry a uuid token, not the snapshot version, so two
@@ -57,8 +58,9 @@ Scale properties:
   schema (additive merge); old files are read through the new schema
   (missing columns → NULL). Incompatible type changes fail the commit
   (≙ the reference's schema_version gate, lambda_function.py:604-627).
-- The commit primitive is POSIX atomic rename; on HDFS/S3-with-manifest
-  stores the same protocol holds with the FS shim swapped.
+- The commit primitive is POSIX create-if-absent (a hard link that fails
+  if the name exists); on HDFS/S3-with-manifest stores the same protocol
+  holds with the FS shim swapped (a conditional put).
 """
 
 from __future__ import annotations
@@ -308,29 +310,22 @@ class LakeTable:
         return meta.snapshot(self.root, version)
 
     def _commit(self, manifest: dict, publish: bool = True) -> None:
-        """Two-step atomic commit: immutable snapshot file (fails if a
-        concurrent writer claimed the version), then pointer flip. With
+        """Two-step atomic commit: create the immutable snapshot file if
+        absent (SnapshotConflict if a concurrent writer claimed the version
+        first — its file is never replaced), then flip the pointer. With
         ``publish=False`` the pointer is left alone — the snapshot is
         staged (write-audit-publish): readers keep seeing the old current,
         an auditor reads ``read(version=...)``, and ``publish_snapshot``
         flips or ``abort_snapshot`` discards."""
         v = manifest["snapshot_id"]
-        final = os.path.join(self._manifest_dir, f"v{v:08d}.json")
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        if os.path.exists(final):
-            os.remove(tmp)
-            raise SnapshotConflict(f"snapshot v{v} already committed")
-        os.rename(tmp, final)
+        try:
+            _mf.create_if_absent(
+                _mf.snapshot_path(self._manifest_dir, v), json.dumps(manifest, indent=1, sort_keys=True)
+            )
+        except FileExistsError:
+            raise SnapshotConflict(f"snapshot v{v} already committed") from None
         if publish:
-            self._flip_pointer(v)
-
-    def _flip_pointer(self, v: int) -> None:
-        ptr_tmp = os.path.join(self._manifest_dir, f"_current.tmp-{uuid.uuid4().hex}")
-        with open(ptr_tmp, "w") as f:
-            f.write(str(v))
-        os.rename(ptr_tmp, os.path.join(self._manifest_dir, "_current"))
+            _mf.flip_pointer(_mf.pointer_path(self._manifest_dir), v)
 
     def publish_snapshot(self, version: int) -> None:
         """WAP publish: make a staged snapshot the current one. The staged
@@ -343,7 +338,7 @@ class LakeTable:
             raise SnapshotConflict(
                 f"staged v{version} has parent {snap.get('parent_id')}, current is {cur}"
             )
-        self._flip_pointer(version)
+        _mf.flip_pointer(_mf.pointer_path(self._manifest_dir), version)
 
     def abort_snapshot(self, version: int) -> None:
         """WAP abort: discard a staged (never-published) snapshot. Its data
@@ -354,7 +349,7 @@ class LakeTable:
         cur = self._current_version()
         if cur is not None and version <= cur:
             raise ValueError(f"v{version} is published history — cannot abort")
-        os.remove(os.path.join(self._manifest_dir, f"v{version:08d}.json"))
+        os.remove(_mf.snapshot_path(self._manifest_dir, version))
 
     def schema(self) -> T.StructType | None:
         snap = self.current_snapshot()
@@ -368,32 +363,13 @@ class LakeTable:
     # excluded from expire_snapshots' horizon and its data files stay
     # GC-protected (gc honors every retained manifest) until the tag is
     # deleted. Each tag is its OWN file under ``_manifests/_refs/``,
-    # created atomically (full-content temp file hard-linked into place,
-    # which fails if the name exists): two concurrent taggers with
-    # different names each land their file — nobody's pin is lost to a
-    # read-modify-write of a shared refs blob — and same-name taggers
-    # race to exactly one winner.
-
-    @property
-    def _refs_dir(self) -> str:
-        return meta.refs_dir(self.root)
+    # created if absent (``manifests.create_if_absent``): two concurrent
+    # taggers with different names each land their file — nobody's pin is
+    # lost to a read-modify-write of a shared refs blob — and same-name
+    # taggers race to exactly one winner.
 
     def tags(self) -> dict[str, dict]:
         return meta.tags(self.root)
-
-    def _write_tag_file(self, name: str, pin: dict) -> None:
-        """Atomic create-if-absent: the temp file carries the FULL content
-        before the hard link publishes the name, so a reader can never see
-        a partial tag; ``os.link`` raises FileExistsError on a name race."""
-        os.makedirs(self._refs_dir, exist_ok=True)
-        final = os.path.join(self._refs_dir, f"{name}.json")
-        tmp = os.path.join(self._refs_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(pin, f, indent=1, sort_keys=True)
-        try:
-            os.link(tmp, final)
-        finally:
-            os.remove(tmp)
 
     def tag(self, name: str, version: int | None = None, note: str | None = None) -> dict:
         """Pin ``name`` to a retained snapshot (default: current)."""
@@ -403,8 +379,10 @@ class LakeTable:
             raise ValueError("table has no snapshot to tag")
         self.snapshot(v)  # raises FileNotFoundError for an expired/unknown version
         pin = {"version": v, "created_at": time.time(), **({"note": note} if note else {})}
+        path = _mf.tag_path(self._manifest_dir, name)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         try:
-            self._write_tag_file(name, pin)
+            _mf.create_if_absent(path, json.dumps(pin, indent=1, sort_keys=True))
         except FileExistsError:
             # The racing winner's tag may itself be gone by the time we
             # re-read (deleted between our failed create and this lookup) —
@@ -415,15 +393,12 @@ class LakeTable:
         return {"tag": name, "version": v}
 
     def delete_tag(self, name: str) -> dict:
-        meta.check_tag_name(name)
-        path = os.path.join(self._refs_dir, f"{name}.json")
+        v = meta.resolve_tag(self.root, name)
         try:
-            with open(path) as f:
-                gone = json.load(f)
-            os.remove(path)
+            os.remove(_mf.tag_path(self._manifest_dir, name))
         except FileNotFoundError:
             raise ValueError(f"unknown tag {name!r}") from None
-        return {"tag": name, "version": gone["version"], "deleted": True}
+        return {"tag": name, "version": v, "deleted": True}
 
     def resolve_tag(self, name: str) -> int:
         return meta.resolve_tag(self.root, name)
@@ -678,7 +653,7 @@ class LakeTable:
         ``snapshots``): one row per retained snapshot, from the immutable
         manifest files — driver-side metadata only, no data-file reads."""
         rows = []
-        for v in meta.versions(self.root):
+        for v in _mf.versions(self._manifest_dir):
             s = self.snapshot(v)
             n_delta = sum(1 for x in s["files"] if x.get("kind", "base") == "delta")
             rows.append(

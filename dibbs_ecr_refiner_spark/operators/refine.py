@@ -294,9 +294,3 @@ def compile_refinement(plan: RefinePlan, guarded: bool = False):
         return out.withColumn("_outcome", F.when(unref, outcome).otherwise(F.col("_outcome")))
 
     return apply
-
-
-def outcome_counts(refined: DataFrame) -> DataFrame:
-    """Per-(role, outcome) accounting for lineage (≙ outcome interpretation
-    + skipped-code accounting, refine.py:330-398, lambda_function.py:852-872)."""
-    return refined.groupBy("role", "_outcome").count()

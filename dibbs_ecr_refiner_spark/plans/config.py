@@ -81,9 +81,6 @@ class RefinePlan:
             return {k.code for k in self.keep_codes}
         return {k.code for k in self.keep_codes if k.system == system}
 
-    def display_map(self) -> dict[tuple[str, str], str]:
-        return {(k.system, k.code): k.display for k in self.keep_codes if k.display}
-
     def rules_for(self, role: str) -> list[MatchRule]:
         return sorted((r for r in self.rules if r.role == role), key=lambda r: r.rule_idx)
 

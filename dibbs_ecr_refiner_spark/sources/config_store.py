@@ -19,7 +19,7 @@ Layout::
     <root>/v<NNNN>/refine_config.parquet
     <root>/v<NNNN>/keep_codes.parquet
     <root>/v<NNNN>/match_rules.parquet
-    <root>/_current            # version int, atomic rename
+    <root>/_current            # version int, atomic replace
     <root>/_lock               # present ⇒ maintenance in progress
     <root>/events.jsonl       # append-only audit log of config mutations
 
@@ -36,10 +36,10 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..lake import manifests
 from ..plans.config import (
     CURRENT_CONFIG_SCHEMA_VERSION,
     KeepCode,
@@ -76,15 +76,7 @@ def _append_event(root: str, event_type: str, version: int | None, payload: dict
     log, snapshot-style version dirs, atomic pointer flips)."""
     p = os.path.join(root, "events.jsonl")
     cur = os.path.join(root, "events.cursor")
-    if os.path.exists(cur):
-        with open(cur) as f:
-            n = int(f.read().strip())
-    elif os.path.exists(p):
-        # upgrade path for stores created before the cursor existed
-        with open(p, "rb") as f:
-            n = sum(1 for _ in f)
-    else:
-        n = 0
+    n = manifests.read_pointer(cur) or 0
     rec = {
         "event_id": n,
         "event_type": event_type,
@@ -94,10 +86,7 @@ def _append_event(root: str, event_type: str, version: int | None, payload: dict
     }
     with open(p, "a") as f:
         f.write(json.dumps(rec, sort_keys=True) + "\n")
-    tmp = cur + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(str(n + 1))
-    os.rename(tmp, cur)
+    manifests.flip_pointer(cur, n + 1)
 
 
 class MaintenanceLocked(Exception):
@@ -108,7 +97,8 @@ class MaintenanceLocked(Exception):
 def write_config_tables(spark: SparkSession, root: str, plan: RefinePlan) -> int:
     """Persist a RefinePlan as version-N dimension tables and flip
     ``_current``. Returns the new version."""
-    cur = _read_current(root)
+    pointer = manifests.pointer_path(root)
+    cur = manifests.read_pointer(pointer)
     version = (cur or 0) + 1
     vdir = os.path.join(root, f"v{version:04d}")
     os.makedirs(vdir, exist_ok=True)
@@ -151,20 +141,9 @@ def write_config_tables(spark: SparkSession, root: str, plan: RefinePlan) -> int
             "schema_version": plan.schema_version,
         },
     )
-    tmp = os.path.join(root, f"_current.tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.rename(tmp, os.path.join(root, "_current"))
+    manifests.flip_pointer(pointer, version)
     _append_event(root, "activate_version", version, {"previous": cur})
     return version
-
-
-def _read_current(root: str) -> int | None:
-    p = os.path.join(root, "_current")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
 
 
 class ConfigStore:
@@ -198,7 +177,7 @@ class ConfigStore:
         return os.path.exists(os.path.join(self.root, "_lock"))
 
     def current_version(self) -> int | None:
-        return _read_current(self.root)
+        return manifests.read_pointer(manifests.pointer_path(self.root))
 
     # ---- CRUD (≙ the reference's configuration endpoints, app/db/*/db.py:
     # every mutation is snapshot-style — a NEW immutable version + an audit

@@ -586,6 +586,39 @@ def test_concurrent_writer_loser_cannot_clobber_winner(spark, tmp_path):
     assert got == {("c1", 0): "base", ("c1", 1): "winner"}
 
 
+def test_loser_past_the_existence_check_still_raises_conflict(spark, tmp_path, monkeypatch):
+    """A check-then-rename commit has a window: the loser finds no
+    v<N>.json, the winner creates it, and the loser's rename replaces it.
+    Every existence probe of a snapshot file answers "absent" here, so only
+    the create itself can refuse: the loser raises SnapshotConflict, the
+    winner's manifest stays byte-identical and its batch stays applied."""
+    import re
+
+    from dibbs_ecr_refiner_spark.lake.table import SnapshotConflict
+
+    table = mk(spark, tmp_path, [("c1", 0, "base", 1, False, None)])
+    stale_snap = table.current_snapshot()
+    table.merge(_delta(spark, [("c1", 1, "winner", 2, False, None)]), "winner")
+    v2 = os.path.join(table._manifest_dir, "v00000002.json")
+    with open(v2, "rb") as f:
+        winner_manifest = f.read()
+
+    real_exists = os.path.exists
+    snapshot_file = re.compile(r"_manifests/v\d{8}\.json$")
+    monkeypatch.setattr(os.path, "exists", lambda p: not snapshot_file.search(str(p)) and real_exists(p))
+    stale = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    stale.current_snapshot = lambda: stale_snap
+    with pytest.raises(SnapshotConflict):
+        stale.merge(_delta(spark, [("c9", 0, "loser", 3, False, None)]), "loser")
+    monkeypatch.undo()
+
+    with open(v2, "rb") as f:
+        assert f.read() == winner_manifest
+    assert "winner" in table.current_snapshot()["applied_batches"]
+    got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in table.read().collect()}
+    assert got == {("c1", 0): "base", ("c1", 1): "winner"}
+
+
 def test_merge_with_retry_recovers_from_conflict(spark, tmp_path):
     """Optimistic concurrency: a writer that loses the snapshot race
     retries against the new current snapshot and lands its batch on top of
@@ -709,6 +742,65 @@ def test_gc_orphans_sweeps_unreferenced_dirs(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "data", "cdeadbeef"))
     # committed data untouched
     assert table.read().count() == 1
+
+
+def test_gc_sweeps_temp_files_a_crashed_publish_left(spark, tmp_path, monkeypatch):
+    """A crash inside a metadata publish leaves its temp file: a commit's
+    pointer flip dies before its rename, and a tag create is killed before
+    its hard link. gc_orphans sweeps both temps once past the age guard,
+    verify_table stays clean, and publishing the stranded snapshot
+    completes the commit."""
+    import subprocess
+    import sys
+
+    from dibbs_ecr_refiner_spark.lake.maintenance import gc_orphans, verify_table
+
+    table = mk(spark, tmp_path, [("c1", 0, "base", 1, False, None)])
+    refs = os.path.join(table._manifest_dir, "_refs")
+    os.makedirs(refs)
+
+    def crash_on_pointer(real):
+        def rename(src, dst):
+            if os.path.basename(dst) == "_current":
+                raise OSError("simulated crash")
+            return real(src, dst)
+
+        return rename
+
+    monkeypatch.setattr(os, "replace", crash_on_pointer(os.replace))
+    monkeypatch.setattr(os, "rename", crash_on_pointer(os.rename))
+    with pytest.raises(OSError, match="simulated crash"):
+        table.merge(_delta(spark, [("c1", 1, "next", 2, False, None)]), "b1")
+    monkeypatch.undo()
+
+    # a real kill: the process dies where the hard link would claim the tag
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    killed = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import os, sys\n"
+            "from dibbs_ecr_refiner_spark.lake import manifests\n"
+            "os.link = lambda *a: os._exit(17)\n"
+            "manifests.create_if_absent(sys.argv[1], '{\"version\": 1}')\n",
+            os.path.join(refs, "gold.json"),
+        ],
+        env={**os.environ, "PYTHONPATH": repo},
+        timeout=120,
+    )
+    assert killed.returncode == 17
+
+    def temps():
+        return [fn for d in (table._manifest_dir, refs) for fn in os.listdir(d) if ".tmp" in fn]
+
+    assert len(temps()) == 2
+    assert gc_orphans(table, min_age_sec=3600.0)["removed_temp_files"] == 0
+    assert gc_orphans(table, min_age_sec=0.0)["removed_temp_files"] == 2
+    assert temps() == [] and table.tags() == {}
+    assert verify_table(table)["issues"] == []
+    assert table._current_version() == 1
+    table.publish_snapshot(2)
+    assert sorted(r["text"] for r in table.read().collect()) == ["base", "next"]
 
 
 def test_gc_does_not_sweep_staging_of_inflight_writer(spark, tmp_path):

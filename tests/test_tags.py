@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from dibbs_ecr_refiner_spark.lake import maintenance
+from dibbs_ecr_refiner_spark.lake import maintenance, manifests
 from dibbs_ecr_refiner_spark.lake.table import LakeTable
 
 TS = dt.datetime(2026, 1, 1)
@@ -243,10 +243,10 @@ def test_tag_collision_message_survives_winner_deletion(spark, tmp_path, monkeyp
     table.merge(_delta(spark, [("c1", 0, "v1", 1)]), "b0")
     table.tag("gold")
 
-    def racing_write(name, meta):
-        raise FileExistsError(name)
+    def racing_create(path, text):
+        raise FileExistsError(path)
 
-    monkeypatch.setattr(table, "_write_tag_file", racing_write)
+    monkeypatch.setattr(manifests, "create_if_absent", racing_create)
     monkeypatch.setattr(table, "tags", lambda: {})  # winner already deleted
     with pytest.raises(ValueError, match="already exists"):
         table.tag("gold")

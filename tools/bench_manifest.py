@@ -94,7 +94,7 @@ def main() -> None:
         os.makedirs(seg_dir)
         t0 = time.time()
         parent_disk = mf.deflate(seg_dir, dict(snap), None, set())
-        with open(os.path.join(seg_dir, "v00000001.json"), "w") as f:
+        with open(mf.snapshot_path(seg_dir, snap["snapshot_id"]), "w") as f:
             json.dump(parent_disk, f, indent=1, sort_keys=True)
         bootstrap_s = time.time() - t0
         # commits deflate against the inflated parent, as LakeTable.merge does
@@ -126,8 +126,7 @@ def main() -> None:
             before = {fn: None for fn in os.listdir(seg_dir)}
             t0 = time.time()
             disk = mf.deflate(seg_dir, manifest, parent, tset)
-            out = os.path.join(seg_dir, f"v{manifest['snapshot_id']:08d}.json")
-            with open(out, "w") as f:
+            with open(mf.snapshot_path(seg_dir, manifest["snapshot_id"]), "w") as f:
                 json.dump(disk, f, indent=1, sort_keys=True)
             per_commit_s.append(time.time() - t0)
             per_commit_bytes.append(
