@@ -163,7 +163,7 @@ def _retained_references(table: LakeTable) -> tuple[set[str], set[str]]:
     the current snapshot — otherwise compaction + GC would tear files out
     from under time travel (``read(version=...)``) and incremental
     scans. Segment paths are collected from the RAW manifests so GC can
-    also sweep segments orphaned by expire/abort/conflict."""
+    also sweep segments orphaned by expire or a conflict."""
     refs: set[str] = set()
     seg_refs: set[str] = set()
     for _v, raw, snap, _err in _mf.retained(table._manifest_dir):
@@ -198,8 +198,8 @@ def gc_orphans(table: LakeTable, min_age_sec: float = 3600.0) -> dict:
             pass
         return 0
 
-    # Manifest segments (lake/manifests.py) orphaned by expire_snapshots,
-    # abort_snapshot, or a SnapshotConflict loser: a segment is live while
+    # Manifest segments (lake/manifests.py) orphaned by expire_snapshots
+    # or a SnapshotConflict loser: a segment is live while
     # any retained v*.json references it; the age guard protects segments
     # written by an in-flight commit whose snapshot file isn't down yet,
     # and the temps of publishes still in flight.
@@ -392,7 +392,7 @@ def verify_table(table: LakeTable) -> dict:
 
     cur = table._current_version()
     if cur is not None and cur not in raws:
-        issues.append(f"_current points at missing v{cur}")
+        issues.append(f"current version v{cur} (hint plus probe) is missing")
     for name, t in table.tags().items():
         if int(t["version"]) not in raws:
             issues.append(f"tag {name!r} pins missing v{t['version']}")

@@ -41,14 +41,16 @@ removes ``v*.json``; a segment lives until NO retained snapshot references
 it. Every format-2 manifest is segmented: an on-disk manifest with an
 inline ``files`` list is rejected on load.
 
-It also owns the ``_manifests/`` layout — ``v<NNNNNNNN>.json`` snapshots,
-``seg-<hex>.json`` segments, ``_refs/<name>.json`` tags, the ``_current``
-pointer — and the two ways a metadata file is published: a full temp file
+It also owns the ``_manifests/`` layout — ``v<NNNNNNNN>.json`` snapshots
+(creating one commits that version), ``seg-<hex>.json`` segments,
+``_refs/<name>.json`` tags, the ``_current`` version hint (a version at or
+below the current one; ``meta.current_version`` probes forward from it) —
+and the two ways a metadata file is published: a full temp file
 (``TEMP_PREFIX``), then one step, so a reader never sees a torn file and a
 crash leaves at most a temp (``gc_orphans`` sweeps it). ``create_if_absent``
 hard-links it — immutable snapshots, segments, tags: a rename would silently
 replace a racing winner's file. ``replace`` renames it — the ``_current``
-pointer and consumer cursors.
+hint and consumer cursors.
 
 Pure stdlib on purpose: the streaming source's driver/executor code loads
 snapshots through this module without a SparkSession.
@@ -81,7 +83,8 @@ def snapshot_path(manifest_dir: str, version: int) -> str:
 
 
 def pointer_path(directory: str) -> str:
-    """The version pointer of a table's ``_manifests/`` or a config store."""
+    """The version hint of a table's ``_manifests/``, or a config store's
+    version pointer."""
     return os.path.join(directory, "_current")
 
 
@@ -94,7 +97,7 @@ def tag_path(manifest_dir: str, name: str) -> str:
 
 
 def versions(manifest_dir: str) -> list[int]:
-    """Every retained snapshot version (published or staged), ascending."""
+    """Every retained snapshot version, ascending."""
     return sorted(
         int(m.group(1)) for fn in os.listdir(manifest_dir) if (m := SNAPSHOT_FILE.fullmatch(fn))
     )

@@ -38,8 +38,15 @@ def manifest_dir(root: str) -> str:
 
 
 def current_version(root: str) -> int | None:
-    """The published snapshot version, or None for a table with none."""
-    return manifests.read_pointer(manifests.pointer_path(manifest_dir(root)))
+    """The current snapshot version, or None for a table with none: the
+    newest ``v<N>.json``, found from the ``_current`` hint by probing
+    forward. A snapshot file is committed once created, so a hint a crash
+    or a racing writer left behind only costs the probe a step."""
+    mdir = manifest_dir(root)
+    v = manifests.read_pointer(manifests.pointer_path(mdir)) or 0
+    while os.path.exists(manifests.snapshot_path(mdir, v + 1)):
+        v += 1
+    return v or None
 
 
 def snapshot(root: str, version: int | None = None) -> dict | None:

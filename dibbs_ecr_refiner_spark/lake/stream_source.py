@@ -15,13 +15,11 @@ like any built-in source.
 
 Design (Spark-first):
 
-- **Offsets are published snapshot versions.** The table's commit log is
+- **Offsets are committed snapshot versions.** The table's commit log is
   the write-ahead log; Spark's streaming checkpoint is the cursor (the
   Data Source API persists ``{"version": N}`` JSON offsets). Version 0
   means "before the first snapshot", so a fresh query's first microbatch
   delivers the whole table — same contract as ``ChangeFeedReader.reset()``.
-  Only the *published* pointer is followed: staged write-audit-publish
-  snapshots are invisible until published, exactly like batch reads.
 - **One InputPartition per added data file** in the ``(start, end]`` span:
   executor-parallel Arrow scans, zero driver-side data movement. Which
   files, and through which field-id projection, comes from ``lake/meta``

@@ -19,7 +19,7 @@ Layout::
     <root>/
       data/c<token>/_bucket=<b>/part-*.parquet   # immutable per-commit dirs
       _manifests/                                # snapshots, segments, tags,
-                                                 # pointer: lake/manifests.py
+                                                 # version hint: lake/manifests.py
       _staging/<token>/...                       # uncommitted writes
 
 Commit-dir names carry a uuid token, not the snapshot version, so two
@@ -58,9 +58,12 @@ Scale properties:
   schema (additive merge); old files are read through the new schema
   (missing columns → NULL). Incompatible type changes fail the commit
   (≙ the reference's schema_version gate, lambda_function.py:604-627).
-- The commit primitive is POSIX create-if-absent (a hard link that fails
-  if the name exists); on HDFS/S3-with-manifest stores the same protocol
-  holds with the FS shim swapped (a conditional put).
+- The snapshot file is the commit (≙ Delta's log, Iceberg's Hadoop
+  tables): creating ``v<N>.json`` with POSIX create-if-absent (a hard link
+  that fails if the name exists) commits version N, and ``_current`` is
+  only a hint readers probe forward from. There is no second step a crash
+  can strand. On HDFS/S3-with-manifest stores the same protocol holds with
+  the FS shim swapped (a conditional put).
 """
 
 from __future__ import annotations
@@ -309,14 +312,13 @@ class LakeTable:
         (see ``lake/manifests.py`` for the commit-cost rationale)."""
         return meta.snapshot(self.root, version)
 
-    def _commit(self, manifest: dict, publish: bool = True) -> None:
-        """Two-step atomic commit: create the immutable snapshot file if
-        absent (SnapshotConflict if a concurrent writer claimed the version
-        first — its file is never replaced), then flip the pointer. With
-        ``publish=False`` the pointer is left alone — the snapshot is
-        staged (write-audit-publish): readers keep seeing the old current,
-        an auditor reads ``read(version=...)``, and ``publish_snapshot``
-        flips or ``abort_snapshot`` discards."""
+    def _commit(self, manifest: dict) -> None:
+        """Commit a snapshot: creating ``v<N>.json`` is the commit point
+        (SnapshotConflict if a concurrent writer created that version
+        first — its file is never replaced). The ``_current`` hint is
+        rewritten after it; readers probe past a stale hint
+        (``meta.current_version``), so an error from here on leaves the
+        batch committed and a rerun skips it."""
         v = manifest["snapshot_id"]
         try:
             _mf.create_if_absent(
@@ -324,32 +326,7 @@ class LakeTable:
             )
         except FileExistsError:
             raise SnapshotConflict(f"snapshot v{v} already committed") from None
-        if publish:
-            _mf.flip_pointer(_mf.pointer_path(self._manifest_dir), v)
-
-    def publish_snapshot(self, version: int) -> None:
-        """WAP publish: make a staged snapshot the current one. The staged
-        chain must descend from the current pointer (it does when staged
-        by ``merge(publish=False)`` — staging claims the version, so no
-        competing writer can have landed in between)."""
-        cur = self._current_version()
-        snap = self.snapshot(version)
-        if cur is not None and snap.get("parent_id") != cur:
-            raise SnapshotConflict(
-                f"staged v{version} has parent {snap.get('parent_id')}, current is {cur}"
-            )
-        _mf.flip_pointer(_mf.pointer_path(self._manifest_dir), version)
-
-    def abort_snapshot(self, version: int) -> None:
-        """WAP abort: discard a staged (never-published) snapshot. Its data
-        files become orphans for gc_orphans; the claimed version is freed
-        for the next writer. Only versions ABOVE the current pointer can be
-        staged, so anything at or below it is published history — deleting
-        that is expire_snapshots' job, not abort's."""
-        cur = self._current_version()
-        if cur is not None and version <= cur:
-            raise ValueError(f"v{version} is published history — cannot abort")
-        os.remove(_mf.snapshot_path(self._manifest_dir, version))
+        _mf.replace(_mf.pointer_path(self._manifest_dir), str(v))
 
     def schema(self) -> T.StructType | None:
         snap = self.current_snapshot()
@@ -765,16 +742,16 @@ class LakeTable:
         post_reduce=None,
         prepass: Prepass | None = None,
         mode: str = "cow",
-        publish: bool = True,
     ) -> dict:
         """Exactly-once LWW MERGE of a prepared delta.
 
         ``delta`` must carry KEY + ORDER columns and ``_deleted``; any other
         columns are payload. Re-invoking with an already-applied batch_id is
         a no-op (idempotent replay) — this is the one exactly-once gate. A
-        crash before the snapshot commit leaves only unreferenced staging
-        files — the rerun produces an identical result (deterministic
-        content, fresh file names).
+        crash before the snapshot file is created leaves only unreferenced
+        staging files — the rerun produces an identical result
+        (deterministic content, fresh file names); a crash after it leaves
+        the batch committed, and the rerun skips it.
 
         Ingest modes take every per-bucket fact from ``prepass`` (the
         batch's ``self.prepass(...)`` entry; computed here over ``delta``,
@@ -1076,11 +1053,10 @@ class LakeTable:
         # deflate detects and rewrites everything.
         changed = set(touched) | {int(f["bucket"]) for f in new_files}
         disk = _mf.deflate(self._manifest_dir, manifest, snap, changed)
-        self._commit(disk, publish=publish)
+        self._commit(disk)
         return {
             "skipped": False,
             "batch_id": batch_id,
-            "staged": not publish,
             "snapshot_id": new_version,
             "seconds": time.time() - t0,
             "write_sec": round(t_write, 3),

@@ -27,6 +27,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..lake import meta
+
 VIOLATION_SCHEMA = "rule string, key string, detail string"
 
 
@@ -161,19 +163,22 @@ def transcript_rules(roles=("assistant", "system", "tool", "user")) -> list[Rule
     ]
 
 
+def _log_path(table) -> str:
+    return os.path.join(meta.manifest_dir(table.root), "_validations.jsonl")
+
+
 def validate_table(table, rules: list[Rule] | None = None) -> dict:
-    """Validate the fully-converged refined view of a lake table and append
-    the outcome to the table's validation audit log (`_validations.jsonl`
-    beside the manifests — one line per run: snapshot version, per-rule
-    violation counts, wall time). Returns the summary dict; the violations
+    """Validate a lake table's live rows and append the outcome to the
+    table's validation audit log (`_validations.jsonl` beside the
+    manifests — one line per run: snapshot version, per-rule violation
+    counts, wall time). Returns the summary dict; the violations
     DataFrame itself is re-derivable from `violations()` for triage."""
     rules = rules if rules is not None else transcript_rules()
-    df = table.read_refined() if hasattr(table, "read_refined") else table.read()
     t0 = time.time()
-    v = violations(df, rules, ("conv_id", "turn_idx"))
+    v = violations(table.read(), rules, ("conv_id", "turn_idx"))
     by_rule = {r["rule"]: int(r["n"]) for r in v.groupBy("rule").agg(F.count(F.lit(1)).alias("n")).collect()}
     rec = {
-        "version": getattr(table, "_current_version", lambda: None)(),
+        "version": table._current_version(),
         "checked_at": time.time(),
         "seconds": round(time.time() - t0, 3),
         "rules": [r.name for r in rules],
@@ -181,16 +186,14 @@ def validate_table(table, rules: list[Rule] | None = None) -> dict:
         "by_rule": by_rule,
         "ok": not by_rule,
     }
-    path = os.path.join(table.root, "_manifests", "_validations.jsonl")
-    with open(path, "a") as f:
+    with open(_log_path(table), "a") as f:
         f.write(json.dumps(rec) + "\n")
     return rec
 
 
 def validation_log(table) -> list[dict]:
-    path = os.path.join(table.root, "_manifests", "_validations.jsonl")
     try:
-        with open(path) as f:
+        with open(_log_path(table)) as f:
             return [json.loads(line) for line in f if line.strip()]
     except FileNotFoundError:
         return []

@@ -123,38 +123,6 @@ def test_schema_evolution_adds_column(spark, tmp_path):
     assert snap["schema_version"] == 2
 
 
-def test_wap_stage_audit_publish_and_abort(spark, tmp_path):
-    """Write-audit-publish: a merge with publish=False stages a snapshot
-    readers cannot see; an auditor reads it by version; publish flips the
-    pointer atomically; abort frees the claimed version for the next
-    writer and strands only orphan files."""
-    table = mk(spark, tmp_path, [("c1", 0, "base", 1, False, None)])
-
-    res = table.merge(_delta(spark, [("c2", 0, "staged", 2, False, None)]), "b1", publish=False)
-    assert res["staged"] and res["snapshot_id"] == 2
-    # invisible to readers...
-    assert [r["conv_id"] for r in table.read().collect()] == ["c1"]
-    # ...auditable by version
-    audit = {r["conv_id"] for r in table.read(version=2).collect()}
-    assert audit == {"c1", "c2"}
-    table.publish_snapshot(2)
-    assert {r["conv_id"] for r in table.read().collect()} == {"c1", "c2"}
-
-    # abort path: stage then discard; the version is reclaimed
-    res = table.merge(_delta(spark, [("c3", 0, "bad", 3, False, None)]), "b2", publish=False)
-    table.abort_snapshot(res["snapshot_id"])
-    assert {r["conv_id"] for r in table.read().collect()} == {"c1", "c2"}
-    res2 = table.merge(_delta(spark, [("c4", 0, "good", 4, False, None)]), "b3")
-    assert res2["snapshot_id"] == 3  # freed version reused
-    assert {r["conv_id"] for r in table.read().collect()} == {"c1", "c2", "c4"}
-
-    # published history (current or older) can never be aborted
-    with pytest.raises(ValueError):
-        table.abort_snapshot(3)
-    with pytest.raises(ValueError):
-        table.abort_snapshot(1)
-
-
 def test_time_travel_point_lookup_across_a_rebucket(spark, tmp_path):
     """read(version=v, conv_id_eq=k) prunes by the bucket ``k`` had in
     snapshot v — hashing with the table's current (post-rebucket) count
@@ -746,10 +714,9 @@ def test_gc_orphans_sweeps_unreferenced_dirs(spark, tmp_path):
 
 def test_gc_sweeps_temp_files_a_crashed_publish_left(spark, tmp_path, monkeypatch):
     """A crash inside a metadata publish leaves its temp file: a commit's
-    pointer flip dies before its rename, and a tag create is killed before
+    hint rewrite dies before its rename, and a tag create is killed before
     its hard link. gc_orphans sweeps both temps once past the age guard,
-    verify_table stays clean, and publishing the stranded snapshot
-    completes the commit."""
+    verify_table stays clean, and the commit is current all the same."""
     import subprocess
     import sys
 
@@ -798,9 +765,39 @@ def test_gc_sweeps_temp_files_a_crashed_publish_left(spark, tmp_path, monkeypatc
     assert gc_orphans(table, min_age_sec=0.0)["removed_temp_files"] == 2
     assert temps() == [] and table.tags() == {}
     assert verify_table(table)["issues"] == []
-    assert table._current_version() == 1
-    table.publish_snapshot(2)
     assert sorted(r["text"] for r in table.read().collect()) == ["base", "next"]
+
+
+def test_crash_after_snapshot_create_leaves_batch_committed(spark, tmp_path, monkeypatch):
+    """Creating v<N>.json is the commit point: a merge that dies rewriting
+    the _current hint has committed its batch. Readers probe past the stale
+    hint, a rerun of the batch skips, later merges take the next versions
+    instead of conflicting on the taken one, fsck is clean and GC sweeps
+    the hint's leftover temp."""
+    from dibbs_ecr_refiner_spark.lake.maintenance import gc_orphans, verify_table
+
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    real_replace = os.replace
+
+    def crash_on_hint(src, dst):
+        if os.path.basename(dst) == "_current":
+            raise OSError("simulated crash")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_on_hint)
+    with pytest.raises(OSError, match="simulated crash"):
+        table.merge(_delta(spark, [("c1", 0, "first", 1, False, None)]), "b1")
+    monkeypatch.undo()
+
+    assert [r["text"] for r in table.read().collect()] == ["first"]
+    assert "b1" in table.current_snapshot()["applied_batches"]
+    assert table.merge(_delta(spark, [("c1", 0, "first", 1, False, None)]), "b1")["skipped"]
+    assert table.merge(_delta(spark, [("c2", 0, "second", 2, False, None)]), "b2")["snapshot_id"] == 2
+    assert table.merge(_delta(spark, [("c3", 0, "third", 3, False, None)]), "b3")["snapshot_id"] == 3
+    assert sorted(r["text"] for r in table.read().collect()) == ["first", "second", "third"]
+    assert verify_table(table)["issues"] == []
+    assert gc_orphans(table, min_age_sec=0.0)["removed_temp_files"] == 1
+    assert not [fn for fn in os.listdir(table._manifest_dir) if fn.startswith(".tmp")]
 
 
 def test_gc_does_not_sweep_staging_of_inflight_writer(spark, tmp_path):

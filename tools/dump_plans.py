@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 NAMES = [
     "q1_pricing_summary",
@@ -84,7 +86,7 @@ def main():
         mode="mor",
     )
     out.append("\n## mor_read_resolve (base ∪ delta files → read-time LWW)\n\n```\n" + _explain(table.read()) + "```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("".join(out))
     print("wrote PLANS.md")
 

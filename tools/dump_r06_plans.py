@@ -11,7 +11,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 QUERY_NAMES = [
     "q1_pricing_summary",
@@ -40,7 +41,7 @@ def _explain(df) -> str:
 def main():
     tag = sys.argv[1]
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out_dir = os.path.join("/root/repo", "plans", "r06")
+    out_dir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
 
     from pyspark.sql import functions as F
