@@ -106,25 +106,6 @@ class SnapshotConflict(Exception):
     """Concurrent commit detected (snapshot file already exists)."""
 
 
-def merge_with_retry(table: "LakeTable", delta: DataFrame, batch_id: str, retries: int = 3, **kw) -> dict:
-    """Optimistic-concurrency retry loop for multi-writer deployments
-    (≙ Iceberg's commit retry): on SnapshotConflict the merge re-reads the
-    now-current snapshot and re-runs — correct because ``merge`` derives
-    everything (old files, schema, watermarks, applied registry) from the
-    snapshot it reads at entry, and the loser's data files live in a
-    uuid-token commit dir that can never collide with the winner's. If the
-    winning commit was this very batch_id (a retried duplicate delivery
-    racing itself), the re-run returns skipped. Retries are cheap in MOR
-    mode (no bucket rewrite to redo)."""
-    last: Exception | None = None
-    for _ in range(retries + 1):
-        try:
-            return table.merge(delta, batch_id, **kw)
-        except SnapshotConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
-
-
 class IncompatibleSchemaChange(Exception):
     """A delta changed an existing column's type — hard fail on commit."""
 
@@ -611,70 +592,6 @@ class LakeTable:
         ``tag``/``version`` time-travel the view (reproducible exports)."""
         return self.read(version=version, tag=tag).select(
             "conv_id", "turn_idx", "role", "text", "tool", "ts"
-        )
-
-    def read_remainder(self) -> DataFrame:
-        """The remainder view (≙ remainder RRs, reference
-        services/pipeline.py:397-484): turns that were reportable (arrived
-        in the change log) but NOT refined into the live table — i.e.
-        refinement-dropped tombstones, with their recorded outcome. The
-        anti-join is free: tombstones carry provenance."""
-        return (
-            self.read(include_tombstones=True)
-            .where(F.col("_deleted") & F.col("_outcome").isin("removed_wholesale", "removed_no_match"))
-            .select("conv_id", "turn_idx", "role", "_outcome", "ts", "change_lsn")
-        )
-
-    def history(self) -> DataFrame:
-        """Snapshot-chain metadata table (≙ Iceberg ``history``/
-        ``snapshots``): one row per retained snapshot, from the immutable
-        manifest files — driver-side metadata only, no data-file reads."""
-        rows = []
-        for v in _mf.versions(self._manifest_dir):
-            s = self.snapshot(v)
-            n_delta = sum(1 for x in s["files"] if x.get("kind", "base") == "delta")
-            rows.append(
-                (
-                    s["snapshot_id"],
-                    s["parent_id"],
-                    float(s["committed_at"]),
-                    s["schema_version"],
-                    s["num_buckets"],
-                    len(s["files"]),
-                    n_delta,
-                    len(s["applied_batches"]),
-                )
-            )
-        return self.spark.createDataFrame(
-            rows,
-            "snapshot_id int, parent_id int, committed_at double, schema_version int, "
-            "num_buckets int, n_files int, n_delta_files int, n_batches_applied int",
-        )
-
-    def files(self, version: int | None = None) -> DataFrame:
-        """Data-file metadata table for a snapshot (≙ Iceberg ``files``),
-        including the stamped min/max stats where present."""
-        snap = self.snapshot(version)
-        rows = []
-        for f in snap["files"] if snap else []:
-            s = f.get("stats") or {}
-            cid, ts = s.get("conv_id"), s.get("ts")
-            rows.append(
-                (
-                    f["path"],
-                    f["bucket"],
-                    f.get("kind", "base"),
-                    cid[0] if cid else None,
-                    cid[1] if cid else None,
-                    ts[0] if ts else None,
-                    ts[1] if ts else None,
-                    s.get("rows"),
-                )
-            )
-        return self.spark.createDataFrame(
-            rows,
-            "path string, bucket int, kind string, conv_id_min string, "
-            "conv_id_max string, ts_min_us long, ts_max_us long, stats_rows long",
         )
 
     def lineage(self) -> DataFrame:

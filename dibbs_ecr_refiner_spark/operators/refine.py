@@ -12,8 +12,9 @@ remove/retain/reconstruct/keep_on_match (narrative/writers.py:69-150).
 Where the reference walks an lxml tree per document, we fold the (small,
 versioned) configuration into literal Spark expressions once on the driver —
 the rule table is *data constant-folded into the plan* — and let
-whole-stage codegen evaluate it. No Python executes per row; the pandas-UDF
-interpreter in refine_udf.py is a parity/extension path, not the hot path.
+whole-stage codegen evaluate it. No Python executes per row. The tests
+check this compiler row for row against an independent pandas-UDF
+interpreter of the same plan (tests/udf_refinement_oracle.py).
 
 Output contract (columns added to the input):
 - ``_keep``            boolean — False ⇒ turn removed (becomes a tombstone)

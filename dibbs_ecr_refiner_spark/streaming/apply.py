@@ -23,7 +23,6 @@ is bounded by the target row, not by stream history.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..engine import ReplayEngine
@@ -140,48 +139,3 @@ def stream_between_lakes(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def windowed_change_rates(spark: SparkSession, log_path: str, watermark: str = "1 hour"):
-    """Streaming observability: per-(window, op) change rates with a
-    watermark for late events — tumbling 10-minute windows over event time.
-    (≙ outcome accounting A4, streamed.)"""
-    changes = spark.readStream.schema(CHANGE_SCHEMA).parquet(log_path)
-    return (
-        changes.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes"), F.col("op"))
-        .agg(F.count(F.lit(1)).alias("n"), F.approx_count_distinct("conv_id").alias("convs"))
-    )
-
-
-def streaming_dedup(spark: SparkSession, log_path: str, watermark: str = "1 hour"):
-    """Stateful duplicate-delivery drop in streaming form: watermark-bounded
-    dropDuplicates on (conv_id, turn_idx, change_lsn) — the streaming
-    spelling of operators/cdc.dedup_deliveries (state evicted past the
-    watermark, so memory is bounded)."""
-    changes = spark.readStream.schema(CHANGE_SCHEMA).parquet(log_path)
-    return changes.withWatermark("ts", watermark).dropDuplicates(
-        ["conv_id", "turn_idx", "change_lsn"]
-    )
-
-
-def streaming_sessions(
-    spark: SparkSession, log_path: str, gap: str = "30 minutes", watermark: str = "1 hour"
-):
-    """Session windows over the live change stream: per-conversation
-    activity sessions closed after ``gap`` of event-time silence, state
-    bounded by the watermark (a session older than watermark+gap can never
-    merge again and is emitted/evicted). The streaming spelling of
-    queries/cdcq.session_window_agg."""
-    changes = spark.readStream.schema(CHANGE_SCHEMA).parquet(log_path)
-    return (
-        changes.withWatermark("ts", watermark)
-        .groupBy("conv_id", F.session_window("ts", gap))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.min("ts").alias("first_ts"))
-        .select(
-            "conv_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "first_ts",
-            "n_events",
-        )
-    )

@@ -384,38 +384,6 @@ def test_manifest_is_valid_json_chain(spark, tmp_path):
     assert [r["batch_id"] for r in lin] == ["b0", "b1"]
 
 
-def test_metadata_tables_history_and_files(spark, tmp_path):
-    table = mk(spark, tmp_path, [("c1", 0, "v1", 1, False, None)])
-    table.merge(_delta(spark, [("c2", 0, "d", 2, False, None)]), "b1", mode="mor")
-    hist = {r["snapshot_id"]: r for r in table.history().collect()}
-    assert set(hist) == {1, 2}
-    assert hist[2]["parent_id"] == 1 and hist[2]["n_delta_files"] > 0
-    assert hist[1]["n_delta_files"] == 0
-    files_now = table.files().collect()
-    assert {r["kind"] for r in files_now} == {"base", "delta"}
-    files_v1 = table.files(version=1).collect()
-    assert all(r["kind"] == "base" for r in files_v1)
-
-
-def test_read_remainder_view(spark, tmp_path):
-    """Remainder = reportable-but-not-refined turns (≙ remainder RRs)."""
-    from dibbs_ecr_refiner_spark.engine import ReplayEngine
-    from dibbs_ecr_refiner_spark.fixtures.changelog import ChangeLogParams, generate_changes
-    from dibbs_ecr_refiner_spark.plans.config import default_plan
-
-    changes = generate_changes(
-        spark, ChangeLogParams(n_conversations=20, turns_per_conv=6, n_events=800, n_batches=2)
-    )
-    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
-    ReplayEngine(spark, table, default_plan()).replay(changes)
-    rem = table.read_remainder()
-    outcomes = {r["_outcome"] for r in rem.select("_outcome").distinct().collect()}
-    assert outcomes <= {"removed_wholesale", "removed_no_match"} and outcomes
-    # disjoint from the live view
-    live = table.read_transcripts().select("conv_id", "turn_idx")
-    assert rem.select("conv_id", "turn_idx").join(live, ["conv_id", "turn_idx"], "inner").isEmpty()
-
-
 def test_corrupt_record_quarantine(spark, tmp_path):
     """S3 analog: malformed change-log lines are quarantined, not fatal;
     valid rows flow through to replay."""
@@ -585,32 +553,6 @@ def test_loser_past_the_existence_check_still_raises_conflict(spark, tmp_path, m
     assert "winner" in table.current_snapshot()["applied_batches"]
     got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in table.read().collect()}
     assert got == {("c1", 0): "base", ("c1", 1): "winner"}
-
-
-def test_merge_with_retry_recovers_from_conflict(spark, tmp_path):
-    """Optimistic concurrency: a writer that loses the snapshot race
-    retries against the new current snapshot and lands its batch on top of
-    the winner's — both batches' rows survive."""
-    from dibbs_ecr_refiner_spark.lake.table import merge_with_retry
-
-    table = mk(spark, tmp_path, [("c1", 0, "base", 1, False, None)])
-    stale = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
-    stale_snap = stale.current_snapshot()
-    # a concurrent winner claims snapshot 2 out from under `stale`
-    table.merge(_delta(spark, [("c2", 0, "winner", 2, False, None)]), "winner")
-    # first merge() attempt reads the stale snapshot once, then retries
-    calls = {"n": 0}
-    real = stale.current_snapshot
-
-    def flaky():
-        calls["n"] += 1
-        return stale_snap if calls["n"] == 1 else real()
-
-    stale.current_snapshot = flaky
-    res = merge_with_retry(stale, _delta(spark, [("c3", 0, "retried", 3, False, None)]), "loser")
-    assert res["snapshot_id"] == 3 and not res.get("skipped")
-    got = {r["conv_id"]: r["text"] for r in table.read().collect()}
-    assert got == {"c1": "base", "c2": "winner", "c3": "retried"}
 
 
 def test_num_buckets_comes_from_manifest(spark, tmp_path):

@@ -278,7 +278,7 @@ def test_attribute_guard_gates_candidates(spark):
 
 def test_attribute_guard_udf_parity(spark):
     """The pandas-UDF interpreter applies the same guard."""
-    from dibbs_ecr_refiner_spark.operators.refine_udf import apply_refinement_udf
+    from udf_refinement_oracle import apply_refinement_udf
 
     plan = _plan(
         rules=[

@@ -10,7 +10,7 @@ from dibbs_ecr_refiner_spark.lake.table import LakeTable
 from dibbs_ecr_refiner_spark.operators.cdc import lww_resolve
 from dibbs_ecr_refiner_spark.operators.reconstruct import SUMMARY_TURN_IDX, reconstruct
 from dibbs_ecr_refiner_spark.operators.refine import compile_refinement
-from dibbs_ecr_refiner_spark.operators.refine_udf import apply_refinement_udf
+from udf_refinement_oracle import apply_refinement_udf
 from dibbs_ecr_refiner_spark.plans.config import default_plan
 from dibbs_ecr_refiner_spark.sources import ConfigStore, MaintenanceLocked, write_config_tables
 

@@ -1,5 +1,5 @@
-"""Multi-jurisdiction routing tests + hypothesis property tests for the
-CDC core (LWW equivalences, policy idempotence, generator determinism)."""
+"""Hypothesis property tests for the CDC core (LWW equivalences, policy
+idempotence, generator determinism, incremental replay == oracle)."""
 
 import datetime as dt
 
@@ -17,27 +17,6 @@ from dibbs_ecr_refiner_spark.plans.config import (
     default_plan,
     normalize_policy,
 )
-from dibbs_ecr_refiner_spark.routing import Router
-
-# ------------------------------------------------------------- routing
-
-
-def test_router_per_jurisdiction_tables_and_skips(spark, tmp_path):
-    changes = generate_changes(
-        spark, ChangeLogParams(n_conversations=15, turns_per_conv=5, n_events=600, n_batches=2)
-    )
-    plans = {"jurA": default_plan(), "jurB": default_plan(), "jurC": None}
-    router = Router(spark, str(tmp_path / "routed"), plans, num_buckets=4)
-    stats = router.replay(changes)
-    assert stats.skipped_jurisdictions == ["jurC"]
-    assert set(stats.per_jurisdiction) == {"jurA", "jurB"}
-    oracle = batch_oracle(changes, default_plan())
-    for jur in ("jurA", "jurB"):
-        assert final_state_matches(router.table(jur).read(), oracle)
-    rems = router.remainders()
-    assert set(rems) == {"jurA", "jurB"}
-    assert rems["jurA"].count() == rems["jurB"].count()
-
 
 # ------------------------------------------------- hypothesis properties
 

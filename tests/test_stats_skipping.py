@@ -57,9 +57,6 @@ def test_compact_stamps_stats_and_ingest_does_not(spark, tmp_path):
         )
         assert (lo, hi) == (got[0], got[1]) and s["rows"] == got[2]
         assert isinstance(s["ts"][0], int) and s["ts"][0] == s["ts"][1] == _ts_us(JAN)
-    # stats survive the metadata table surface
-    frow = table.files().where(F.col("kind") == "base").first()
-    assert frow["conv_id_min"] is not None and frow["ts_max_us"] == _ts_us(JAN)
 
 
 def test_point_lookup_prunes_to_one_file_in_a_multi_file_bucket(spark, tmp_path, monkeypatch):

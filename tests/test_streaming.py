@@ -1,6 +1,6 @@
-"""Structured Streaming surface: stream replay == batch oracle,
-checkpointed resume processes only new files (exactly-once), windowed
-rates and stateful dedup run to completion on a memory sink."""
+"""Structured Streaming surface: stream replay == batch oracle, a
+merge-on-read stream folds by the one policy, and checkpointed resume
+processes only new files (exactly-once)."""
 
 import dataclasses
 import os
@@ -13,11 +13,7 @@ from dibbs_ecr_refiner_spark.fixtures.changelog import ChangeLogParams, generate
 from dibbs_ecr_refiner_spark.lake.maintenance import should_fold
 from dibbs_ecr_refiner_spark.lake.table import LakeTable
 from dibbs_ecr_refiner_spark.plans.config import default_plan
-from dibbs_ecr_refiner_spark.streaming.apply import (
-    stream_replay,
-    streaming_dedup,
-    windowed_change_rates,
-)
+from dibbs_ecr_refiner_spark.streaming.apply import stream_replay
 
 PARAMS = ChangeLogParams(
     n_conversations=30, turns_per_conv=6, n_events=1500, n_batches=3, pct_duplicates=0.1
@@ -110,97 +106,3 @@ def test_stream_restart_is_exactly_once(spark, tmp_path, log_dir):
     changes = spark.read.parquet(log_dir)
     assert final_state_matches(table.read(), batch_oracle(changes, default_plan()))
 
-
-def test_windowed_change_rates(spark, log_dir):
-    q = (
-        windowed_change_rates(spark, log_dir)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("rates")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = spark.sql("SELECT * FROM rates")
-    assert out.count() > 0
-    ops = {r["op"] for r in out.select("op").distinct().collect()}
-    assert "insert" in ops
-
-
-def test_streaming_dedup(spark, log_dir):
-    q = (
-        streaming_dedup(spark, log_dir)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = spark.sql("SELECT conv_id, turn_idx, change_lsn FROM dedup")
-    assert out.count() == out.distinct().count()
-
-
-def test_stateful_conversation_digest(spark, tmp_path, log_dir):
-    """applyInPandasWithState: running per-conversation digests across
-    micro-batches; state accumulates (turn_updates grows monotonically,
-    max_lsn equals the log's per-conversation max)."""
-    from dibbs_ecr_refiner_spark.streaming.apply import CHANGE_SCHEMA
-    from dibbs_ecr_refiner_spark.streaming.stateful import conversation_digest
-
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(log_dir)
-    )
-    q = (
-        conversation_digest(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("digest")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = spark.sql(
-        "SELECT conv_id, max(max_lsn) AS max_lsn, max(turn_updates) AS turns "
-        "FROM digest GROUP BY conv_id"
-    )
-    expected = (
-        spark.read.parquet(log_dir)
-        .groupBy("conv_id")
-        .agg(F.max("change_lsn").alias("want_lsn"))
-    )
-    joined = out.join(expected, "conv_id")
-    assert joined.where(F.col("max_lsn") != F.col("want_lsn")).isEmpty()
-    assert joined.where(F.col("turns") <= 0).isEmpty()
-
-
-def test_streaming_session_windows_match_batch(spark, tmp_path, log_dir):
-    """session_window over the stream (availableNow drain) must produce the
-    same per-conversation sessions as the batch groupBy(session_window)."""
-    from dibbs_ecr_refiner_spark.streaming.apply import streaming_sessions
-
-    q = (
-        streaming_sessions(spark, log_dir)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sessions")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r["conv_id"], r["first_ts"], r["n_events"])
-        for r in spark.sql("SELECT conv_id, first_ts, n_events FROM sessions").collect()
-    }
-    batch = (
-        spark.read.parquet(log_dir)
-        .groupBy("conv_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.min("ts").alias("first_ts"))
-    )
-    want = {
-        (r["conv_id"], r["first_ts"], r["n_events"])
-        for r in batch.select("conv_id", "first_ts", "n_events").collect()
-    }
-    assert got == want and got

@@ -1,36 +1,30 @@
-"""Generic pandas-UDF rule interpreter — the extension-point spelling of
-the refinement pass (SURVEY §2.10).
+"""Differential oracle for the refinement pass: a pandas-UDF interpreter
+of the same RefinePlan that ``operators.refine.compile_refinement`` compiles
+into Catalyst expressions.
 
-The hot path is the expression compiler in refine.py (pure Catalyst, no
-Python). This module interprets the SAME RefinePlan with vectorized
-pandas/Arrow batches instead, for two reasons:
+The two implementations share no code: this one evaluates the plan with
+pandas string ops over Arrow batches (``mapInPandas``), the engine folds it
+into literal Spark expressions. ``test_compiled_and_udf_refinement_agree``
+and ``test_attribute_guard_udf_parity`` assert that they agree row for row
+on generated data — the same two-implementations oracle pattern the replay
+gate uses (``engine.batch_oracle``).
 
-1. It is the documented extension point (≙ the reference's EntryMatchRule
-   tables interpreted by a generic engine, ecr/model.py:101-281 +
-   entry_matching.py:289-384): arbitrary per-turn logic that outgrows SQL
-   expressions plugs in here without touching the engine.
-2. Differential testing: tests/test_refine_udf.py asserts the interpreter
-   and the compiled expressions agree row-for-row on generated data — the
-   same two-implementations oracle pattern the replay gate uses.
-
-Rules are data: the plan is broadcast-captured in the closure once per
-executor, evaluated with pandas str ops (Arrow batches, no per-row Python
-loops except the small per-rule iteration)."""
+This module lives under ``tests/``, which Python workers cannot import, so
+it registers itself to be pickled by value: ``mapInPandas`` ships its
+functions to the workers with the closure."""
 
 from __future__ import annotations
 
 import re
+import sys
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..plans.config import RefinePlan
+from dibbs_ecr_refiner_spark.plans.config import RefinePlan
 
-OUT_COLS = [
-    "_matched_code", "_tier", "_keep", "_outcome", "text", "_matched_display",
-    "_provenance",
-]
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _match_series(plan: RefinePlan, pdf: pd.DataFrame, target: str, system: str | None) -> pd.Series:
