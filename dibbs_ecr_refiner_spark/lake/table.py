@@ -714,10 +714,10 @@ class LakeTable:
             return {"skipped": True, "batch_id": batch_id, "empty": True}
 
         # Delta stats are collected DURING the write action via an
-        # Observation (one pass over the expensive dedup→LWW→refine plan —
-        # no second job, no persist).
+        # Observation of the raw delta as the write job reads it (no second
+        # job, no persist).
         obs = Observation(f"delta-{batch_id}")
-        delta = delta.withColumn("_bucket", bucket_expr(self.num_buckets)).observe(
+        delta = delta.observe(
             obs,
             F.min("change_lsn").alias("lsn_min"),
             F.max("change_lsn").alias("lsn_max"),
@@ -725,7 +725,7 @@ class LakeTable:
             F.sum(F.col("_deleted").cast("long")).alias("n_del"),
         )
 
-        delta_schema = T.StructType([f for f in delta.schema.fields if f.name != "_bucket"])
+        delta_schema = delta.schema
         if snap:
             # Field-id schema merge: known names keep their id, new names
             # (incl. a re-added dropped name) get fresh ids — old bytes in
@@ -752,22 +752,40 @@ class LakeTable:
 
         cols = [f.name for f in new_schema.fields]
 
+        # Hot buckets — detected by the pre-pass from per-bucket delta
+        # counts — get a turn-level salt so one hot bucket is reduced and
+        # written by several tasks in parallel; cold buckets stay
+        # one-file-per-bucket so later target reads don't pay a per-file
+        # open cost 4× over.
+        bucket = bucket_expr(self.num_buckets)
+        if hot:
+            salt = F.when(
+                bucket.isin(hot),
+                F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4)),
+            ).otherwise(F.lit(0))
+        else:
+            salt = F.lit(0)
+        layout = [bucket.alias("_bucket"), salt.cast("int").alias("_salt")]
+
         def _conform(df: DataFrame) -> DataFrame:
+            # ONE Project per side: the table's columns (NULL-padded where
+            # the side lacks one) plus the file-layout columns
             have = set(df.columns)
             return df.select(
                 *[
                     F.col(c) if c in have else F.lit(None).cast(dict_types[c]).alias(c)
                     for c in cols
-                ]
+                ],
+                *layout,
             )
 
         dict_types = {f.name: f.dataType for f in new_schema.fields}
-        sides = [_conform(delta)]
+        work = _conform(delta)
         if old_files:
             # era-aware: a renamed column's old physical name is resolved
             # by field id, then _conform pads columns the delta introduced
-            sides.append(_conform(self._read_files(old_files, snap["columns"], snap["schemas"])))
-        unioned = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
+            old = self._read_files(old_files, snap["columns"], snap["schemas"])
+            work = work.unionByName(_conform(old))
 
         # ONE exchange for the whole merge (guide §2.4 — two operations
         # keyed the same way share one exchange): the union is hash-
@@ -784,27 +802,9 @@ class LakeTable:
         # Skew note: this trades the map-side partial combine for one fewer
         # full-batch shuffle; a hot (conv_id, turn_idx) key's duplicates
         # now meet in one task, where the salt already spreads hot buckets
-        # across 4 writers (the explicit hot-key splitting below).
-        #
-        # Hot buckets — detected by the pre-pass from per-bucket delta
-        # counts — get a turn-level salt so one hot bucket is reduced and
-        # written by several tasks in parallel; cold buckets stay
-        # one-file-per-bucket so later target reads don't pay a per-file
-        # open cost 4× over. Explicit partition count (a bare
-        # repartition(col) is AQE-rebalanced down to ~one partition at
-        # small sizes, serializing the write).
-        from ..operators.cdc import lww_resolve
-
-        if hot:
-            salt = F.when(
-                F.col("_bucket").isin(hot),
-                F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4)),
-            ).otherwise(F.lit(0))
-        else:
-            salt = F.lit(0)
-        work = unioned.withColumn("_bucket", bucket_expr(self.num_buckets)).withColumn(
-            "_salt", salt.cast("int")
-        )
+        # across 4 writers (the hot-bucket salt above). Explicit partition
+        # count (a bare repartition(col) is AQE-rebalanced down to ~one
+        # partition at small sizes, serializing the write).
         n_out = max(self.spark.sparkContext.defaultParallelism, len(touched))
         work = work.repartition(n_out, F.col("_bucket"), F.col("_salt"))
         # A rewrite feeds already-LWW-resolved content (≤1 row per
@@ -817,6 +817,8 @@ class LakeTable:
         # ordering and Catalyst elides the second full-batch SortExec
         # (guide §2.4: operations keyed the same way share work). Grouping
         # is a set, so winners are unchanged.
+        from ..operators.cdc import lww_resolve
+
         merged = (
             work
             if mode == "rewrite"

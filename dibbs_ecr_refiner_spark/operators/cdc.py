@@ -64,9 +64,10 @@ def lww_resolve(
         F.struct(*[F.col(c) for c in order]),
     ).alias("_w")
     out = df.groupBy(*[F.col(k) for k in key]).agg(winner)
+    # one Project, straight into input column order
     return out.select(
-        *key, *[F.col(f"_w.{c}").alias(c) for c in (*order, *payload)]
-    ).select(*df.columns)
+        *[F.col(c) if c in key else F.col(f"_w.{c}").alias(c) for c in df.columns]
+    )
 
 
 def lww_resolve_window(

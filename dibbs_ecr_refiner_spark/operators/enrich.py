@@ -117,7 +117,7 @@ def enrich_displays(df: DataFrame, plan: RefinePlan) -> DataFrame:
         & (F.col("L._matched_code") == F.col("R._narr_code")),
         "left",
     )
+    display = F.coalesce(cfg, F.col("R._narr_display")).alias("_matched_display")
     return joined.select(
-        *[F.col(f"L.{c}") for c in cols if c != "_matched_display"],
-        F.coalesce(cfg, F.col("R._narr_display")).alias("_matched_display"),
-    ).select(*cols)
+        *[display if c == "_matched_display" else F.col(f"L.{c}") for c in cols]
+    )

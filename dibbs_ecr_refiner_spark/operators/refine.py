@@ -246,52 +246,46 @@ def compile_refinement(plan: RefinePlan, guarded: bool = False):
     # — per-batch reconstruction of these trees was ~0.2 s of py4j driver
     # chatter per replay batch (profiled in OPTIMIZATION_r06.md).
     keep_c, outcome_c, text_c = _branches()
-    pruned_items_c = _pruned_items()
+    if guarded:
+        # refine only fresh (unrefined) rows; CASE branches are evaluated
+        # lazily, so refined rows pay ~nothing. Every guard reads the
+        # input ``_outcome``: a Project evaluates all of its columns from
+        # the same input row.
+        unref = F.col("_outcome").isNull()
+
+        def fresh(c: Column, name: str) -> Column:
+            return F.when(unref, c).otherwise(F.col(name))
+
+        match_cols = {
+            "_matched_code": fresh(matched_code, "_matched_code"),
+            "_tier": fresh(matched_tier, "_tier"),
+        }
+        out_cols = {
+            "_deleted": fresh(F.col("_deleted") | ~keep_c, "_deleted"),
+            "text": fresh(text_c, "text"),
+            "_matched_display": fresh(matched_display, "_matched_display"),
+            "_provenance": fresh(provenance, "_provenance"),
+            "_outcome": fresh(outcome_c, "_outcome"),
+        }
+        items_c = fresh(_pruned_items(), "items")
+    else:
+        match_cols = {"_matched_code": matched_code, "_tier": matched_tier}
+        out_cols = {
+            "_keep": keep_c,
+            "_outcome": outcome_c,
+            "text": text_c,
+            "_matched_display": matched_display,
+            "_provenance": provenance,
+        }
+        items_c = _pruned_items()
 
     def apply(df: DataFrame) -> DataFrame:
-        # Two chained Projects: the match column is computed once in the
-        # first, referenced (cheaply) many times in the second. Requires
-        # CollapseProject to stay excluded (session.py) or the match
-        # expression is re-inlined per reference.
-        if not guarded:
-            out = df.withColumn("_matched_code", matched_code).withColumn("_tier", matched_tier)
-            keep, outcome, text = keep_c, outcome_c, text_c
-            out = (
-                out.withColumn("_keep", keep)
-                .withColumn("_outcome", outcome)
-                .withColumn("text", text)
-                .withColumn("_matched_display", matched_display)
-                .withColumn("_provenance", provenance)
-            )
-            if "items" in df.columns:
-                out = out.withColumn("items", pruned_items_c)
-            return out
-
-        # guarded: refine only fresh (unrefined) rows; CASE branches are
-        # evaluated lazily, so refined rows pay ~nothing.
-        unref = F.col("_outcome").isNull()
-        out = df.withColumn(
-            "_matched_code", F.when(unref, matched_code).otherwise(F.col("_matched_code"))
-        ).withColumn("_tier", F.when(unref, matched_tier).otherwise(F.col("_tier")))
-        keep, outcome, text = keep_c, outcome_c, text_c
-        out = (
-            out.withColumn(
-                "_deleted", F.when(unref, F.col("_deleted") | ~keep).otherwise(F.col("_deleted"))
-            )
-            .withColumn("text", F.when(unref, text).otherwise(F.col("text")))
-            .withColumn(
-                "_matched_display",
-                F.when(unref, matched_display).otherwise(F.col("_matched_display")),
-            )
-            .withColumn(
-                "_provenance", F.when(unref, provenance).otherwise(F.col("_provenance"))
-            )
-        )
-        if "items" in df.columns:
-            out = out.withColumn(
-                "items", F.when(unref, pruned_items_c).otherwise(F.col("items"))
-            )
-        # _outcome LAST: the guards above read it
-        return out.withColumn("_outcome", F.when(unref, outcome).otherwise(F.col("_outcome")))
+        # Two Projects: the match columns once, then everything that reads
+        # them. Requires CollapseProject to stay excluded (session.py) or
+        # the match expression is re-inlined per reference. Not one
+        # Project per column: the physical planner re-walks the Project
+        # chain above each node, a fixed cost on every small batch.
+        cols = {**out_cols, "items": items_c} if "items" in df.columns else out_cols
+        return df.withColumns(match_cols).withColumns(cols)
 
     return apply

@@ -107,6 +107,43 @@ def test_refine_pass_has_no_python_eval(spark):
     assert plan.count("Exchange") <= 4
 
 
+def test_mor_merge_plan_is_one_projection_per_stage(spark, tmp_path, monkeypatch):
+    """The frame a merge-on-read batch writes carries one Project per stage
+    above the LWW aggregate: the winner unpacking, the refinement's two
+    (match columns, then everything that reads them) and the final column
+    select. The planner re-walks this chain at every node, so a
+    per-column withColumn chain costs every small batch fixed planning
+    time. The match expression stays computed once: as many
+    regexp_extract calls as the rule table compiles to."""
+    from pyspark.sql import readwriter
+
+    from dibbs_ecr_refiner_spark.engine import ReplayEngine
+    from dibbs_ecr_refiner_spark.lake.table import LakeTable
+
+    written = []
+    parquet = readwriter.DataFrameWriter.parquet
+
+    def capture(self, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(readwriter.DataFrameWriter, "parquet", capture)
+    changes = generate_changes(
+        spark, ChangeLogParams(n_conversations=20, turns_per_conv=3, n_events=200, n_batches=1)
+    )
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=4)
+    res = ReplayEngine(spark, table, default_plan()).apply_batch(changes, "b0", mode="mor")
+    assert not res.get("skipped") and len(written) == 1
+
+    plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
+    above_lww = nodes[: nodes.index("Aggregate")]
+    assert above_lww.count("Project") <= 4, plan
+    # the default plan's match expressions hold 10 regexp_extract calls;
+    # more means a stage re-inlines the match expression
+    assert plan.count("regexp_extract(") == 10
+
+
 def test_changelog_batch_filter_prunes_partitions(spark, tmp_path):
     from dibbs_ecr_refiner_spark.fixtures.changelog import write_changes
 
