@@ -147,7 +147,9 @@ class ReplayEngine:
         ``LakeTable.merge`` — the one exactly-once gate: an applied
         ``batch_id`` returns ``{"skipped": True}``. ``prepass`` is the
         batch's ``table.prepass`` entry (``replay`` computes every batch's
-        in one job); without it ``merge`` computes it."""
+        in one job); without it ``merge`` computes it. One call is one
+        commit and never folds: the loops around it (an auto ``replay``,
+        ``stream_replay``) call ``maintenance.fold_due``."""
         if mode not in ("mor", "cow"):
             raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
         # The batch is merged RAW: merge runs one LWW over (delta ∪ target)
@@ -206,12 +208,12 @@ class ReplayEngine:
             self.table, buckets=buckets, post=lambda d: enrich_displays(d, plan)
         )
 
-    def _fold(self, stats: ReplayStats, buckets: list[int]) -> None:
-        """Fold ``buckets`` (if any), timed into ``stats.fold_seconds``."""
-        if buckets:
-            tf = time.time()
-            self.fold_deltas(buckets=buckets)
-            stats.fold_seconds += time.time() - tf
+    def _fold(self, stats: ReplayStats, **threshold) -> None:
+        """``maintenance.fold_due`` through ``fold_deltas``, timed into
+        ``stats.fold_seconds``."""
+        tf = time.time()
+        maintenance.fold_due(self.table, self.fold_deltas, **threshold)
+        stats.fold_seconds += time.time() - tf
 
     def replay(
         self,
@@ -226,11 +228,12 @@ class ReplayEngine:
 
         ``mode="auto"`` (default) commits every batch merge-on-read: delta
         files, write cost O(batch) instead of O(touched buckets). Folding
-        is DEMAND-driven: between batches, the buckets whose pending delta
-        commits exceed the ``should_fold`` threshold are compacted, so read
-        amplification stays bounded without a sweep that folds everything.
-        ``mode="mor"`` commits the same delta files and never folds;
-        ``mode="cow"`` rewrites the touched buckets on every commit.
+        is DEMAND-driven: between batches, ``maintenance.fold_due`` folds
+        the buckets whose pending delta commits exceed the ``should_fold``
+        threshold, so read amplification stays bounded without a sweep
+        that folds everything. ``mode="mor"`` commits the same delta files
+        and never folds; ``mode="cow"`` rewrites the touched buckets on
+        every commit.
 
         ``final_fold`` controls what a completed auto replay leaves behind:
         ``"all"`` (default) folds every pending delta bucket so plain
@@ -274,12 +277,11 @@ class ReplayEngine:
             stats.batch_events.append(sum(pre[batch_id].counts.values()))
             stats.lineage.append(res)
             if mode == "auto" and batch_id != batch_ids[-1]:
-                self._fold(stats, maintenance.should_fold(self.table))
+                self._fold(stats)
         # Not gated on this call having applied a batch: a rerun after a
         # crash between the last commit and the fold must still fold.
         if mode == "auto":
-            kw = {"max_deltas_per_bucket": 0} if final_fold == "all" else {}
-            self._fold(stats, maintenance.should_fold(self.table, **kw))
+            self._fold(stats, **({"max_deltas_per_bucket": 0} if final_fold == "all" else {}))
         stats.seconds = time.time() - t0
         return stats
 

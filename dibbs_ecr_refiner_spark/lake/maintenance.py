@@ -39,9 +39,12 @@ def compact(
     drop_tombstones_below: int | None = None,
     post=None,
 ) -> dict:
-    """Rewrite ``buckets`` (default: all with >1 file, any merge-on-read
-    delta file, or any file when GC'ing) as one base file each; optionally
-    drop tombstones with change_lsn <= drop_tombstones_below.
+    """Rewrite ``buckets`` as base files; optionally drop tombstones with
+    change_lsn <= drop_tombstones_below. The default selection is every
+    bucket when GC'ing, else every bucket that is not already compact: a
+    bucket with a merge-on-read delta, or with several files that are not
+    all from one rewrite commit. (A rewrite splits a big bucket at
+    ``MAX_RECORDS_PER_FILE``, so a compact bucket can hold several files.)
 
     The rewrite is disk-bounded: reading + shuffling + staging the whole
     selection in ONE commit needs O(table) scratch on the shuffle/staging
@@ -69,17 +72,14 @@ def compact(
     if snap is None:
         return {"skipped": True, "reason": "no snapshot"}
 
-    by_bucket: dict[int, int] = {}
-    delta_buckets: set[int] = set()
+    by_bucket: dict[int, list[dict]] = {}
     for f in snap["files"]:
-        by_bucket[f["bucket"]] = by_bucket.get(f["bucket"], 0) + 1
-        if f.get("kind", "base") == "delta":
-            delta_buckets.add(f["bucket"])
+        by_bucket.setdefault(f["bucket"], []).append(f)
     if buckets is None:
         if drop_tombstones_below is not None:
             buckets = sorted(by_bucket)
         else:
-            buckets = sorted(b for b, n in by_bucket.items() if n > 1 or b in delta_buckets)
+            buckets = sorted(b for b, files in by_bucket.items() if not _is_compact(files))
     if not buckets:
         return {"skipped": True, "reason": "nothing to compact"}
 
@@ -97,6 +97,16 @@ def compact(
         "snapshot_id": results[-1]["snapshot_id"],
         "results": results,
     }
+
+
+def _is_compact(files: list[dict]) -> bool:
+    """One bucket's files are one base file, or all from one rewrite
+    commit (a commit writes one directory per bucket): rewriting them
+    would write the same files again."""
+    if len(files) == 1:
+        return files[0].get("kind", "base") != "delta"
+    dirs = {os.path.dirname(f["path"]) for f in files}
+    return len(dirs) == 1 and all(f.get("rewrite") for f in files)
 
 
 def _rewrite(
@@ -298,12 +308,16 @@ def rebucket(table: LakeTable, new_num_buckets: int) -> dict:
     return res
 
 
-def should_fold(table: LakeTable, max_deltas_per_bucket: int = 8) -> list[int]:
+# A bucket folds once it holds more than this many pending delta commits.
+FOLD_THRESHOLD = 8
+
+
+def should_fold(table: LakeTable, max_deltas_per_bucket: int = FOLD_THRESHOLD) -> list[int]:
     """Fold-scheduling policy for merge-on-read tables: the buckets whose
     pending delta commits exceed the threshold. Read-time merge cost
     grows with deltas per bucket (every read of the bucket re-reduces
-    them), so a bounded threshold bounds read amplification; the caller
-    compacts exactly these buckets (``compact(table, buckets=...)``)
+    them), so a bounded threshold bounds read amplification. ``fold_due``
+    is the one caller that acts on it: it compacts exactly these buckets
     instead of sweeping the whole table. A commit counts once per bucket
     however many files it wrote there (``merge`` salts a hot bucket into
     up to 4), so the threshold is a number of batches for every bucket."""
@@ -316,6 +330,23 @@ def should_fold(table: LakeTable, max_deltas_per_bucket: int = 8) -> list[int]:
             # each commit writes its own directory per bucket
             commits.setdefault(f["bucket"], set()).add(os.path.dirname(f["path"]))
     return sorted(b for b, dirs in commits.items() if len(dirs) > max_deltas_per_bucket)
+
+
+def fold_due(table: LakeTable, fold=None, max_deltas_per_bucket: int = FOLD_THRESHOLD):
+    """The one fold trigger, called by every merge-on-read writer after
+    it commits: the auto replay, both streams and the rollup refresh.
+    Folds the buckets ``should_fold`` finds over the threshold with
+    ``fold(buckets)`` (default ``compact(table, buckets=buckets)``; the
+    engine passes ``fold_deltas``, which also recomputes displays).
+    It reads the current snapshot, so it also folds what a crash between
+    an earlier commit and its fold left behind. Returns the fold's
+    result, or None when nothing was due."""
+    buckets = should_fold(table, max_deltas_per_bucket)
+    if not buckets:
+        return None
+    if fold is None:
+        return compact(table, buckets=buckets)
+    return fold(buckets)
 
 
 def min_safe_gc_lsn(table: LakeTable) -> int | None:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+from . import maintenance
 from .feed import ChangeFeedReader
 from .table import LakeTable
 
@@ -44,11 +45,15 @@ def refresh_conversation_rollup(
     src: LakeTable, dst: LakeTable, feed: ChangeFeedReader, batch_id: str
 ) -> dict:
     """One incremental refresh: poll the feed, recompute the rollup for
-    touched conversations only, LWW-merge into ``dst``, ack the feed."""
+    touched conversations only, LWW-merge into ``dst``, ack the feed, then
+    fold ``dst``'s buckets over the threshold (``maintenance.fold_due``).
+    The fold runs on every call, an empty-feed one included, so a refresh
+    also completes a fold that a crash cut short."""
     delta = feed.poll()
     touched_convs = delta.select("conv_id").distinct()
     buckets = src.prepass(delta)[None].touched
     if not buckets:
+        maintenance.fold_due(dst)
         return {"skipped": True, "empty_feed": True}
 
     # bucket-pruned source read + broadcast semi join down to the touched
@@ -88,4 +93,5 @@ def refresh_conversation_rollup(
     finally:
         rollup.unpersist()
     feed.commit()
+    maintenance.fold_due(dst)
     return res

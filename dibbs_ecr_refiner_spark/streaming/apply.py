@@ -63,10 +63,9 @@ def stream_replay(
     with False it runs continuously. ``mode="mor"`` (default) commits each
     micro-batch as delta files — commit cost O(micro-batch), independent
     of table size; ``mode="cow"`` rewrites the touched buckets instead.
-    Unlike ``ReplayEngine.replay(mode="mor")``, which never folds, a
-    merge-on-read stream folds the buckets over the
-    ``maintenance.should_fold`` threshold after each applied epoch — the
-    rule an auto replay applies between batches — so no bucket's pending
+    After every merge-on-read epoch, a redelivered one included, the
+    stream calls ``maintenance.fold_due`` with ``fold_deltas``, the
+    trigger an auto replay uses between batches, so no bucket's pending
     deltas outgrow the threshold; a continuous stream has no "completion"
     to fold at."""
     reader = spark.readStream.schema(CHANGE_SCHEMA)
@@ -77,11 +76,9 @@ def stream_replay(
     eng = ReplayEngine(spark, table, plan)
 
     def handle(df, epoch_id: int):
-        res = eng.apply_batch(df, f"epoch-{epoch_id:08d}", mode=mode)
-        if mode == "mor" and not res.get("skipped"):
-            over = maintenance.should_fold(table)
-            if over:
-                eng.fold_deltas(buckets=over)
+        eng.apply_batch(df, f"epoch-{epoch_id:08d}", mode=mode)
+        if mode == "mor":
+            maintenance.fold_due(table, eng.fold_deltas)
 
     writer = changes.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir
@@ -119,7 +116,9 @@ def stream_between_lakes(
     chain — the source skips rewrite commits — so both tables can be
     maintained independently while the stream runs. ``mode`` defaults to
     MOR: a long-lived chain is the steady-state regime where commit cost
-    must stay O(micro-batch), not O(table)."""
+    must stay O(micro-batch), not O(table). A merge-on-read chain calls
+    ``maintenance.fold_due(dst)`` after every epoch, so ``dst``'s pending
+    deltas stay under the fold threshold."""
     from ..lake.stream_source import register
 
     register(spark)
@@ -131,6 +130,8 @@ def stream_between_lakes(
     def handle(df, epoch_id: int):
         out = transform(df) if transform is not None else df
         dst.merge(out, f"chain-{epoch_id:08d}", mode=mode)
+        if mode == "mor":
+            maintenance.fold_due(dst)
 
     writer = changes.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

@@ -62,3 +62,27 @@ def test_compact_explicit_buckets_preserves_state(spark, tmp_path):
         by_bucket[f["bucket"]] = by_bucket.get(f["bucket"], 0) + 1
     assert all(n == 1 for n in by_bucket.values())
     assert res["compacted_buckets"] == 2
+
+
+def test_compact_skips_a_bucket_one_rewrite_split(spark, tmp_path, monkeypatch):
+    """A rewrite splits a big bucket at MAX_RECORDS_PER_FILE into several
+    files of one commit. That bucket is compact: the next compact() is a
+    no-op, not an identical rewrite. Several files from an ingest commit
+    still compact."""
+    import dibbs_ecr_refiner_spark.lake.table as tbl
+
+    monkeypatch.setattr(tbl, "MAX_RECORDS_PER_FILE", 3)
+    table = LakeTable(spark, str(tmp_path / "t"), num_buckets=1)
+    rows = [(f"c{i}", 0, f"t{i}", i, False) for i in range(10)]
+    table.merge(_delta(spark, rows), "b0", mode="mor")
+    assert not compact(table).get("skipped")
+    snap = table.current_snapshot()
+    assert len(snap["files"]) == 4 and all(f.get("rewrite") for f in snap["files"])
+
+    assert compact(table)["skipped"] is True
+    assert table.current_snapshot()["snapshot_id"] == snap["snapshot_id"]
+
+    # a copy-on-write merge rewrites the bucket as 4 ingest files
+    table.merge(_delta(spark, [("c0", 0, "t0b", 20, False)]), "b1")
+    assert len(table.current_snapshot()["files"]) == 4
+    assert compact(table)["compacted_buckets"] == 1

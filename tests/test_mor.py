@@ -720,6 +720,86 @@ def test_incremental_rollup_view_matches_full_recompute(spark, tmp_path, changes
     assert dst.current_snapshot()["snapshot_id"] > prev  # it DID re-merge
 
 
+ROLLUP_COLS = ["conv_id", "n_turns", "roles", "first_ts", "last_ts"]
+
+
+def _rollup_rows(df):
+    return sorted(tuple(r) for r in df.select(*ROLLUP_COLS).collect())
+
+
+def _view_step(spark, src, i):
+    """One small merge-on-read commit on the view's source: a new turn of
+    one of three conversations, and a delete of the first one's turn 0 at
+    step 6."""
+    t = TS + dt.timedelta(minutes=i)
+    rows = [(f"c{i % 3}", i, f"s{i}", 100 + i, False, t)]
+    if i == 6:
+        rows.append(("c0", 0, None, 200, True, t))
+    src.merge(_delta(spark, rows), f"src-{i}", mode="mor")
+
+
+def test_rollup_refreshes_fold_by_the_one_policy(spark, tmp_path):
+    """More than 8 refreshes into a one-bucket view: every refresh lands a
+    merge-on-read delta, and the refresh folds the view's buckets over
+    should_fold's threshold, so after each refresh no bucket is over it
+    and the view equals a full recompute."""
+    from dibbs_ecr_refiner_spark.lake.feed import ChangeFeedReader
+    from dibbs_ecr_refiner_spark.lake.views import (
+        conversation_rollup,
+        refresh_conversation_rollup,
+    )
+
+    src = LakeTable(spark, str(tmp_path / "src"), num_buckets=2)
+    dst = LakeTable(spark, str(tmp_path / "rollup"), num_buckets=1)
+    feed = ChangeFeedReader(src, str(tmp_path / "cursor.json"))
+    for i in range(10):
+        _view_step(spark, src, i)
+        refresh_conversation_rollup(src, dst, feed, f"refresh-{i}")
+        assert not maintenance.should_fold(dst), f"refresh {i} left the view over the threshold"
+        assert _rollup_rows(dst.read()) == _rollup_rows(conversation_rollup(src.read()))
+    assert any(b.startswith("compact-") for b in dst.current_snapshot()["applied_batches"])
+
+
+def test_rollup_refresh_heals_a_fold_that_crashed(spark, tmp_path, monkeypatch):
+    """A crash in the fold after a refresh's merge (and feed ack) landed
+    leaves the view over the threshold. The next refresh has an empty feed
+    and merges nothing, yet it folds: no bucket stays over the threshold
+    and the view equals a full recompute."""
+    from dibbs_ecr_refiner_spark.lake.feed import ChangeFeedReader
+    from dibbs_ecr_refiner_spark.lake.views import (
+        conversation_rollup,
+        refresh_conversation_rollup,
+    )
+
+    src = LakeTable(spark, str(tmp_path / "src"), num_buckets=2)
+    dst = LakeTable(spark, str(tmp_path / "rollup"), num_buckets=1)
+    feed = ChangeFeedReader(src, str(tmp_path / "cursor.json"))
+    for i in range(8):
+        _view_step(spark, src, i)
+        refresh_conversation_rollup(src, dst, feed, f"refresh-{i}")
+    assert not maintenance.should_fold(dst)
+
+    real_compact = maintenance.compact
+
+    def crash_once(*a, **kw):
+        monkeypatch.setattr(maintenance, "compact", real_compact)
+        raise OSError("simulated crash before the fold")
+
+    monkeypatch.setattr(maintenance, "compact", crash_once)
+    _view_step(spark, src, 8)
+    with pytest.raises(OSError):
+        refresh_conversation_rollup(src, dst, feed, "refresh-8")
+    assert maintenance.should_fold(dst) == [0]
+    assert maintenance.compact is real_compact
+
+    version = dst.current_snapshot()["snapshot_id"]
+    res = refresh_conversation_rollup(src, dst, feed, "refresh-9")
+    assert res.get("empty_feed")
+    assert dst.current_snapshot()["snapshot_id"] > version  # the fold committed
+    assert not maintenance.should_fold(dst)
+    assert _rollup_rows(dst.read()) == _rollup_rows(conversation_rollup(src.read()))
+
+
 # ---------------- chaos: interleaved modes + maintenance ----------------
 
 

@@ -446,6 +446,62 @@ def test_stream_between_lakes_bronze_to_silver(spark, tmp_path):
     assert silver.current_snapshot()["snapshot_id"] == v_silver + 1
 
 
+def test_stream_between_lakes_folds_by_the_one_policy(spark, tmp_path):
+    """More than 8 merge-on-read chain epochs into a one-bucket silver
+    table (one bronze commit per epoch, ``maxVersionsPerBatch=1``): each
+    epoch folds silver's buckets over should_fold's threshold, so none is
+    over it before the next epoch's merge or at the end, and silver
+    equals the transform of bronze's resolved read."""
+    from pyspark.sql import functions as F
+
+    from dibbs_ecr_refiner_spark.streaming.apply import stream_between_lakes
+
+    bronze = LakeTable(spark, str(tmp_path / "bronze"), num_buckets=2)
+    silver = LakeTable(spark, str(tmp_path / "silver"), num_buckets=1)
+    for i in range(10):
+        rows = [(f"c{i % 3}", i, f"t{i}", 10 + i, False)]
+        if i == 6:
+            rows.append(("c0", 0, None, 30, True))
+        bronze.merge(_delta(spark, rows), f"b{i}", mode="mor")
+
+    over_before_merge = []
+    real_merge = silver.merge
+
+    def merge(df, batch_id, **kw):
+        if batch_id.startswith("chain-"):  # not the fold's own rewrite
+            over_before_merge.append(maintenance.should_fold(silver))
+        return real_merge(df, batch_id, **kw)
+
+    silver.merge = merge
+    xform = lambda df: df.withColumn("text", F.upper(F.col("text")))  # noqa: E731
+    # a continuous query: under availableNow the source delivers the
+    # whole backlog in one epoch whatever its version cap
+    q = stream_between_lakes(
+        spark,
+        bronze,
+        silver,
+        str(tmp_path / "cp"),
+        transform=xform,
+        available_now=False,
+        max_versions_per_batch=1,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        silver.merge = real_merge
+
+    applied = silver.current_snapshot()["applied_batches"]
+    assert sum(b.startswith("chain-") for b in applied) == 10
+    assert any(b.startswith("compact-") for b in applied), "no fold ran"
+    # (merge can also run for an epoch that commits nothing)
+    assert len(over_before_merge) >= 10 and not any(over_before_merge)
+    assert not maintenance.should_fold(silver)
+    cols = ["conv_id", "turn_idx", "text", "change_lsn"]
+    want = sorted(tuple(r) for r in xform(bronze.read()).select(*cols).collect())
+    assert sorted(tuple(r) for r in silver.read().select(*cols).collect()) == want
+
+
 def test_mid_stream_rename_keeps_the_pinned_query_schema(spark, tmp_path):
     """A streaming query's schema is immutable once started: a rename
     committed mid-stream must not change the emitted column names — the
