@@ -203,8 +203,7 @@ def cmd_stream(args) -> dict:
     reader = spark.readStream.format("lake_cdc").option("path", args.table)
     if args.from_version:
         reader = reader.option("startingVersion", str(args.from_version))
-    if args.max_versions_per_batch:
-        reader = reader.option("maxVersionsPerBatch", str(args.max_versions_per_batch))
+
     def _count() -> int:
         # the file sink's _spark_metadata manifest makes this exact
         try:
@@ -485,7 +484,6 @@ def main(argv=None) -> int:
     st.add_argument("--out", required=True, help="parquet dir the change stream appends to")
     st.add_argument("--checkpoint", required=True, help="streaming checkpoint dir (the cursor)")
     st.add_argument("--from-version", type=int, default=None)
-    st.add_argument("--max-versions-per-batch", type=int, default=None)
 
     args = ap.parse_args(argv)
     out = {

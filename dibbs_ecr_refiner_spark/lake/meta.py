@@ -129,15 +129,11 @@ class Span:
 
     ``eras`` is the era map merged over every manifest the walk visited: a
     fold inside the span can prune a superseded delta file's era from the
-    END manifest while the walk still delivers that file. ``num_buckets``
-    is the bucket count every file in ``files`` is proven to be numbered
-    under, or None when a rebucket inside a walked span mixed numberings
-    (bucket-hash pruning is unsound then)."""
+    END manifest while the walk still delivers that file."""
 
     files: list[dict]
     snap: dict
     eras: dict[str, list[dict]]
-    num_buckets: int | None
 
 
 def span(root: str, frm: int | None, to: int | None = None) -> Span:
@@ -157,17 +153,14 @@ def span(root: str, frm: int | None, to: int | None = None) -> Span:
     if new is None:
         raise ValueError("table has no snapshot yet")
     if not frm:
-        return Span(list(new["files"]), new, new["schemas"], new["num_buckets"])
+        return Span(list(new["files"]), new, new["schemas"])
     old_paths = {f["path"] for f in snapshot(root, frm)["files"]}
     added: dict[str, dict] = {}
     eras = dict(new["schemas"])
-    num_buckets = new["num_buckets"]
     prev = old_paths
     try:
         for v in range(frm + 1, new["snapshot_id"] + 1):
             s = snapshot(root, v)
-            if s["num_buckets"] != new["num_buckets"]:
-                num_buckets = None
             for sv, cols in s["schemas"].items():
                 eras.setdefault(sv, cols)
             for f in s["files"]:
@@ -176,8 +169,8 @@ def span(root: str, frm: int | None, to: int | None = None) -> Span:
             prev = {f["path"] for f in s["files"]}
     except FileNotFoundError:
         diff = [f for f in new["files"] if f["path"] not in old_paths]
-        return Span(diff, new, new["schemas"], new["num_buckets"])
-    return Span(list(added.values()), new, eras, num_buckets)
+        return Span(diff, new, new["schemas"])
+    return Span(list(added.values()), new, eras)
 
 
 def projections(files: list[dict], eras: dict[str, list[dict]], cols: list[dict]) -> dict[tuple, list[dict]]:
@@ -266,7 +259,7 @@ def bucket_of(conv_id: str, num_buckets: int) -> int:
 
 def prune(
     files: list[dict],
-    num_buckets: int | None,
+    num_buckets: int,
     buckets: list[int] | None = None,
     conv_eq: str | None = None,
     ts_lo: int | None = None,
@@ -274,12 +267,11 @@ def prune(
     """The files that can hold a row in ``buckets`` with ``conv_id ==
     conv_eq`` and ``ts >= ts_lo`` (epoch-µs). A file is dropped only when
     it PROVABLY holds none: by the key's bucket under ``num_buckets`` (the
-    count the files are numbered under; None skips bucket-hash pruning) or
-    by its manifest-stamped [min, max] stats — missing stats mean
-    must-scan. Callers still filter rows: pruning saves IO, it never owns
-    correctness."""
+    count the files are numbered under) or by its manifest-stamped
+    [min, max] stats — missing stats mean must-scan. Callers still filter
+    rows: pruning saves IO, it never owns correctness."""
     want = None if buckets is None else set(buckets)
-    if conv_eq is not None and num_buckets:
+    if conv_eq is not None:
         b = {bucket_of(conv_eq, num_buckets)}
         want = b if want is None else want & b
     return [

@@ -9,7 +9,7 @@ EXACT (footer-read) stats are stamped only by maintenance rewrites
 on its merge-on-read delta entries instead: the batch's pre-pass
 aggregate (``LakeTable.prepass``) already computes each bucket's min/max
 event ts — a superset of the winners the delta file holds — so fresh
-deltas are ``read_since``/``sinceTs``-prunable with zero extra jobs and
+deltas are ``read_since``-prunable with zero extra jobs and
 zero footer reads (pinned by
 tests/test_lake.py::test_no_driver_side_footer_reads).
 Readers treat a missing stats block, or a missing per-column range, as

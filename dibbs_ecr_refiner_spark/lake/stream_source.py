@@ -23,9 +23,11 @@ Design (Spark-first):
 - **One InputPartition per added data file** in the ``(start, end]`` span:
   executor-parallel Arrow scans, zero driver-side data movement. Which
   files, and through which field-id projection, comes from ``lake/meta``
-  — the same span walk, era projection, tag resolution and file pruning
+  — the same span walk, era projection and tag resolution
   ``LakeTable.read_changes`` and ``ChangeFeedReader`` use, so every
-  surface returns the same rows for the same span. Maintenance rewrites
+  surface returns the same rows for the same span. Both faces plan the
+  whole span the same way and read it with one partition reader; a
+  consumer's filters run in Spark after the scan. Maintenance rewrites
   (fold / compact / rebucket) are skipped, so a fold between triggers
   yields an empty batch, while delta files superseded by an in-span fold
   are still delivered (see ``meta.span``).
@@ -36,9 +38,13 @@ Design (Spark-first):
   cast to the Spark schema's Arrow form — vectorized end to end, no
   per-row pickling.
 - **Rate control**: ``maxVersionsPerBatch`` caps how many commits a single
-  microbatch may span (admission control within a run; the first batch
-  after a checkpoint restart is uncapped because the API only hands the
-  reader its own prior offset via ``partitions``).
+  microbatch may span under a continuous trigger (the first batch after
+  a checkpoint restart is uncapped because the API only hands the reader
+  its own prior offset via ``partitions``). Spark 4.1's Python stream API
+  has no admission control, so under ``availableNow`` the whole backlog
+  lands as one epoch whatever the cap says; ``stream_between_lakes``
+  rejects the pair, and the CLI ``stream`` export (always
+  ``availableNow``) takes no cap.
 - **Cost model** (measured, BENCH.md): the Python-worker Arrow scan runs
   ~5× slower than the JVM parquet path on bulk data — right for tailing
   incremental spans (O(new data) per trigger), wrong for bulk loads; do
@@ -100,31 +106,24 @@ class LakeFilePartition(InputPartition):
 DEFAULT_SPLIT_BYTES = 128 << 20
 
 
-def _plan_partitions(
-    root: str,
-    frm: int,
-    to: int,
-    split_bytes: int,
-    pin_cols: list[dict] | None,
-    prune: dict,
-) -> list[LakeFilePartition]:
+def _plan_partitions(root: str, frm: int, to: int, pin_cols: list[dict] | None) -> list[LakeFilePartition]:
     """``pin_cols`` projects the span onto a FIXED column set (by field
     id) instead of the end snapshot's: a streaming query's schema is
     immutable for the life of the query, so after a mid-stream column
     add / rename / drop the reader must keep emitting the columns the
     query started with — ids stay stable across renames, a dropped id
     NULL-fills, and a column added after the pin is invisible until the
-    stream restarts (≙ Iceberg's schema-pinned incremental scan).
-    ``prune`` holds ``meta.prune``'s key / ts bounds."""
+    stream restarts (≙ Iceberg's schema-pinned incremental scan). A file
+    splits into one slice per ``DEFAULT_SPLIT_BYTES`` of its manifest
+    ``bytes``."""
     span = meta.span(root, frm, to)
-    files = meta.prune(span.files, span.num_buckets, **prune)
     cols = pin_cols if pin_cols is not None else span.snap["columns"]
-    if not files:
+    if not span.files:
         return [LakeFilePartition(None, (), cols)]
     parts = []
-    for proj, fs in meta.projections(files, span.eras, cols).items():
+    for proj, fs in meta.projections(span.files, span.eras, cols).items():
         for f in fs:
-            n = max(1, -(-int(f["bytes"]) // max(1, split_bytes)))
+            n = max(1, -(-int(f["bytes"]) // DEFAULT_SPLIT_BYTES))
             path = os.path.join(root, f["path"])
             parts.extend(LakeFilePartition(path, proj, cols, i, n) for i in range(n))
     return parts
@@ -180,44 +179,15 @@ def _version_opt(options, root: str, version_key: str, tag_key: str) -> int:
     return meta.endpoint(root, v, options.get(tag_key) or None, (version_key, tag_key)) or 0
 
 
-def _parse_ts_opt(v) -> int:
-    """A ``sinceTs`` option value as epoch-µs: integer epoch-µs verbatim,
-    else an ISO-8601 timestamp (naive = UTC, same convention the stats
-    stamp uses)."""
-    import datetime as _dt
-
-    from .stats import _ts_us
-
-    s = str(v)
-    try:
-        return int(s)
-    except ValueError:
-        return _ts_us(_dt.datetime.fromisoformat(s))
-
-
-def _split_bytes(options) -> int:
-    return int(options.get("targetsplitbytes", 0) or 0) or DEFAULT_SPLIT_BYTES
-
-
 class LakeCdcStreamReader(DataSourceStreamReader):
-    """The streaming face. ``pushFilters`` exists only on batch
-    ``DataSourceReader`` in the 4.1 API, so a filtered streaming consumer
-    would Arrow-scan every added file; the ``sinceTs`` / ``convId`` READ
-    OPTIONS close that gap — the same ``meta.prune`` stats/bucket logic,
-    declared up front instead of pushed down. Semantics: file-level
-    IO pruning ONLY. A surviving file is delivered whole (stats are
-    per-file ranges, not row predicates), so a consumer composes the
-    option with the matching ``.filter()``; the option guarantees no
-    QUALIFYING row is ever dropped, never that non-qualifying rows are."""
+    """The streaming face: each microbatch is the snapshot span between
+    two committed versions (``startingVersion`` / ``startingTag`` set the
+    first), capped at ``maxVersionsPerBatch`` commits under a continuous
+    trigger."""
 
     def __init__(self, options):
         self.root = options["path"]
-        self.split_bytes = _split_bytes(options)
         self.max_versions = int(options.get("maxversionsperbatch", 0) or 0)
-        self._prune = {
-            "conv_eq": options.get("convid"),
-            "ts_lo": _parse_ts_opt(options["sincets"]) if "sincets" in options else None,
-        }
         self.starting = _version_opt(options, self.root, "startingversion", "startingtag")
         self._last: int | None = None
         # pin the query's column set NOW (the declared schema is immutable
@@ -245,14 +215,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
             return [LakeFilePartition(None, (), [])]
         if self._pin_cols is None:
             self._pin_cols = meta.snapshot(self.root, to)["columns"]
-        return _plan_partitions(
-            self.root,
-            frm,
-            to,
-            self.split_bytes,
-            self._pin_cols,
-            self._prune,
-        )
+        return _plan_partitions(self.root, frm, to, self._pin_cols)
 
     def read(self, partition: LakeFilePartition) -> Iterator:
         return _read_partition(partition)
@@ -266,16 +229,7 @@ class LakeCdcBatchReader(DataSourceReader):
     """Batch face of the same source: ``spark.read.format("lake_cdc")``
     with ``fromVersion`` / ``toVersion`` — an incremental scan between two
     retained snapshots (``fromVersion`` 0 = the whole table as of
-    ``toVersion``, i.e. time travel).
-
-    Deliberately does NOT define ``pushFilters``: PySpark 4.1 hard-errors
-    (``DATA_SOURCE_PUSHDOWN_DISABLED``) when a reader merely *implements*
-    it while ``spark.sql.python.filterPushdown.enabled`` is false — the
-    Spark default — so a pushdown-capable reader would break every vanilla
-    session. Filter pruning lives on :class:`LakeCdcPushdownBatchReader`,
-    selected by the ``pushdown=true`` read option (set automatically by
-    :func:`scan` when the session conf allows it). A plain session just
-    scans unpruned — slower, never broken."""
+    ``toVersion``, i.e. time travel)."""
 
     def __init__(self, options):
         self.root = options["path"]
@@ -283,55 +237,14 @@ class LakeCdcBatchReader(DataSourceReader):
         self.to = _version_opt(options, self.root, "toversion", "totag") or (
             meta.current_version(self.root) or 0
         )
-        self.split_bytes = _split_bytes(options)
-        self._prune: dict = {}
-
-    def _accept_filters(self, filters):
-        """Partition-pruning pushdown (Spark 4.1 Python Data Source API):
-        ``conv_id = v`` prunes to the key's bucket (driver-side xxhash —
-        write/read hash parity is pinned by test) plus any file whose
-        stamped conv_id [min,max] excludes v; ``ts >=/> T`` prunes files
-        whose stamped ts-max is below the bound. Pruning is CONSERVATIVE
-        (a dropped file provably holds no qualifying rows — un-stamped
-        files are always scanned) and every filter is RETURNED so Spark
-        re-evaluates it post-scan: the pushdown saves IO, never owns
-        correctness. This is safe precisely because this source emits the
-        RAW change feed with no LWW resolve — a row's qualification
-        depends on nothing outside its own file."""
-        from .stats import _ts_us
-
-        for f in filters:
-            cls = type(f).__name__
-            col = getattr(f, "attribute", None)
-            if cls == "EqualTo" and col == ("conv_id",) and isinstance(f.value, str):
-                self._prune["conv_eq"] = f.value
-            elif cls in ("GreaterThanOrEqual", "GreaterThan") and col == ("ts",):
-                try:
-                    self._prune["ts_lo"] = _ts_us(f.value)
-                except (TypeError, ValueError, AttributeError):
-                    pass
-        return filters  # Spark re-applies everything
 
     def partitions(self) -> Sequence[InputPartition]:
         if self.to <= self.frm:
             return [LakeFilePartition(None, (), [])]
-        return _plan_partitions(
-            self.root, self.frm, self.to, self.split_bytes, None, self._prune
-        )
+        return _plan_partitions(self.root, self.frm, self.to, None)
 
     def read(self, partition: LakeFilePartition) -> Iterator:
         return _read_partition(partition)
-
-
-class LakeCdcPushdownBatchReader(LakeCdcBatchReader):
-    """The batch reader with filter pushdown. Split from the base class
-    because Spark's worker refuses ANY reader that defines ``pushFilters``
-    unless ``spark.sql.python.filterPushdown.enabled`` is on — this
-    subclass is only handed out when the ``pushdown=true`` read option
-    says the session opted in (see :meth:`LakeCdcDataSource.reader`)."""
-
-    def pushFilters(self, filters):
-        return self._accept_filters(filters)
 
 
 class LakeCdcDataSource(DataSource):
@@ -361,30 +274,11 @@ class LakeCdcDataSource(DataSource):
         return LakeCdcStreamReader(self.options)
 
     def reader(self, schema) -> LakeCdcBatchReader:
-        # reader() runs in a session-less Python worker, so the session
-        # conf is unreachable here — the `pushdown` READ OPTION is the
-        # only channel. Default false: a vanilla session must get a
-        # working (unpruned) scan, never DATA_SOURCE_PUSHDOWN_DISABLED.
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return LakeCdcPushdownBatchReader(self.options)
         return LakeCdcBatchReader(self.options)
 
 
-PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
-
-
-def _pushdown_on(spark) -> bool:
-    try:
-        return str(spark.conf.get(PUSHDOWN_CONF, "false")).lower() == "true"
-    except Exception:
-        return False
-
-
 def register(spark) -> None:
-    """Idempotently register the source on a session, and best-effort
-    enable Spark's Python-data-source pushdown protocol (a plain runtime
-    SQL conf, default false in 4.1) so :func:`scan` can prune. A session
-    that rejects the conf still works — reads just stay unpruned."""
+    """Idempotently register the source on a session."""
     try:
         spark.dataSource.register(LakeCdcDataSource)
     except Exception as e:  # pragma: no cover - depends on session lineage
@@ -393,25 +287,14 @@ def register(spark) -> None:
         # source is perfectly usable there
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise
-    if not _pushdown_on(spark):
-        try:
-            spark.conf.set(PUSHDOWN_CONF, "true")
-        except Exception:
-            pass  # read-only conf surface: degrade to unpruned scans
 
 
 def scan(spark, root: str, **options):
-    """Batch-read the ``lake_cdc`` source with filter pushdown enabled
-    whenever the session supports it — the one call site that bridges the
-    driver-side conf (visible here) to the worker-side reader choice (the
-    ``pushdown`` option). Keyword options pass through verbatim
-    (``fromVersion=…``, ``toVersion=…``, ``fromTag=…``, ``sinceTs=…``);
-    pass ``pushdown=`` explicitly to override the conf-based default."""
+    """Batch-read the ``lake_cdc`` source at ``root``. Keyword options pass
+    through verbatim (``fromVersion=…``, ``toVersion=…``, ``fromTag=…``,
+    ``toTag=…``)."""
     register(spark)
     r = spark.read.format(SOURCE_NAME).option("path", root)
-    keys = {k.lower() for k in options}
     for k, v in options.items():
         r = r.option(k, str(v))
-    if "pushdown" not in keys and _pushdown_on(spark):
-        r = r.option("pushdown", "true")
     return r.load()

@@ -886,7 +886,7 @@ class LakeTable:
                         # a conservative superset of the LWW winners the
                         # delta file actually holds (refine/enrich never
                         # rewrite ts). Stamping it makes FRESH delta files
-                        # read_since/sinceTs-prunable before any fold; the
+                        # read_since-prunable before any fold; the
                         # fold later replaces this with exact footer stats.
                         # conv_id is deliberately absent (missing per-column
                         # range ⇒ must-scan) — point lookups already prune

@@ -377,9 +377,6 @@ def cdc_source_span(spark, sf):
     t = LakeTable(spark, f"{work}/lake", num_buckets=8)
     t.merge(delta.where(F.col("change_lsn") % 2 == 0), "b0")
     t.merge(delta.where(F.col("change_lsn") % 2 == 1), "b1", mode="mor")
-    # scan() works on ANY session: it turns pushdown on only when the
-    # session conf allows it (register() best-effort enables the conf),
-    # and falls back to an unpruned scan on a locked-down vanilla session.
     span = scan(spark, f"{work}/lake", fromVersion=1)
     return (
         span.groupBy("role")

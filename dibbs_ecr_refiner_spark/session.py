@@ -48,10 +48,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the lake_cdc batch source prunes partitions from pushed filters
-        # (conv_id bucket hash + manifest stats) — opt in to the Python
-        # Data Source pushdown protocol (off by default in Spark 4.1)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # PySpark 4 captures a Python call-site stack frame on EVERY
         # DataFrame/Column API call for error enrichment; on the replay
         # path that is thousands of inspect.stack probes per batch of pure

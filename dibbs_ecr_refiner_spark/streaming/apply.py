@@ -118,9 +118,19 @@ def stream_between_lakes(
     MOR: a long-lived chain is the steady-state regime where commit cost
     must stay O(micro-batch), not O(table). A merge-on-read chain calls
     ``maintenance.fold_due(dst)`` after every epoch, so ``dst``'s pending
-    deltas stay under the fold threshold."""
+    deltas stay under the fold threshold.
+
+    ``max_versions_per_batch`` caps the commits one epoch spans, and only
+    a continuous trigger honours it: Spark 4.1's Python stream API has no
+    admission control, so ``availableNow`` lands the whole backlog as one
+    epoch. The pair raises ``ValueError`` before the query starts."""
     from ..lake.stream_source import register
 
+    if max_versions_per_batch and available_now:
+        raise ValueError(
+            "max_versions_per_batch needs available_now=False: an availableNow "
+            "query lands the whole backlog as one epoch whatever the cap"
+        )
     register(spark)
     reader = spark.readStream.format("lake_cdc").option("path", src.root)
     if max_versions_per_batch:

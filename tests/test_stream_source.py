@@ -261,6 +261,8 @@ def test_batch_face_matches_read_changes(spark, tmp_path, span):
     rows = lambda df: sorted(repr(tuple(r)) for r in df.collect())  # noqa: E731
     assert via_source.schema == via_table.schema
     assert rows(via_table) == rows(via_source) == rows(feed.poll())
+    if span == "rebucket":  # files numbered under both bucket counts
+        assert _key_set(via_source.collect()) == {("c1", 0, 3), ("c7", 0, 4)}
     # time travel: toVersion pins the endpoint
     at_v1 = scan(spark, root, toVersion=v1)
     assert _key_set(at_v1.collect()) == {("c1", 0, 1), ("c2", 0, 2)}
@@ -388,7 +390,12 @@ def test_large_file_splits_into_row_group_slices(tmp_path):
     assert sum(len(s) for s in seen) == n, "slices must be disjoint"
 
 
-def test_split_option_end_to_end_and_manifest_bytes(spark, tmp_path):
+def test_split_option_end_to_end_and_manifest_bytes(spark, tmp_path, monkeypatch):
+    """Files split into slices by their manifest ``bytes``: with the split
+    size patched small, the batch face plans several slices per file and
+    reading every slice yields exactly the unsliced rows."""
+    from dibbs_ecr_refiner_spark.lake import stream_source
+
     root = str(tmp_path / "t")
     table = LakeTable(spark, root, num_buckets=2)
     table.merge(
@@ -397,16 +404,14 @@ def test_split_option_end_to_end_and_manifest_bytes(spark, tmp_path):
     # write path stamps sizes so the planner never stats (or reads) files
     assert all(f.get("bytes", 0) > 0 for f in table.current_snapshot()["files"])
 
-    register(spark)
-    base = spark.read.format("lake_cdc").option("path", root).load()
-    sliced = (
-        spark.read.format("lake_cdc")
-        .option("path", root)
-        .option("targetSplitBytes", "512")  # force several slices per file
-        .load()
-    )
-    assert sliced.rdd.getNumPartitions() > base.rdd.getNumPartitions()
-    assert _key_set(sliced.collect()) == _key_set(base.collect())
+    def read_all(parts):
+        return _key_set(r for p in parts for b in stream_source._read_partition(p) for r in b.to_pylist())
+
+    base = stream_source.LakeCdcBatchReader({"path": root}).partitions()
+    monkeypatch.setattr(stream_source, "DEFAULT_SPLIT_BYTES", 512)  # several slices per file
+    sliced = stream_source.LakeCdcBatchReader({"path": root}).partitions()
+    assert len(sliced) > len(base)
+    assert read_all(sliced) == read_all(base) == {(f"c{i}", 0, i + 1) for i in range(40)}
 
 
 def test_stream_between_lakes_bronze_to_silver(spark, tmp_path):
@@ -500,6 +505,24 @@ def test_stream_between_lakes_folds_by_the_one_policy(spark, tmp_path):
     cols = ["conv_id", "turn_idx", "text", "change_lsn"]
     want = sorted(tuple(r) for r in xform(bronze.read()).select(*cols).collect())
     assert sorted(tuple(r) for r in silver.read().select(*cols).collect()) == want
+
+
+def test_stream_between_lakes_refuses_a_version_cap_under_available_now(spark, tmp_path):
+    """An availableNow query lands the whole backlog as one epoch whatever
+    ``maxVersionsPerBatch`` says, so the pair is an error raised before
+    any query starts or checkpoint is written."""
+    from dibbs_ecr_refiner_spark.streaming.apply import stream_between_lakes
+
+    bronze = LakeTable(spark, str(tmp_path / "bronze"), num_buckets=2)
+    silver = LakeTable(spark, str(tmp_path / "silver"), num_buckets=2)
+    bronze.merge(_delta(spark, [("c1", 0, "a", 1, False)]), "b0")
+    cp = tmp_path / "cp"
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="available_now"):
+        stream_between_lakes(spark, bronze, silver, str(cp), max_versions_per_batch=1)
+    assert len(spark.streams.active) == active
+    assert not cp.exists()
+    assert silver.current_snapshot() is None
 
 
 def test_mid_stream_rename_keeps_the_pinned_query_schema(spark, tmp_path):
@@ -604,220 +627,6 @@ def test_tag_anchored_batch_scan_and_stream_start(spark, tmp_path):
         spark.read.format("lake_cdc").option("path", root).option("fromVersion", "1").option(
             "fromTag", "july"
         ).load().collect()
-
-
-def test_batch_face_filter_pushdown_prunes_partitions(spark, tmp_path):
-    """conv_id = v prunes the scan to the key's bucket (and, after a
-    compaction stamps stats, to the files whose range can hold it);
-    ts >= T prunes cold stamped files. Results must equal the unpruned
-    scan filtered by Spark — pushdown saves IO, never owns correctness."""
-    from pyspark.sql import functions as F
-
-    from dibbs_ecr_refiner_spark.lake.stream_source import (
-        LakeCdcBatchReader,
-        LakeCdcPushdownBatchReader,
-        scan,
-    )
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=8)
-    rows = [(f"c{i}", 0, f"t{i}", i + 1, False) for i in range(40)]
-    table.merge(_delta(spark, rows), "b0")
-    maintenance.compact(table)  # stamps per-file conv_id/ts stats
-
-    # scan() on the engine session (conf on) takes the pushdown reader
-    base = scan(spark, root)
-    got = base.filter(F.col("conv_id") == "c7").collect()
-    assert _key_set(got) == {("c7", 0, 8)}
-
-    # reader-level proof of pruning: pushFilters -> fewer partitions
-    from pyspark.sql.datasource import EqualTo
-
-    r_all = LakeCdcBatchReader({"path": root})
-    n_all = len(r_all.partitions())
-    r_pruned = LakeCdcPushdownBatchReader({"path": root})
-    returned = list(r_pruned.pushFilters([EqualTo(("conv_id",), "c7")]))
-    assert len(returned) == 1, "every filter must be returned for Spark to re-apply"
-    n_pruned = len(r_pruned.partitions())
-    assert n_pruned < n_all, (n_pruned, n_all)
-    # the pruned partitions still contain the qualifying row
-    texts = set()
-    for p in r_pruned.partitions():
-        for batch in r_pruned.read(p):
-            texts.update(batch.column("conv_id").to_pylist() if batch.num_rows else [])
-    assert "c7" in texts
-
-
-def test_batch_face_works_on_a_vanilla_session_without_pushdown_conf(spark, tmp_path):
-    """Regression (round-3 driver failure): a session WITHOUT
-    ``spark.sql.python.filterPushdown.enabled`` — the Spark default, and
-    what any notebook / spark-submit / external harness runs — must get a
-    working (unpruned) scan, not DATA_SOURCE_PUSHDOWN_DISABLED. The crash
-    fired because the reader merely *implemented* pushFilters; the plain
-    reader class defines none, so both a bare load and a filtered load
-    succeed with Spark applying the filters post-scan."""
-    from pyspark.sql import functions as F
-
-    from dibbs_ecr_refiner_spark.lake.stream_source import PUSHDOWN_CONF, scan
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=4)
-    table.merge(_delta(spark, [(f"c{i}", 0, f"t{i}", i + 1, False) for i in range(12)]), "b0")
-
-    register(spark)
-    # simulate the vanilla session by flipping the runtime conf to the
-    # Spark default on THIS session (the crash keyed on the conf at plan
-    # time, not on session identity; newSession() can't be used here —
-    # data-source registration is per-session but the exists-check is
-    # global, so a sibling session can neither register nor resolve)
-    spark.conf.set(PUSHDOWN_CONF, "false")
-    try:
-        base = spark.read.format("lake_cdc").option("path", root).load()
-        assert base.count() == 12
-        got = base.filter(F.col("conv_id") == "c7").collect()
-        assert _key_set(got) == {("c7", 0, 8)}
-
-        # scan() on the same session re-enables the conf (runtime-settable)
-        # and upgrades to the pushdown reader; same answer either way
-        got2 = scan(spark, root).filter(F.col("conv_id") == "c7").collect()
-        assert _key_set(got2) == {("c7", 0, 8)}
-        assert spark.conf.get(PUSHDOWN_CONF) == "true"
-    finally:
-        spark.conf.set(PUSHDOWN_CONF, "true")
-
-
-def test_scan_pushdown_false_option_forces_the_plain_reader(spark, tmp_path):
-    """Explicit ``pushdown=false`` wins over the session conf — the escape
-    hatch when a consumer wants the conf on for other sources but an
-    unpruned lake scan."""
-    from dibbs_ecr_refiner_spark.lake.stream_source import scan
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=4)
-    table.merge(_delta(spark, [("a", 0, "x", 1, False), ("b", 0, "y", 2, False)]), "b0")
-    assert scan(spark, root, pushdown=False).count() == 2
-
-
-def test_bucket_pruning_disabled_across_a_rebucket_span(spark, tmp_path):
-    """A rebucket inside the incremental span leaves files numbered under
-    the OLD bucket count — bucket-hash pruning must switch itself off
-    (stats pruning stays) rather than drop a file that holds the key."""
-    from pyspark.sql.datasource import EqualTo
-
-    from dibbs_ecr_refiner_spark.lake.stream_source import LakeCdcPushdownBatchReader
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=2)
-    table.merge(_delta(spark, [(f"c{i}", 0, "x", i + 1, False) for i in range(10)]), "b0")
-    v1 = table._current_version()
-    table.merge(_delta(spark, [("k1", 0, "pre", 100, False)]), "b1", mode="mor")
-    maintenance.rebucket(table, 8)
-    table.merge(_delta(spark, [("k2", 0, "post", 200, False)]), "b2", mode="mor")
-
-    for key, lsn in (("k1", 100), ("k2", 200)):
-        r = LakeCdcPushdownBatchReader({"path": root, "fromversion": str(v1)})
-        r.pushFilters([EqualTo(("conv_id",), key)])
-        found = set()
-        for p in r.partitions():
-            for batch in r.read(p):
-                if batch.num_rows:
-                    found.update(batch.column("conv_id").to_pylist())
-        assert key in found, f"pruning dropped {key}'s file across the rebucket span"
-
-
-def test_stream_since_ts_option_prunes_cold_stamped_files(spark, tmp_path):
-    """sinceTs on the STREAMING face (pushFilters is batch-only in the
-    4.1 API): a filtered tail plans only the stats-qualifying files —
-    compacted files stamped with a cold ts range are skipped, unstamped
-    ingest files are always scanned (conservative), and no qualifying row
-    is ever dropped. ≙ the event-filtered SQS tail, reference
-    lambda_function.py:192-209."""
-    import datetime as dt
-
-    from dibbs_ecr_refiner_spark.lake.stream_source import LakeCdcStreamReader
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=4)
-    old_ts, new_ts = dt.datetime(2026, 1, 1), dt.datetime(2026, 6, 1)
-    rows_old = [(f"c{i}", 0, old_ts, i + 1, "user", f"t{i}", None, False) for i in range(12)]
-    table.merge(spark.createDataFrame(rows_old, SCHEMA), "b0")
-    # force the rewrite (single-file buckets are skipped by default) so
-    # per-file conv_id/ts stats get stamped
-    maintenance.compact(table, buckets=list(range(4)))
-    rows_new = [("hot", 0, new_ts, 100, "user", "fresh", None, False)]
-    table.merge(spark.createDataFrame(rows_new, SCHEMA), "b1", mode="mor")
-
-    cutoff = dt.datetime(2026, 3, 1).isoformat()
-    r_all = LakeCdcStreamReader({"path": root})
-    r_pruned = LakeCdcStreamReader({"path": root, "sincets": cutoff})
-    span = ({"version": 0}, {"version": table._current_version()})
-    n_all = len(r_all.partitions(*span))
-    n_pruned = len(r_pruned.partitions(*span))
-    assert n_pruned < n_all, (n_pruned, n_all)
-    # every surviving partition is either the unstamped fresh delta or a
-    # file whose stamped range can hold the cutoff — and 'hot' survives
-    found = set()
-    for p in r_pruned.partitions(*span):
-        for batch in r_pruned.read(p):
-            if batch.num_rows:
-                found.update(batch.column("conv_id").to_pylist())
-    assert "hot" in found
-
-    # end-to-end: filtered stream (option + matching .filter, the
-    # documented composition) delivers exactly the qualifying rows
-    from pyspark.sql import functions as F
-
-    sink = Sink()
-    register(spark)
-    q = (
-        spark.readStream.format("lake_cdc")
-        .option("path", root)
-        .option("sinceTs", cutoff)
-        .load()
-        .filter(F.col("ts") >= cutoff)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert _key_set(sink.rows) == {("hot", 0, 100)}
-    finally:
-        q.stop()
-
-
-def test_stream_conv_id_option_prunes_to_the_keys_bucket(spark, tmp_path):
-    """convId on the streaming face prunes by bucket hash (no stats
-    needed — ingest files carry their bucket in the manifest), and a new
-    commit touching other buckets plans an empty slice of work for the
-    filtered tail."""
-    from dibbs_ecr_refiner_spark.lake.stream_source import LakeCdcStreamReader
-
-    root = str(tmp_path / "t")
-    table = LakeTable(spark, root, num_buckets=8)
-    table.merge(_delta(spark, [(f"c{i}", 0, f"t{i}", i + 1, False) for i in range(40)]), "b0")
-
-    r_all = LakeCdcStreamReader({"path": root})
-    r_pruned = LakeCdcStreamReader({"path": root, "convid": "c7"})
-    span = ({"version": 0}, {"version": table._current_version()})
-    n_all = len(r_all.partitions(*span))
-    n_pruned = len(r_pruned.partitions(*span))
-    assert n_pruned < n_all, (n_pruned, n_all)
-    found = set()
-    for p in r_pruned.partitions(*span):
-        for batch in r_pruned.read(p):
-            if batch.num_rows:
-                found.update(batch.column("conv_id").to_pylist())
-    assert "c7" in found
-
-    # an incremental span that only touched OTHER buckets plans the empty
-    # sentinel — the filtered tail does zero Arrow scans for it
-    v1 = table._current_version()
-    bucket_of_c7 = table.bucket_of("c7")
-    other = next(f"x{i}" for i in range(100) if table.bucket_of(f"x{i}") != bucket_of_c7)
-    table.merge(_delta(spark, [(other, 0, "y", 500, False)]), "b1", mode="mor")
-    parts = r_pruned.partitions({"version": v1}, {"version": table._current_version()})
-    assert len(parts) == 1 and parts[0].path is None
 
 
 def test_bronze_to_silver_crash_between_merge_and_checkpoint_ack(spark, tmp_path):
